@@ -78,9 +78,8 @@ def _entity_sub(m: re.Match) -> str:
 
 # ------------------------------------------------------- triple grammar
 # OpenIE-style predicate vocabulary; longest-first so the alternation prefers
-# multi-word predicates. Must stay valid in BOTH Python `re` and Java regex —
-# the triple stage runs JVM-side via split/regexp_extract (whole-stage
-# codegen), while the oracle runs the same pattern through `re`.
+# multi-word predicates. Must stay valid in BOTH Python `re` and RE2 — the
+# oracle compiles TRIPLE_REGEX, the Spark kernel runs TRIPLE_REGEX_RE2.
 PREDICATES = [
     "is headquartered in",
     "is located in",
@@ -97,19 +96,15 @@ PREDICATES = [
 ]
 _PRED_ALT = "|".join(sorted(PREDICATES, key=len, reverse=True))
 
-# Sentence boundary: split after ./!/? followed by whitespace, or at line
-# breaks. One pattern, used by BOTH the oracle (`re.split`) and the Spark
-# stage (`F.split`, java.util.regex) — lookbehind semantics are identical.
+# Sentence boundary: split after ./!/? followed by whitespace (Unicode \s),
+# or at line breaks. The oracle's `re.split` pattern; the Spark kernel runs
+# its lookbehind-free RE2 rewrite (_ARROW_SENT_NORM below).
 SENT_SPLIT_REGEX = r"(?<=[.!?])\s+|\n+"
 _RE_SENT_SPLIT = re.compile(SENT_SPLIT_REGEX)
 
 # subj PRED obj. — non-greedy leftmost predicate, optional trailing period.
 TRIPLE_REGEX = rf"^(.+?) ({_PRED_ALT}) (.+?)\.?$"
 _RE_TRIPLE = re.compile(TRIPLE_REGEX)
-
-# Leftmost space-delimited predicate — the single-scan variant the Spark
-# stage uses (one regexp_extract + split instead of three full matches).
-PRED_SCAN_REGEX = rf" ({_PRED_ALT}) "
 
 # ----------------------------------------------- Arrow/RE2 fast-path twins
 # The vectorized path offloads the regex passes that dominate its CPU to
@@ -184,17 +179,16 @@ def extract_text_str(html: bytes | str | None) -> str | None:
 
 
 def split_sentences(text: str | None) -> list[str]:
-    """Sentence split shared by oracle and tests; the Spark stage uses the
-    identical SENT_SPLIT_REGEX via F.split (JVM regex). Empty fragments are
-    dropped on both sides before sentence numbering."""
+    """Oracle sentence split; the Spark kernel's twin is arrow_sentences.
+    Empty fragments are dropped on both sides before sentence numbering."""
     if not text:
         return []
     return [s for s in _RE_SENT_SPLIT.split(text) if s]
 
 
 def parse_triple(sentence: str) -> tuple[str, str, str] | None:
-    """Oracle-side (subj, pred, obj) parse; Spark uses TRIPLE_REGEX via
-    regexp_extract with identical semantics."""
+    """Oracle-side (subj, pred, obj) parse; the Spark kernel matches the
+    same grammar through TRIPLE_REGEX_RE2."""
     m = _RE_TRIPLE.match(sentence)
     if not m:
         return None

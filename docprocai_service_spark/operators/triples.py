@@ -3,18 +3,20 @@
 The reference does this shape as a per-document Python loop producing many
 segment rows from one document (UDTF analog,
 reference: fileextractlib/PdfProcessor.py:43-61 and the sessionized scan at
-fileextractlib/VideoProcessor.py:92-174). Here the whole stage is **pure JVM
-expressions** — split / filter / posexplode / regexp_extract / sha2 — so it
-runs inside whole-stage codegen with zero Python in the hot path. That is a
-deliberate strengthening of the input-hint's "vectorized UDFs" floor: the
-fastest UDF is the one you didn't write.
+fileextractlib/VideoProcessor.py:92-174). Here one vectorized Arrow/RE2
+kernel (_parse_batch) splits and parses a whole batch of page texts; both
+entry points call it, so every execution path — lazy, store-mode, resume,
+incremental — yields the same triples:
 
-Patterns (SENT_SPLIT_REGEX, TRIPLE_REGEX) are shared constants with the
-pure-Python oracle (functions/text.py), keeping Java/Python regex semantics
-aligned; tests assert exact triple equality on the synthetic corpus.
+  * fused_triples_stage(pages): extract + parse in one mapInPandas pass;
+  * triples_stage(extracted): parse of the materialized extracted text.
 
-Scale notes: narrow stage (no shuffle); explode fan-out is ~#sentences per
-page which is bounded; deterministic mention ids are sha256 of
+The RE2 patterns are proven twins of the pure-Python oracle's compiled
+SENT_SPLIT_REGEX / TRIPLE_REGEX (functions/text.py); tests assert exact
+triple equality on the synthetic corpus and on adversarial sentences.
+
+Scale notes: narrow stage (no shuffle); fan-out is ~#sentences per page,
+which is bounded; deterministic mention ids are sha256 of
 (url, warc_ts, sent_no, role, surface) — never UUIDs (SURVEY.md §2.8), so
 re-runs are idempotent and resumable.
 """
@@ -25,157 +27,104 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import PRED_SCAN_REGEX, SENT_SPLIT_REGEX
+from ..functions.text import TRIPLE_REGEX_RE2, arrow_sentences, extract_text_arrow
 
 TRIPLES_SCHEMA = (
     "subj string, pred string, obj string, url string, warc_ts timestamp, sent_no int"
 )
 
+_EMPTY = {
+    "subj": pd.Series(dtype="object"),
+    "pred": pd.Series(dtype="object"),
+    "obj": pd.Series(dtype="object"),
+    "url": pd.Series(dtype="object"),
+    "warc_ts": pd.Series(dtype="datetime64[us]"),
+    "sent_no": pd.Series(dtype="int32"),
+}
 
-def sentences_stage(extracted: DataFrame) -> DataFrame:
-    """extracted_text → one row per (url, warc_ts, sent_no, sentence).
 
-    Only lang='en' rows enter (dispatch analog of
-    reference: fileextractlib/DocumentProcessor.py:25-30); empty fragments are
-    dropped BEFORE numbering so sent_no matches the oracle.
+def _parse_batch(text: pa.Array, url: np.ndarray, warc_ts: np.ndarray) -> pd.DataFrame:
+    """The one triple parser: a batch of page texts (NULL = no text) plus
+    their keys → one row per parsed sentence.
 
-    NULL-text pages need no explicit filter: split(NULL)→NULL and
-    posexplode(NULL) emits zero rows. An isNotNull(text) predicate here would
-    be pushed by Catalyst below the extract projection, substituting — and
-    thus evaluating — the Arrow extract UDF a second time per page (observed
-    as two ArrowEvalPython nodes in the plan; tests/test_plans.py pins one).
+    Sentence split + triple match stay in Arrow end to end, vectorized
+    across the whole batch in native RE2: the twins are byte-identical to the oracle's Python patterns (proofs in
+    functions/text.py; parity fuzz-pinned by tests/test_arrow_parity.py and
+    tests/test_fuzz_parity.py). The parse is the one-shot anchored
+    TRIPLE_REGEX_RE2 — the exact oracle semantic, whose `.+?` groups also
+    guarantee non-empty subj/obj.
     """
-    sents = F.filter(
-        F.split(F.col("text"), SENT_SPLIT_REGEX),
-        lambda x: x != F.lit(""),
-    )
-    return (
-        extracted.filter(F.col("lang") == "en")
-        .select("url", "warc_ts", F.posexplode(sents).alias("sent_no", "sentence"))
+    sents, doc_idx, sent_no = arrow_sentences(text)
+    if not len(sents):
+        return pd.DataFrame(_EMPTY)
+    m = pc.extract_regex(sents, pattern=TRIPLE_REGEX_RE2)
+    keep = pc.is_valid(m).to_numpy(zero_copy_only=False)
+    mk = pc.filter(m, pa.array(keep))
+    idx = doc_idx[keep]
+    return pd.DataFrame(
+        {
+            "subj": pc.struct_field(mk, "s").to_pandas().to_numpy(),
+            "pred": pc.struct_field(mk, "p").to_pandas().to_numpy(),
+            "obj": pc.struct_field(mk, "o").to_pandas().to_numpy(),
+            "url": url[idx],
+            "warc_ts": warc_ts[idx],
+            "sent_no": sent_no[keep].astype("int32"),
+        }
     )
 
 
 def triples_stage(extracted: DataFrame) -> DataFrame:
     """extracted_text → triples(subj, pred, obj, url, warc_ts, sent_no).
 
-    One regex match per sentence (leftmost ' pred ' occurrence), then a
-    2-limit split on the matched predicate — semantically identical to
-    matching TRIPLE_REGEX three times but ~3× cheaper, and the regex engine
-    only scans each sentence once. Exactness vs the oracle is asserted by
-    tests/test_triples.py on every corpus shape.
+    The store-mode and incremental parse: the materialized text goes through
+    the same kernel as fused_triples_stage. Only lang='en' rows enter
+    (dispatch analog of reference: fileextractlib/DocumentProcessor.py:25-30);
+    NULL-text pages yield no sentences inside the kernel.
+
+    No JVM-side isNotNull(text) filter: Catalyst would push it below the
+    extract projection, substituting — and thus evaluating — the Arrow
+    extract UDF a second time per page (tests/test_plans.py pins one
+    ArrowEvalPython).
     """
-    s = sentences_stage(extracted)
-    # The subj/obj carve-out is pure string arithmetic, NOT a dynamic split:
-    # split(sentence, concat(' ', pred, ' ')) compiles a regex PER ROW
-    # (UTF8String.split → Pattern.compile), an allocation storm that showed up
-    # as executor threads pinned in Pattern.compile + GC collapse at high
-    # thread counts. instr/substring are regex-free; the leftmost PRED_SCAN
-    # match at position p guarantees instr(sentence, ' pred ') == p (no
-    # earlier occurrence of any predicate exists, or the regex would have
-    # matched there), so the rewrite is exactly the 2-limit split.
-    parsed = (
-        s.withColumn("pred", F.regexp_extract("sentence", PRED_SCAN_REGEX, 1))
-        .filter(F.col("pred") != "")
-        .withColumn("__pos", F.expr("instr(sentence, concat(' ', pred, ' '))"))
-        .select(
-            F.expr("substring(sentence, 1, __pos - 1)").alias("subj"),
-            "pred",
-            # strip ONE trailing '.' only when a character precedes it — the
-            # oracle's `(.+?)\.?$` keeps obj="." for a bare-dot remainder
-            # (fuzz-found divergence, tests/test_fuzz_parity.py)
-            F.regexp_replace(
-                F.expr("substring(sentence, __pos + length(pred) + 2)"), r"(?<=.)\.$", ""
-            ).alias("obj"),
-            "url",
-            "warc_ts",
-            "sent_no",
-        )
-        .filter((F.col("subj") != "") & (F.col("obj") != ""))
+
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _parse_batch(
+                pa.Array.from_pandas(pdf["text"], type=pa.string()),
+                pdf["url"].to_numpy(),
+                pdf["warc_ts"].to_numpy(),
+            )
+
+    return (
+        extracted.filter(F.col("lang") == "en")
+        .select("url", "warc_ts", "text")
+        .mapInPandas(parse, schema=TRIPLES_SCHEMA)
     )
-    return parsed
 
 
 def fused_triples_stage(pages: DataFrame) -> DataFrame:
-    """web_pages → triples in ONE mapInPandas pass: extract + sentence split +
-    triple parse all inside the Arrow batch, output-identical to
-    triples_stage(extract_stage(pages)) (pinned by tests).
-
-    Why this exists alongside the pure-JVM parse: the JVM string path's CPU
-    time INFLATES with executor-thread count (shared-heap allocation pressure
-    — measured 4× more CPU per page at 16 threads than at 4), capping N→4N
-    scaling around 0.4-0.6. Python workers are separate PROCESSES with
-    private heaps, so the fused path scales near-linearly (measured 0.9
-    efficiency 2→8 cores on the same corpus); it also halves Arrow traffic
-    (html crosses once; extracted text never does). The JVM path stays the
-    better choice at very low parallelism (fewer total CPU cycles); the
-    pipeline defaults to fused, matching the input-hint's
-    'vectorized pandas/Arrow UDFs throughout'.
-
-    The regex passes run through RE2/pyarrow twins of the oracle's compiled
-    patterns where the twin is provably equivalent (functions/text.py
-    documents each proof: \\s and \\b rewritten as explicit verified
-    classes, the sentence lookbehind as normalize-then-split), with the
-    pandas head reusing the oracle's own compiled objects — byte-identity
-    per url is pinned by the parity fuzz suites. The triple parse is the
-    one-shot anchored TRIPLE_REGEX_RE2 — the EXACT oracle semantic
-    (reference_impl matches the same grammar through Python re).
-    The JVM path's scan+carve agrees on every tested corpus but can diverge
-    on a pathological sentence whose leftmost predicate has an empty object
-    while a later predicate would parse (regex backtracks; the carve drops
-    the row) — the fused path is the normative one.
+    """web_pages → triples in ONE mapInPandas pass: extract + the
+    triples_stage kernel inside the Arrow batch, so html crosses the Python
+    boundary once and the extracted text never does. Output-identical to
+    triples_stage(extract_stage(pages)) (pinned by tests); the lazy
+    pipeline and every kg_* query use it.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..functions.text import (
-        TRIPLE_REGEX_RE2,
-        arrow_sentences,
-        extract_text_arrow,
-    )
-
-    empty = {
-        "subj": pd.Series(dtype="object"),
-        "pred": pd.Series(dtype="object"),
-        "obj": pd.Series(dtype="object"),
-        "url": pd.Series(dtype="object"),
-        "warc_ts": pd.Series(dtype="datetime64[us]"),
-        "sent_no": pd.Series(dtype="int32"),
-    }
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf[pdf["lang"] == "en"]
             if not len(pdf):
-                yield pd.DataFrame(empty)
+                yield pd.DataFrame(_EMPTY)
                 continue
-            # Extract + sentence split + triple match stay in Arrow end to
-            # end (r7, guide §4.2: batch work through vectorized native
-            # kernels): the RE2 twins are byte-identical to the Python
-            # patterns (proofs in functions/text.py; parity fuzz-pinned by
-            # tests/test_arrow_parity.py). Measured on a 5.4k-page
-            # corpus-shaped batch: split 0.33→0.08 s, triple match
-            # 0.50→0.19 s, whitespace tail 0.53→0.20 s vs the pandas path.
-            text = extract_text_arrow(pdf["html"])
-            sents, doc_idx, sent_no = arrow_sentences(text)
-            if not len(sents):
-                yield pd.DataFrame(empty)
-                continue
-            m = pc.extract_regex(sents, pattern=TRIPLE_REGEX_RE2)
-            keep = pc.is_valid(m).to_numpy(zero_copy_only=False)
-            mk = pc.filter(m, pa.array(keep))
-            idx = doc_idx[keep]
-            yield pd.DataFrame(
-                {
-                    "subj": pc.struct_field(mk, "s").to_pandas().to_numpy(),
-                    "pred": pc.struct_field(mk, "p").to_pandas().to_numpy(),
-                    "obj": pc.struct_field(mk, "o").to_pandas().to_numpy(),
-                    "url": pdf["url"].to_numpy()[idx],
-                    "warc_ts": pdf["warc_ts"].to_numpy()[idx],
-                    "sent_no": sent_no[keep].astype("int32"),
-                }
+            yield _parse_batch(
+                extract_text_arrow(pdf["html"]),
+                pdf["url"].to_numpy(),
+                pdf["warc_ts"].to_numpy(),
             )
 
     # lang pushdown happens JVM-side so non-English html never crosses Arrow

@@ -202,8 +202,8 @@ def run_pipeline(
 
     extracted = run_stage("extracted", lambda: extract_stage(pages), ["url", "warc_ts"])
     # Store mode parses the MATERIALIZED extracted stage (resume ledger reuse);
-    # no-store mode uses the fused single-pass Arrow path — same output
-    # (tests pin equality), better N→4N scaling (see fused_triples_stage).
+    # no-store mode fuses extract into the parse so html crosses Arrow once.
+    # Both run the same parse kernel (operators/triples.py).
     def make_triples() -> DataFrame:
         if store is not None:
             return triples_stage(extracted)

@@ -57,6 +57,12 @@ def main() -> None:
             print(t, "copied")
             continue
         cols = [c[0] for c in con.execute(f"DESCRIBE SELECT * FROM '{p}'").fetchall()]
+        # a key at or above its stride would collide with the next copy's
+        # keys, silently merging universes and corrupting join fan-out
+        for c, off in OFFSETS.get(t, {}).items():
+            hi = con.execute(f"SELECT max({c}) FROM '{p}'").fetchone()[0]
+            if hi is not None and hi >= off:
+                raise ValueError(f"{t}.{c}: max key {hi} >= stride {off}")
         parts = []
         for i in range(FACTOR):
             sel = []

@@ -1,12 +1,12 @@
-"""Property tests: the two triple-parse implementations (JVM codegen regex vs
-Python fused regex) and the two extraction implementations (scalar oracle vs
-vectorized pandas) must agree on ADVERSARIAL inputs, not just the corpus —
-different regex engines (java.util.regex vs re) are the real divergence risk.
+"""Property tests on ADVERSARIAL inputs, not just the corpus: the two
+extraction implementations (scalar oracle vs vectorized pandas/RE2) and the
+one Arrow/RE2 triple kernel must match the pure-Python oracle — different
+regex engines (RE2 vs re: ASCII vs Unicode \\s, no lookbehind) are the real
+divergence risk.
 """
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -40,11 +40,10 @@ def test_extract_scalar_equals_vectorized(html):
     assert scalar == vec
 
 
-@pytest.fixture(scope="module")
-def fuzz_sentences():
+def adversarial_sentences() -> list[str]:
     """One deterministic batch of adversarial sentences for the Spark-level
-    cross-engine comparison (hypothesis drives the pure-Python side; the JVM
-    comparison batches everything into two Spark jobs)."""
+    comparisons (hypothesis drives the pure-Python side; the Spark side
+    batches everything into a few jobs)."""
     import random
 
     rnd = random.Random(1234)
@@ -62,38 +61,62 @@ def fuzz_sentences():
         "a is located in b", "a is located in", "x employs y employs z.",
         "a owns b. c owns d", "..", "a  owns  b",
     ]
+    # Unicode whitespace the oracle's \s splits on after a period, and a
+    # \u2028 before the trailing period: an engine whose \s is ASCII-only, or
+    # whose `.` skips line terminators, splits or strips these differently.
+    sents += [
+        "acme owns corp.\xa0x acquired y.",
+        "a owns b.\x85c founded d.",
+        "acme owns corp.\u2003beta sued gamma.",
+        "acme owns corp \u2028.",
+    ]
     return sents
 
 
-def test_jvm_triple_parse_equals_python_on_adversarial(spark, fuzz_sentences):
-    """triples_stage's JVM scan+carve vs the fused path's anchored regex vs
-    the scalar oracle, on adversarial sentences embedded in real pages."""
+def _page_html(sentence: str) -> bytes:
+    return f"<html><body><main><p>{sentence}</p></main></body></html>".encode()
+
+
+def adversarial_pages(spark, sentences):
+    """One English page per sentence, keyed u0000, u0001, …"""
     import datetime
 
-    from docprocai_service_spark.operators.extract import extract_stage
-    from docprocai_service_spark.operators.triples import fused_triples_stage, triples_stage
-
-    rows = []
-    for i, s in enumerate(fuzz_sentences):
-        html = f"<html><body><main><p>{s}</p></main></body></html>".encode()
-        rows.append((f"u{i:04d}", datetime.datetime(2024, 1, 1), html, None, "en"))
-    pages = spark.createDataFrame(
+    rows = [
+        (f"u{i:04d}", datetime.datetime(2024, 1, 1), _page_html(s), None, "en")
+        for i, s in enumerate(sentences)
+    ]
+    return spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
     ).localCheckpoint()
-    cols = ["subj", "pred", "obj", "url", "sent_no"]
-    staged = sorted(map(tuple, triples_stage(extract_stage(pages)).select(*cols).collect()))
-    fused = sorted(map(tuple, fused_triples_stage(pages).select(*cols).collect()))
-    # scalar oracle
+
+
+def oracle_triples(sentences) -> list[tuple]:
+    """Scalar-oracle (subj, pred, obj, url, sent_no) rows, sorted."""
     want = []
-    for i, s in enumerate(fuzz_sentences):
-        text = extract_text_str(f"<html><body><main><p>{s}</p></main></body></html>".encode())
-        for sent_no, sent in enumerate(split_sentences(text)):
+    for i, s in enumerate(sentences):
+        for sent_no, sent in enumerate(split_sentences(extract_text_str(_page_html(s)))):
             t = parse_triple(sent)
             if t and t[0] and t[2]:
                 want.append((t[0], t[1], t[2], f"u{i:04d}", sent_no))
-    want = sorted(want)
+    return sorted(want)
+
+
+def test_jvm_triple_parse_equals_python_on_adversarial(spark):
+    """Both triple entry points vs the scalar oracle on adversarial sentences
+    embedded in real pages. They share one parse kernel, so this checks the
+    two extract paths feeding it: the fused in-batch extract and the
+    extract_stage UDF whose text triples_stage parses."""
+    from docprocai_service_spark.operators.extract import extract_stage
+    from docprocai_service_spark.operators.triples import fused_triples_stage, triples_stage
+
+    sentences = adversarial_sentences()
+    pages = adversarial_pages(spark, sentences)
+    cols = ["subj", "pred", "obj", "url", "sent_no"]
+    staged = sorted(map(tuple, triples_stage(extract_stage(pages)).select(*cols).collect()))
+    fused = sorted(map(tuple, fused_triples_stage(pages).select(*cols).collect()))
+    want = oracle_triples(sentences)
     assert fused == want, "fused path diverges from the scalar oracle"
-    assert staged == want, "JVM path diverges from the scalar oracle"
+    assert staged == want, "extract_stage + triples_stage diverges from the scalar oracle"
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,9 @@ import pytest as _pytest  # noqa: F401  (fixtures come from conftest)
 
 
 def test_fused_equals_staged_triples(spark, spark_corpus):
-    """fused mapInPandas path == extract-UDF + JVM-parse path, row for row."""
+    """Lazy-vs-store convergence pin: the fused mapInPandas path (lazy
+    pipeline) == extract-UDF + triples_stage (store mode, incremental), row
+    for row."""
     from docprocai_service_spark.operators.extract import extract_stage
     from docprocai_service_spark.operators.triples import fused_triples_stage, triples_stage
 
