@@ -989,8 +989,7 @@ def kg_edges_docs(spark, sf_dir):
     exact-name equality (no distinct-name pair reaches Jaccard 0.7), which
     is what lets the oracle mirror it as min(entity_id) per name — the LSH
     mechanics themselves are oracle-checked separately
-    (minhash_near_dup_docs / near_dup_groups_docs). Bucket column omitted
-    (Spark-internal xxhash64 has no DuckDB twin), matching kg_edges."""
+    (minhash_near_dup_docs / near_dup_groups_docs)."""
     from docprocai_service_spark.operators.canonicalize import canonicalize_entities
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
@@ -1001,9 +1000,7 @@ def kg_edges_docs(spark, sf_dir):
         F.max_by("alias", F.length("alias")).alias("name")
     )
     canon = canonicalize_entities(names, threshold=0.7)
-    return edges_table(resolve_entities(t, alias, canon)).select(
-        "src_entity", "dst_entity", "pred", "weight"
-    )
+    return edges_table(resolve_entities(t, alias, canon))
 
 
 def kg_pagerank_docs(spark, sf_dir):
@@ -1150,11 +1147,11 @@ def kg_components_docs(spark, sf_dir):
 
 def kg_neighborhood_docs(spark, sf_dir):
     """The partition-pruned POINT-QUERY surface, oracle-checked end-to-end:
-    construct the KG edges, materialize them bucket(src_entity)-partitioned
-    (the pipeline's real layout), then out_neighborhood from two canonical
-    seeds (E000 'beta group', E103 'acme 3') at hops=2 — per hop the scan's
-    PartitionFilters carry the frontier's bucket set, and on this corpus
-    hop 2 exercises the empty-frontier early exit (objects never re-appear
+    construct the KG edges, materialize them in the store's bucket(src_entity)
+    layout (sources/manifest.write_bucketed), then out_neighborhood from two
+    canonical seeds (E000 'beta group', E103 'acme 3') at hops=2 — per hop
+    the scan's PartitionFilters carry the frontier's bucket set, and on this
+    corpus hop 2 exercises the empty-frontier early exit (objects never re-appear
     as subjects). Oracle = chained-join BFS with the same expand-once
     semantics."""
     import os
@@ -1167,6 +1164,7 @@ def kg_neighborhood_docs(spark, sf_dir):
         resolve_entities,
     )
     from docprocai_service_spark.operators.triples import fused_triples_stage
+    from docprocai_service_spark.sources.manifest import write_bucketed
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
@@ -1181,7 +1179,7 @@ def kg_neighborhood_docs(spark, sf_dir):
     tmpdir = tempfile.mkdtemp(prefix="spark_graft_kg_nbhd_")
     try:
         path = os.path.join(tmpdir, "edges")
-        edges.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        write_bucketed(edges, path, "src_entity")
         return out_neighborhood(spark, path, ["E000", "E103"], hops=2).localCheckpoint()
     finally:
         import shutil
@@ -1192,8 +1190,7 @@ def kg_neighborhood_docs(spark, sf_dir):
 def kg_entities_docs(spark, sf_dir):
     """Canonical entity registry (materialize's second output): id = MIN
     member id, canonical_name = that member's name, member_count — order-free
-    reductions, oracle-checked (arg_min in DuckDB). Bucket omitted as in
-    kg_edges_docs."""
+    reductions, oracle-checked (arg_min in DuckDB)."""
     from docprocai_service_spark.operators.canonicalize import canonicalize_entities
     from docprocai_service_spark.operators.materialize import entities_table
 
@@ -1202,7 +1199,7 @@ def kg_entities_docs(spark, sf_dir):
         F.max_by("alias", F.length("alias")).alias("name")
     )
     canon = canonicalize_entities(names, threshold=0.7)
-    return entities_table(alias, canon).select("entity_id", "canonical_name", "member_count")
+    return entities_table(alias, canon)
 
 
 # Retired in round 5 (VERDICT r4 #5): the rows-only driver-corpus trio

@@ -11,9 +11,12 @@ against the canon mapping — the 100 TB triple stream is never shuffled until
 the final groupBy(src, dst, pred), whose keys are entity ids (salting for the
 head-entity skew is inherited from AQE + the bucketed layout).
 
-Output layout: partitioned by bucket(NUM_BUCKETS, entity hash) — co-locates
-each entity's edges for downstream neighborhood queries and bounds file count
-at web scale (a raw partitionBy(entity) would create 10⁸ directories).
+Output layout: `edges_table` and `entities_table` return exactly the F3
+schemas; the store writes the edges stage bucketed by src_entity
+(sources/manifest.py owns that layout: 16 buckets of xxhash64). Bucketing
+co-locates each entity's edges for the neighborhood point queries below and
+bounds file count at web scale (a raw partitionBy(entity) would create 10⁸
+directories).
 """
 
 from __future__ import annotations
@@ -25,14 +28,11 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.manifest import scan_buckets, write_bucketed
 from .linking import reduce_alias_dict
 
-NUM_BUCKETS = 16
-
-
-def entity_bucket(col: Column, n: int = NUM_BUCKETS) -> Column:
-    """Deterministic bucket id for an entity key (xxhash64 — stable across runs)."""
-    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+#: Key of the edges table; the store buckets it by the first (src_entity).
+EDGE_KEYS = ["src_entity", "dst_entity", "pred"]
 
 
 def resolve_entities(triples: DataFrame, alias_dict: DataFrame, canon_map: DataFrame) -> DataFrame:
@@ -78,11 +78,7 @@ def resolve_entities(triples: DataFrame, alias_dict: DataFrame, canon_map: DataF
 
 def edges_table(resolved: DataFrame) -> DataFrame:
     """Aggregate resolved triples into weighted canonical edges."""
-    return (
-        resolved.groupBy("src_entity", "dst_entity", "pred")
-        .agg(F.count("*").alias("weight"))
-        .withColumn("bucket", entity_bucket(F.col("src_entity")))
-    )
+    return resolved.groupBy(*EDGE_KEYS).agg(F.count("*").alias("weight"))
 
 
 def entities_table(alias_dict: DataFrame, canon_map: DataFrame) -> DataFrame:
@@ -92,13 +88,9 @@ def entities_table(alias_dict: DataFrame, canon_map: DataFrame) -> DataFrame:
         F.max_by("alias", F.length("alias")).alias("name")
     )
     members = canon_map.join(names, "entity_id", "left")
-    return (
-        members.groupBy(F.col("canon_id").alias("entity_id"))
-        .agg(
-            F.min_by("name", F.col("entity_id")).alias("canonical_name"),
-            F.count("*").alias("member_count"),
-        )
-        .withColumn("bucket", entity_bucket(F.col("entity_id")))
+    return members.groupBy(F.col("canon_id").alias("entity_id")).agg(
+        F.min_by("name", F.col("entity_id")).alias("canonical_name"),
+        F.count("*").alias("member_count"),
     )
 
 
@@ -107,7 +99,6 @@ def out_neighborhood(
     edges_path: str,
     entity_ids: list[str],
     hops: int = 1,
-    n_buckets: int = NUM_BUCKETS,
     max_frontier: int = 100_000,
 ) -> DataFrame:
     """Point query over the materialized bucketed edges table: the out-edge
@@ -122,9 +113,10 @@ def out_neighborhood(
     khop_reach/graph ops instead; this loop is deliberately driver-paced).
 
     Directionality contract: this prunes on bucket(src_entity), the layout
-    the pipeline's edges stage writes. For reverse lookups ("who points at
-    X?") materialize the dst-bucketed twin once with `write_edges_by_dst`
-    and query it with `in_neighborhood` — same IO bound, opposite walk.
+    of the store's edges stage on every path that writes it. For reverse
+    lookups ("who points at X?") materialize the dst-bucketed twin once with
+    `write_edges_by_dst` and query it with `in_neighborhood` — same IO
+    bound, opposite walk.
     max_frontier bounds the driver collect; exceeding it raises instead of
     silently degrading.
 
@@ -136,23 +128,18 @@ def out_neighborhood(
     """
     return _bfs_neighborhood(
         spark, edges_path, entity_ids, "src_entity", "dst_entity",
-        hops, n_buckets, max_frontier,
+        hops, max_frontier,
     )
 
 
-def write_edges_by_dst(edges: DataFrame, path: str, n_buckets: int = NUM_BUCKETS) -> None:
+def write_edges_by_dst(edges: DataFrame, path: str) -> None:
     """Materialize the dst-bucketed twin of the edges table — one extra
     shuffle-free pass at write time buys partition-pruned REVERSE point
     lookups forever after (the classic both-directions layout for adjacency
-    at scale: same rows, second sort/partition key). `edges` is the output
-    of `edges_table` (its `bucket` column is src-keyed and recomputed here)."""
-    (
-        edges.drop("bucket")
-        .withColumn("bucket", entity_bucket(F.col("dst_entity"), n_buckets))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
+    at scale: same rows, second sort/partition key). `edges` is an edges
+    table, read from the store or not (a src-keyed bucket column read from
+    disk is replaced)."""
+    write_bucketed(edges, path, "dst_entity")
 
 
 def in_neighborhood(
@@ -160,7 +147,6 @@ def in_neighborhood(
     edges_by_dst_path: str,
     entity_ids: list[str],
     hops: int = 1,
-    n_buckets: int = NUM_BUCKETS,
     max_frontier: int = 100_000,
 ) -> DataFrame:
     """Reverse point query over the dst-bucketed twin (`write_edges_by_dst`):
@@ -170,7 +156,7 @@ def in_neighborhood(
     IN-list second."""
     return _bfs_neighborhood(
         spark, edges_by_dst_path, entity_ids, "dst_entity", "src_entity",
-        hops, n_buckets, max_frontier,
+        hops, max_frontier,
     )
 
 
@@ -181,7 +167,6 @@ def _bfs_neighborhood(
     key_col: str,
     next_col: str,
     hops: int,
-    n_buckets: int,
     max_frontier: int,
 ) -> DataFrame:
     frontier = sorted(set(entity_ids))
@@ -196,7 +181,7 @@ def _bfs_neighborhood(
                 "use khop_reach/graph ops for bulk neighborhoods"
             )
         hop_edges = (
-            pruned_edge_scan(spark, path, frontier, n_buckets, key_col=key_col)
+            pruned_edge_scan(spark, path, frontier, key_col=key_col)
             .withColumn("hop", F.lit(hop))
             .localCheckpoint()
         )
@@ -219,31 +204,17 @@ def pruned_edge_scan(
     spark,
     edges_path: str,
     frontier: list[str],
-    n_buckets: int = NUM_BUCKETS,
     key_col: str = "src_entity",
 ) -> DataFrame:
     """One frontier hop's scan: bucket partition filter FIRST (prunes the
     parquet listing to the dirs that can hold the frontier's key entities —
     plan-asserted in tests/test_plans.py), then the exact key IN-list.
-    Bucket ids come from a tiny local DataFrame so the JVM xxhash64 that
-    wrote the layout is the one that prunes it (a Python reimplementation
-    would silently drift). `key_col` must be the column the layout at
-    `edges_path` was bucketed on (src for the pipeline's edges stage, dst
-    for the `write_edges_by_dst` twin)."""
-    buckets = sorted(
-        {
-            row["b"]
-            for row in spark.createDataFrame(
-                [(e,) for e in frontier], f"{key_col} string"
-            )
-            .select(entity_bucket(F.col(key_col), n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        }
-    )
+    `key_col` must be the column the layout at `edges_path` was bucketed on
+    (src for the store's edges stage, dst for the `write_edges_by_dst`
+    twin)."""
+    probe = spark.createDataFrame([(e,) for e in frontier], f"{key_col} string")
     return (
-        spark.read.parquet(edges_path)
-        .where(F.col("bucket").isin(buckets))
+        scan_buckets(spark, edges_path, probe, key_col)
         .where(F.col(key_col).isin(frontier))
         .select("src_entity", "dst_entity", "pred", "weight")
     )

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.canonicalize import canonicalize_entities
 from ..operators.extract import extract_stage
 from ..operators.linking import link_mentions
-from ..operators.materialize import edges_table, entities_table, resolve_entities
+from ..operators.materialize import EDGE_KEYS, edges_table, entities_table, resolve_entities
 from ..operators.triples import fused_triples_stage, mentions_stage, triples_stage
 from ..session import fat_binary_scan
 from ..sources.manifest import StageStore, content_fingerprint
@@ -143,11 +143,6 @@ def run_pipeline(
     # (its _SUCCESS+manifest from the previous run would otherwise look done).
     _STAGE_ORDER = ["extracted", "triples", "mentions", "linked", "canon_map", "edges", "entities"]
 
-    # Entity-keyed outputs are partitioned by their bucket column (see
-    # operators/materialize.py): co-locates each entity's edges for
-    # neighborhood reads and lets downstream merges prune partitions.
-    _PARTITION_BY = {"edges": ["bucket"], "entities": ["bucket"]}
-
     def run_stage(name: str, make, key_cols: list[str], rows_in: int = -1) -> DataFrame:
         t0 = time.time()
         if store is not None:
@@ -174,9 +169,13 @@ def run_pipeline(
                     # readback downstream keeps the 4096 default (ADVICE r4:
                     # a job-wide scope taxed narrow scans 15-30%).
                     with fat_binary_scan(spark):
-                        df = store.write(name, make(), partition_by=_PARTITION_BY.get(name), meta=meta)
+                        df = store.write(name, make(), meta=meta)
                 else:
-                    df = store.write(name, make(), partition_by=_PARTITION_BY.get(name), meta=meta)
+                    # edges go into the store's bucketed layout — the one
+                    # incremental_ingest's upsert merges into and the point
+                    # queries prune (sources/manifest.py)
+                    bucket_by = EDGE_KEYS[0] if name == "edges" else None
+                    df = store.write(name, make(), bucket_by=bucket_by, meta=meta)
         else:
             # No store: cache ONLY the multi-consumer stages (triples feeds
             # mentions + edge resolution; canon_map feeds resolution +
@@ -223,7 +222,7 @@ def run_pipeline(
 
     canon_map = run_stage("canon_map", make_canon, ["entity_id"])
     resolved = resolve_entities(triples, alias_dict, canon_map)
-    edges = run_stage("edges", lambda: edges_table(resolved), ["src_entity", "dst_entity", "pred"])
+    edges = run_stage("edges", lambda: edges_table(resolved), EDGE_KEYS)
     entities = run_stage("entities", lambda: entities_table(alias_dict, canon_map), ["entity_id"])
 
     lineage = None

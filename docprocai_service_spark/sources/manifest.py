@@ -13,10 +13,15 @@ service/DocProcAiService.py:639-668) — without per-row state:
   * resume   = anti-join the input's (url, warc_ts) keys against the keys
                already present in the stage output (`todo_keys`), mirroring
                the reference's re-materialization of missing ENQUEUED rows.
-  * idempotent re-runs: stage writes are whole-directory overwrites or
-    key-disjoint appends — the Spark replacement for the reference's
-    delete-then-reinsert per record (service/DocProcAiService.py:102-103)
-    and ON CONFLICT upserts (persistence/SegmentDbConnector.py:101-124).
+  * idempotent re-runs: stage writes are whole-directory overwrites,
+    key-disjoint appends or bucket-scoped upserts — the Spark replacement
+    for the reference's delete-then-reinsert per record
+    (service/DocProcAiService.py:102-103) and ON CONFLICT upserts
+    (persistence/SegmentDbConnector.py:101-124).
+  * one bucketed layout: 16 `__bucket=` dirs of pmod(xxhash64(key), 16),
+    owned here alone (`bucket_of`, `write_bucketed`, `scan_buckets`) and
+    recorded as `n_buckets` in the manifest; a committed stage in any other
+    layout is refused, never migrated.
 
 This is the parquet-with-manifest fallback chosen at milestone M0 (no Iceberg
 runtime jar in the sandbox — SURVEY.md §7); the writer surface is one class so
@@ -30,23 +35,47 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 KEYS = ["url", "warc_ts"]
 
-#: Partition column for the bucketed stage layout. Upserts rewrite only the
-#: buckets an incoming batch touches (dynamic partition overwrite) — at
-#: 100 TB this is the difference between an O(batch) and an O(table) merge.
+#: Partition column of the bucketed stage layout (hidden by `read()`).
+#: Upserts rewrite only the buckets an incoming batch touches (dynamic
+#: partition overwrite) and point reads list only those dirs — at 100 TB
+#: this is the difference between O(batch) and O(table).
 BUCKET_COL = "__bucket"
+#: Bucket count of every bucketed stage (FIXTURES.md F3: bucket(16, src_entity)).
+N_BUCKETS = 16
 
 
-def _bucket_expr(keys: list[str], n_buckets: int):
-    """Deterministic key bucket: pmod(xxhash64(keys), n) — stable across runs
-    and executors, so the same key always lands in the same partition dir."""
-    return F.pmod(
-        F.xxhash64(*[F.col(k).cast("string") for k in keys]), F.lit(n_buckets)
-    ).cast("int")
+def bucket_of(key: str) -> Column:
+    """Bucket id of a key column: pmod(xxhash64(key as string), N_BUCKETS) —
+    stable across runs, executors and key column widths, so the same key
+    always lands in the same partition dir."""
+    return F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(N_BUCKETS)).cast("int")
+
+
+def write_bucketed(df: DataFrame, path: str, key: str) -> None:
+    """Overwrite `path` with `df` in the bucketed layout keyed by `key` (an
+    existing bucket column is replaced)."""
+    (
+        df.withColumn(BUCKET_COL, bucket_of(key))
+        .write.mode("overwrite")
+        .partitionBy(BUCKET_COL)
+        .parquet(path)
+    )
+
+
+def scan_buckets(spark: SparkSession, path: str, on: DataFrame, key: str) -> DataFrame:
+    """Rows of the bucketed layout at `path` lying ONLY in the buckets of
+    `on`'s `key` values. The bucket ids reach the scan as a PARTITION
+    filter, so the parquet listing prunes to ≤ N_BUCKETS touched dirs (a
+    plain read + semi-join scans every bucket). The ids come from the JVM
+    xxhash64 that wrote the layout — a Python reimplementation would
+    silently drift."""
+    hot = [r[0] for r in on.select(bucket_of(key)).distinct().collect()]
+    return spark.read.parquet(path).where(F.col(BUCKET_COL).isin(hot)).drop(BUCKET_COL)
 
 
 def content_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, str]:
@@ -88,9 +117,6 @@ class StageStore:
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self.root, f"{stage}.manifest.json")
 
-    def _bucket_meta_path(self, stage: str) -> str:
-        return os.path.join(self.root, f"{stage}.buckets.json")
-
     # ------------------------------------------------------------- state
     def is_done(self, stage: str) -> bool:
         return os.path.exists(os.path.join(self.path(stage), "_SUCCESS")) and os.path.exists(
@@ -124,26 +150,29 @@ class StageStore:
         self,
         stage: str,
         df: DataFrame,
-        partition_by: list[str] | None = None,
+        bucket_by: str | None = None,
         meta: dict | None = None,
     ) -> DataFrame:
         """Overwrite the stage output; manifest committed only after _SUCCESS.
         Row count comes from an observe() on the write job — metadata-only
-        commit, no rescan. `meta` entries are recorded in the manifest (e.g.
-        the alias-dict fingerprint a canon_map was derived from)."""
-        obs_df, obs = _observed(df)
-        writer = obs_df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(stage))
-        # a plain overwrite replaces any bucketed layout → the sticky modulus
-        # sidecar no longer describes the data on disk
-        if os.path.exists(self._bucket_meta_path(stage)):
-            os.remove(self._bucket_meta_path(stage))
-        self._commit_manifest(
-            stage, rows=int(obs.get["rows"]), partition_by=partition_by or [], meta=meta
-        )
+        commit, no rescan. `bucket_by` writes the bucketed layout keyed by
+        that column (a later `upsert` must lead its keys with it). `meta`
+        entries are recorded in the manifest (e.g. the alias-dict
+        fingerprint a canon_map was derived from)."""
+        self._overwrite(stage, df, bucket_by, meta)
         return self.read(stage)
+
+    def _overwrite(
+        self, stage: str, df: DataFrame, bucket_by: str | None, meta: dict | None = None
+    ) -> None:
+        obs_df, obs = _observed(df)
+        if bucket_by:
+            write_bucketed(obs_df, self.path(stage), bucket_by)
+        else:
+            obs_df.write.mode("overwrite").parquet(self.path(stage))
+        self._commit_manifest(
+            stage, rows=int(obs.get["rows"]), bucketed=bool(bucket_by), meta=meta
+        )
 
     def append_new(self, stage: str, df: DataFrame, keys: list[str] = KEYS) -> DataFrame:
         """Append only rows whose key tuple is not already present (idempotent).
@@ -162,23 +191,25 @@ class StageStore:
             obs_df, obs = _observed(df)
             obs_df.write.mode("overwrite").parquet(self.path(stage))
             rows = int(obs.get["rows"])
-        self._commit_manifest(stage, rows=rows, partition_by=[])
+        self._commit_manifest(stage, rows=rows, bucketed=False)
         return self.read(stage)
 
-    def upsert(
-        self, stage: str, df: DataFrame, keys: list[str] = KEYS, n_buckets: int = 64
-    ) -> DataFrame:
+    def upsert(self, stage: str, df: DataFrame, keys: list[str] = KEYS) -> DataFrame:
         """MERGE semantics: rows whose key tuple already exists are REPLACED by
         the incoming rows; new keys are appended — the reference's ON CONFLICT
         DO UPDATE (persistence/SegmentDbConnector.py:101-124,
         MediaRecordInfoDbConnector.py:26-38), bucket-scoped:
 
-        The stage is laid out partitioned by `__bucket = pmod(xxhash64(keys),
-        n_buckets)`. A merge reads ONLY the buckets the incoming batch touches
-        (partition pruning on an IN-list of ≤ n_buckets ints), anti-joins the
-        replaced keys, and rewrites ONLY those buckets via dynamic partition
-        overwrite — untouched buckets are never read or written, so merge cost
-        is O(touched buckets), not O(table).
+        The stage is laid out bucketed by `keys[0]` (`bucket_of`). Equal key
+        tuples share a bucket, so a merge reads ONLY the buckets the incoming
+        batch touches (partition pruning on an IN-list of ≤ N_BUCKETS ints),
+        anti-joins the replaced keys, and rewrites ONLY those buckets via
+        dynamic partition overwrite — untouched buckets are never read or
+        written, so merge cost is O(touched buckets), not O(table).
+
+        A committed stage in any other layout (no `__bucket=` dirs, or a
+        manifest recording another bucket count) raises ValueError and is
+        left untouched.
 
         Crash contract (no committed row is ever lost):
           * mid-write crash: new files live in a hidden .spark-staging dir;
@@ -190,143 +221,67 @@ class StageStore:
             recounts exactly instead of trusting manifest arithmetic.
           * write-committed-but-manifest-missing crash: adopted on entry
             (_SUCCESS present → re-commit manifest), never rebuilt from the
-            incoming batch alone.
-          * legacy pre-bucketed `.swap` crash window: a completed swap dir
-            (has _SUCCESS) is adopted by finishing the interrupted rename —
-            previously-committed rows survive."""
+            incoming batch alone."""
         target = self.path(stage)
         self._recover(stage)
-        crashed = bool(glob.glob(os.path.join(target, ".spark-staging*")))
-        # A bucketed stage whose modulus is unrecorded (manifest + sidecar
-        # both lost) cannot be merged bucket-scoped: a guessed modulus reads
-        # back the wrong dirs and stale rows survive as duplicates. Route it
-        # through the full-rebucket migration path below (one-time, exact).
-        modulus_known = self._recorded_n_buckets(stage) is not None or not self._is_bucketed(stage)
-        n_b = self._n_buckets(stage, n_buckets)
-        if modulus_known:
-            self._write_bucket_meta(stage, n_b)  # modulus durable before any data write
-        # (unknown modulus: recording the guessed default BEFORE the rebucket
-        # migration completes would let a crashed migration replay as a
-        # bucket-scoped merge under the wrong modulus — record it only after
-        # the swap rename below)
-        dfb = df.withColumn(BUCKET_COL, _bucket_expr(keys, n_b)).persist()
+        if not self.is_done(stage):
+            self._overwrite(stage, df, keys[0])
+            return self.read(stage)
+        self._check_bucketed(stage)
+        crashed = self.has_staging_leak(stage)
+        dfb = df.withColumn(BUCKET_COL, bucket_of(keys[0])).persist()
         try:
-            if self.is_done(stage) and self._is_bucketed(stage) and modulus_known:
-                raw_old = self.spark.read.parquet(target)
-                hot = [r[0] for r in dfb.select(BUCKET_COL).distinct().collect()]
-                old_hot, obs_old = _observed(raw_old.where(F.col(BUCKET_COL).isin(hot)))
-                kept = old_hot.join(dfb.select(*keys).distinct(), keys, "left_anti")
-                merged, obs_out = _observed(kept.unionByName(dfb))
-                (
-                    merged.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(target)
-                )
-                if crashed:
-                    # a previous job died mid-commit: manifest arithmetic is
-                    # untrustworthy once — recount exactly, then clean up.
-                    rows = self.spark.read.parquet(target).count()
-                    for leak in glob.glob(os.path.join(target, ".spark-staging*")):
-                        shutil.rmtree(leak, ignore_errors=True)
-                else:
-                    rows = (
-                        self.manifest(stage)["rows"]
-                        - int(obs_old.get["rows"])
-                        + int(obs_out.get["rows"])
-                    )
-            elif self.is_done(stage):
-                # one-time migration of a legacy unbucketed stage into the
-                # bucketed layout: full merge through an atomic dir swap
-                # (recoverable — see _recover).
-                swap = target + ".swap"
-                shutil.rmtree(swap, ignore_errors=True)
-                old = self.read(stage)
-                kept = old.join(dfb.select(*keys).distinct(), keys, "left_anti").withColumn(
-                    BUCKET_COL, _bucket_expr(keys, n_b)
-                )
-                merged, obs_out = _observed(kept.unionByName(dfb))
-                merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(swap)
-                rows = int(obs_out.get["rows"])
-                self.invalidate(stage)  # manifest+_SUCCESS gone BEFORE the dir swap
-                shutil.rmtree(target)
-                os.rename(swap, target)
-                self._write_bucket_meta(stage, n_b)
+            old_hot, obs_old = _observed(scan_buckets(self.spark, target, dfb, keys[0]))
+            kept = old_hot.join(dfb.select(*keys).distinct(), keys, "left_anti")
+            merged, obs_out = _observed(
+                kept.withColumn(BUCKET_COL, bucket_of(keys[0])).unionByName(dfb)
+            )
+            (
+                merged.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(BUCKET_COL)
+                .parquet(target)
+            )
+            if crashed:
+                # a previous job died mid-commit: manifest arithmetic is
+                # untrustworthy once — recount exactly, then clean up.
+                rows = self.spark.read.parquet(target).count()
+                for leak in glob.glob(os.path.join(target, ".spark-staging*")):
+                    shutil.rmtree(leak, ignore_errors=True)
             else:
-                obs_df, obs = _observed(dfb)
-                obs_df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(target)
-                rows = int(obs.get["rows"])
-            self._commit_manifest(stage, rows=rows, partition_by=[BUCKET_COL], n_buckets=n_b)
+                rows = (
+                    self.manifest(stage)["rows"]
+                    - int(obs_old.get["rows"])
+                    + int(obs_out.get["rows"])
+                )
+            self._commit_manifest(stage, rows=rows, bucketed=True)
         finally:
             dfb.unpersist()
         return self.read(stage)
 
     def _recover(self, stage: str) -> None:
-        """Complete interrupted upserts instead of discarding committed rows."""
+        """Adopt a write job that committed (_SUCCESS present) but lost its
+        manifest commit, instead of discarding committed rows."""
         target = self.path(stage)
-        swap = target + ".swap"
-        if not self.is_done(stage) and os.path.exists(os.path.join(swap, "_SUCCESS")):
-            # crash between invalidate() and the swap rename: the swap dir IS
-            # the complete merged output — finish the rename.
-            shutil.rmtree(target, ignore_errors=True)
-            os.rename(swap, target)
-            self._commit_manifest(
-                stage, rows=self.spark.read.parquet(target).count(),
-                partition_by=[BUCKET_COL] if self._is_bucketed(stage) else [],
-                n_buckets=self._bucket_meta(stage) if self._is_bucketed(stage) else None,
-            )
-        shutil.rmtree(swap, ignore_errors=True)  # incomplete swap: safe to drop
         if not self.is_done(stage) and os.path.exists(os.path.join(target, "_SUCCESS")):
-            # write job committed but manifest commit was interrupted: adopt —
-            # WITH the sticky bucket modulus from the sidecar (re-committing
-            # without it let a later different-default upsert split the layout).
             self._commit_manifest(
                 stage, rows=self.spark.read.parquet(target).count(),
-                partition_by=[BUCKET_COL] if self._is_bucketed(stage) else [],
-                n_buckets=self._bucket_meta(stage) if self._is_bucketed(stage) else None,
+                bucketed=self._is_bucketed(stage),
             )
 
     def _is_bucketed(self, stage: str) -> bool:
         return bool(glob.glob(os.path.join(self.path(stage), f"{BUCKET_COL}=*")))
 
-    def _recorded_n_buckets(self, stage: str) -> int | None:
-        """The stage's durably-recorded bucket modulus, or None if neither
-        the manifest nor the sidecar buckets.json records one."""
-        try:
-            n = self.manifest(stage).get("n_buckets")
-            if n is not None:
-                return int(n)
-        except FileNotFoundError:
-            pass
-        sticky = self._bucket_meta(stage)
-        return int(sticky) if sticky is not None else None
-
-    def _n_buckets(self, stage: str, default: int) -> int:
-        """Bucket count is sticky per stage so a caller changing the default
-        cannot silently split the layout. Source of truth: the manifest,
-        falling back to the sidecar buckets.json — which survives manifest
-        loss (the _recover paths used to re-commit WITHOUT n_buckets, after
-        which a different-default upsert bucketed keys with the wrong modulus
-        and stale rows survived as duplicates)."""
-        recorded = self._recorded_n_buckets(stage)
-        return recorded if recorded is not None else default
-
-    def _bucket_meta(self, stage: str) -> int | None:
-        try:
-            with open(self._bucket_meta_path(stage)) as f:
-                return int(json.load(f)["n_buckets"])
-        except (FileNotFoundError, KeyError, ValueError):
-            return None
-
-    def _write_bucket_meta(self, stage: str, n_buckets: int) -> None:
-        """Sidecar record of the stage's bucket modulus, written BEFORE the
-        data write (atomic tmp+rename): a crash at any later point leaves the
-        modulus recoverable, and a full-directory overwrite of the stage data
-        cannot destroy it (it lives next to the manifest, not in the dir)."""
-        tmp = self._bucket_meta_path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"stage": stage, "n_buckets": n_buckets}, f)
-        os.replace(tmp, self._bucket_meta_path(stage))
+    def _check_bucketed(self, stage: str) -> None:
+        """A committed stage is input from disk: bucket-scoped reads and
+        merges are exact only over this module's layout, so refuse any
+        other before touching it."""
+        n = self.manifest(stage).get("n_buckets")
+        if not self._is_bucketed(stage) or n != N_BUCKETS:
+            raise ValueError(
+                f"stage {stage!r} is not in the {N_BUCKETS}-bucket {BUCKET_COL} layout "
+                f"(manifest n_buckets={n}); invalidate and rewrite it before merging"
+            )
 
     def read(self, stage: str) -> DataFrame:
         df = self.spark.read.parquet(self.path(stage))
@@ -334,40 +289,18 @@ class StageStore:
 
     def read_pruned(self, stage: str, on: DataFrame, keys: list[str]) -> DataFrame:
         """Rows of `stage` lying ONLY in the buckets touched by `on`'s key
-        tuples — a partition-pruned readback for merge paths. `plain read +
-        semi-join` scans the whole table (the semi-join happens after the
-        scan); this filters the partition column first, so the parquet
-        listing prunes to ≤ n_buckets dirs and the read is O(touched
-        buckets), matching upsert's write-side contract."""
-        if not self._is_bucketed(stage):
-            return self.read(stage)
-        n_b = self._recorded_n_buckets(stage)
-        if n_b is None:
-            # Modulus unrecorded (legacy store with a non-default bucket
-            # count whose manifest AND sidecar were both lost): guessing a
-            # modulus here would prune away live rows for touched keys and a
-            # merge would then DROP prior weights instead of summing them
-            # (ADVICE r4). Unpruned read is correct, just slower — and the
-            # next upsert re-records the modulus durably.
-            return self.read(stage)
-        hot = [
-            r[0]
-            for r in on.select(_bucket_expr(keys, n_b).alias("b")).distinct().collect()
-        ]
-        raw = self.spark.read.parquet(self.path(stage))
-        return raw.where(F.col(BUCKET_COL).isin(hot)).drop(BUCKET_COL)
+        tuples — the partition-pruned readback for merge paths, O(touched
+        buckets) like upsert's write side (`scan_buckets`). Raises
+        ValueError on a stage in any other layout."""
+        self._check_bucketed(stage)
+        return scan_buckets(self.spark, self.path(stage), on, keys[0])
 
     def _commit_manifest(
-        self,
-        stage: str,
-        rows: int,
-        partition_by: list[str],
-        n_buckets: int | None = None,
-        meta: dict | None = None,
+        self, stage: str, rows: int, bucketed: bool, meta: dict | None = None
     ) -> None:
-        doc = {"stage": stage, "rows": rows, "partition_by": partition_by}
-        if n_buckets is not None:
-            doc["n_buckets"] = n_buckets
+        doc = {"stage": stage, "rows": rows}
+        if bucketed:
+            doc["n_buckets"] = N_BUCKETS
         if meta:
             doc.update(meta)
         tmp = self._manifest_path(stage) + ".tmp"
@@ -384,7 +317,11 @@ class StageStore:
         return inputs.join(done, keys, "left_anti")
 
     def invalidate(self, stage: str) -> None:
-        """Drop a stage's manifest (test hook for torn-write simulation)."""
+        """Drop a stage's manifest and _SUCCESS marker, so it reads as not
+        done and its next write or upsert replaces it whole. run_pipeline
+        invalidates the stages downstream of a recomputed one;
+        rebuild_edges and refresh_graph_features invalidate before a full
+        replace (tests also use it to simulate a torn write)."""
         p = self._manifest_path(stage)
         if os.path.exists(p):
             os.remove(p)

@@ -16,6 +16,35 @@ def _edges_key(df):
     return sorted(map(tuple, df.select("src_entity", "dst_entity", "pred", "weight").collect()))
 
 
+def _assert_one_store_layout(spark, store):
+    """The layout every path must leave behind: `edges` in ≤16 `__bucket=`
+    dirs and nothing else, `entities` unpartitioned, and a point scan of the
+    edges stage pruned by a real `__bucket` partition filter that returns
+    the same rows as an unpruned filter."""
+    import os
+    import re
+
+    from docprocai_service_spark.operators.materialize import pruned_edge_scan
+
+    def subdirs(stage):
+        return [e.name for e in os.scandir(store.path(stage)) if e.is_dir()]
+
+    edge_dirs = subdirs("edges")
+    assert edge_dirs and all(d.startswith("__bucket=") for d in edge_dirs), edge_dirs
+    assert len(edge_dirs) <= 16
+    assert subdirs("entities") == []
+    src = store.read("edges").first()["src_entity"]
+    scan = pruned_edge_scan(spark, store.path("edges"), [src])
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    filters = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
+    assert "__bucket" in filters, plan
+    cols = ["src_entity", "dst_entity", "pred", "weight"]
+    unpruned = spark.read.parquet(store.path("edges")).where(F.col("src_entity") == src)
+    assert sorted(map(tuple, scan.collect())) == sorted(
+        map(tuple, unpruned.select(*cols).collect())
+    )
+
+
 @pytest.fixture(scope="module")
 def pipe_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("pipe")
@@ -202,6 +231,7 @@ def test_incremental_full_dag_matches_batch(spark, spark_corpus, tmp_path):
     # redelivery of the whole corpus after completion: full no-op
     m3 = incremental_ingest(spark, pages, store, alias_dict=alias)
     assert m3 == {"new_pages": 0}
+    _assert_one_store_layout(spark, store)
 
     full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
     assert _edges_key(store.read("edges")) == _edges_key(full.edges)
@@ -346,7 +376,10 @@ def test_streaming_features_arm_matches_batch_twin(spark, spark_corpus, tmp_path
 def test_incremental_onto_batch_store_bootstraps_ledger(spark, spark_corpus, tmp_path):
     """Incremental ingest onto a store built by a BATCH run must not re-merge
     the batch pages' edge weights (the ledger bootstraps from the committed
-    triples stage before the first micro-batch appends)."""
+    triples stage before the first micro-batch appends), and both paths
+    leave the store in one layout: the micro-batch merges bucket-scoped into
+    the batch-written edges instead of re-laying them out, so point queries
+    stay pruned."""
     from docprocai_service_spark.operators.extract import extract_stage
     from docprocai_service_spark.operators.triples import triples_stage
 
@@ -355,8 +388,10 @@ def test_incremental_onto_batch_store_bootstraps_ledger(spark, spark_corpus, tmp
     b1 = pages.limit(200).localCheckpoint()
     run_pipeline(spark, b1, alias, out_dir=d)  # batch run writes edges, no ledger
     store = StageStore(spark, d)
+    _assert_one_store_layout(spark, store)
     b2 = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
     incremental_ingest(spark, b2, store, alias_dict=alias)
+    _assert_one_store_layout(spark, store)
     full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
     assert _edges_key(store.read("edges")) == _edges_key(full.edges)
     full.triples.unpersist()
@@ -442,11 +477,11 @@ def test_edge_merge_crash_during_upsert_repairs_exactly(spark, spark_corpus, tmp
     real_upsert = StageStore.upsert
     crashed = {"n": 0}
 
-    def crashing_upsert(self, stage, df, keys=None, n_buckets=64):
+    def crashing_upsert(self, stage, df, keys):
         if stage == "edges" and crashed["n"] == 0:
             crashed["n"] += 1
             raise RuntimeError("simulated crash mid-upsert")
-        return real_upsert(self, stage, df, keys=keys, n_buckets=n_buckets)
+        return real_upsert(self, stage, df, keys=keys)
 
     StageStore.upsert = crashing_upsert
     try:
@@ -530,11 +565,11 @@ def test_edge_merge_double_crash_converges_via_rebuild(spark, spark_corpus, tmp_
     real_upsert = StageStore.upsert
     crashes = {"n": 0}
 
-    def crashing_upsert(self, stage, df, keys=None, n_buckets=64):
+    def crashing_upsert(self, stage, df, keys):
         if stage == "edges" and crashes["n"] < 2:
             crashes["n"] += 1
             raise RuntimeError(f"simulated crash #{crashes['n']}")
-        return real_upsert(self, stage, df, keys=keys, n_buckets=n_buckets)
+        return real_upsert(self, stage, df, keys=keys)
 
     StageStore.upsert = crashing_upsert
     try:
@@ -567,11 +602,11 @@ def test_dict_change_crash_mid_refresh_repairs_exactly(spark, spark_corpus, tmp_
     real_write = StageStore.write
     crashed = {"n": 0}
 
-    def crashing_write(self, stage, df, partition_by=None, meta=None):
+    def crashing_write(self, stage, df, bucket_by=None, meta=None):
         if stage == "linked" and crashed["n"] == 0:
             crashed["n"] += 1
             raise RuntimeError("simulated crash between canon_map commit and refresh")
-        return real_write(self, stage, df, partition_by=partition_by, meta=meta)
+        return real_write(self, stage, df, bucket_by=bucket_by, meta=meta)
 
     StageStore.write = crashing_write
     try:

@@ -154,24 +154,22 @@ def test_out_neighborhood_scan_prunes_buckets(spark, tmp_path):
     read-side payoff the bucket(src_entity) layout exists for. One seed
     touches exactly one of the 16 bucket dirs; the scan must not list the
     other 15."""
-    from docprocai_service_spark.operators.materialize import (
-        entity_bucket,
-        pruned_edge_scan,
-    )
+    from docprocai_service_spark.operators.materialize import pruned_edge_scan
+    from docprocai_service_spark.sources.manifest import write_bucketed
 
     rows = [(f"e{i}", f"e{(i * 7) % 50}", "rel", 1) for i in range(200)]
     df = spark.createDataFrame(
         rows, "src_entity string, dst_entity string, pred string, weight long"
-    ).withColumn("bucket", entity_bucket(F.col("src_entity")))
+    )
     path = str(tmp_path / "edges_bucketed")
-    df.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    write_bucketed(df, path, "src_entity")
 
     scan = pruned_edge_scan(spark, path, ["e1"])
     p = plan_str(scan)
     pf = p.split("PartitionFilters")[1].splitlines()[0]
     # single-element frontier folds the IN-list to an equality — either form
     # is a real partition filter on the bucket column
-    assert "bucket" in pf and ("IN" in pf or "in(" in pf.lower() or "= 0" in pf or "=" in pf)
+    assert "__bucket" in pf and ("IN" in pf or "in(" in pf.lower() or "= 0" in pf or "=" in pf)
     executed = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: []" not in executed
     # correctness of the pruned read: exactly e1's out-edges

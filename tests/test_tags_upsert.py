@@ -81,33 +81,6 @@ def test_upsert_replaces_matching_keys(spark, tmp_path):
     assert store.is_done("seg")
 
 
-def test_upsert_torn_swap_recovers(spark, tmp_path):
-    """Crash between the old-dir removal and the swap rename: the .swap dir
-    holds the COMPLETE merged output (it has _SUCCESS). The next upsert must
-    FINISH the interrupted swap — previously committed rows survive — and
-    then merge the new batch on top. (Round-2 behavior rebuilt from the
-    incoming batch alone, silently dropping committed rows; pinned fixed.)"""
-    import os
-    import shutil
-
-    from docprocai_service_spark.sources.manifest import StageStore
-
-    store = StageStore(spark, str(tmp_path / "torn"))
-    v1 = spark.createDataFrame([("u1", 1, "a")], "url string, warc_ts int, payload string")
-    store.upsert("seg", v1, keys=["url", "warc_ts"])
-    # simulate the crash window: merged output sits in .swap, stage dir gone
-    stage_dir = store.path("seg")
-    shutil.move(stage_dir, stage_dir + ".swap")
-    store.invalidate("seg")
-    assert not store.is_done("seg")
-    v2 = spark.createDataFrame([("u2", 1, "b")], "url string, warc_ts int, payload string")
-    store.upsert("seg", v2, keys=["url", "warc_ts"])
-    got = {r["url"]: r["payload"] for r in store.read("seg").collect()}
-    assert got == {"u1": "a", "u2": "b"}  # committed u1 survived the crash
-    assert store.is_done("seg")
-    assert not os.path.exists(stage_dir + ".swap")  # swap completed + cleared
-
-
 def test_upsert_manifest_crash_adopts_committed_write(spark, tmp_path):
     """Crash AFTER the write job committed (_SUCCESS present) but BEFORE the
     manifest commit: the next upsert adopts the committed data instead of
@@ -128,6 +101,39 @@ def test_upsert_manifest_crash_adopts_committed_write(spark, tmp_path):
     assert store.manifest("seg")["rows"] == 2
 
 
+def test_foreign_layout_is_refused_untouched(spark, tmp_path):
+    """A committed stage in any layout but the store's own is input from
+    disk, never migrated: for a plain unbucketed write and for a bucketed
+    stage whose manifest records another bucket count, upsert and
+    read_pruned raise naming the stage and leave every file as it was."""
+    import os
+
+    from docprocai_service_spark.sources.manifest import StageStore
+
+    store = StageStore(spark, str(tmp_path / "foreign"))
+    df = spark.createDataFrame(
+        [(f"u{i}", 1, i) for i in range(20)], "url string, warc_ts int, w int"
+    )
+    store.write("plain", df)
+    store.upsert("wide", df, keys=["url", "warc_ts"])
+    store.annotate("wide", {"n_buckets": 64})
+
+    def files():
+        return sorted(
+            (os.path.join(d, f), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, names in os.walk(store.root) for f in names
+        )
+
+    for stage in ("plain", "wide"):
+        before = files()
+        with pytest.raises(ValueError, match=stage):
+            store.upsert(stage, df.limit(3), keys=["url", "warc_ts"])
+        with pytest.raises(ValueError, match=stage):
+            store.read_pruned(stage, df.select("url", "warc_ts"), ["url", "warc_ts"])
+        assert files() == before
+        assert store.read(stage).count() == 20
+
+
 def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     """Bucket-scoped merge: files in buckets the batch does not touch must
     not be rewritten (same inodes/mtimes), and the manifest count comes from
@@ -141,7 +147,7 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     base = spark.createDataFrame(
         [(f"u{i}", 1, f"p{i}") for i in range(200)], "url string, warc_ts int, payload string"
     )
-    store.upsert("seg", base, keys=["url", "warc_ts"], n_buckets=16)
+    store.upsert("seg", base, keys=["url", "warc_ts"])
     target = store.path("seg")
 
     def snapshot():
@@ -193,36 +199,6 @@ def test_dynamic_sessionize_rule(spark):
     assert sessions == {1: 3, 2: 2}
 
 
-def test_upsert_nbuckets_survives_manifest_loss(spark, tmp_path):
-    """ADVICE r3 #2: _recover re-committed manifests WITHOUT n_buckets, so a
-    later upsert with a different default bucketed keys with the wrong
-    modulus and stale rows survived as duplicates. The sidecar buckets.json
-    (written before any data) must preserve the sticky modulus across
-    manifest loss."""
-    import glob
-    import os
-
-    from docprocai_service_spark.sources.manifest import StageStore
-
-    store = StageStore(spark, str(tmp_path / "nb"))
-    rows = [(f"u{i}", 1, "old") for i in range(40)]
-    v1 = spark.createDataFrame(rows, "url string, warc_ts int, payload string")
-    store.upsert("seg", v1, keys=["url", "warc_ts"], n_buckets=16)
-    os.remove(store._manifest_path("seg"))  # manifest commit "crashed"
-    # next upsert runs with the DEFAULT n_buckets (64): the recovered
-    # manifest must still pin 16, or replaced keys land in wrong buckets
-    v2 = spark.createDataFrame(
-        [(f"u{i}", 1, "NEW") for i in range(40)], "url string, warc_ts int, payload string"
-    )
-    store.upsert("seg", v2, keys=["url", "warc_ts"])
-    got = store.read("seg").collect()
-    assert len(got) == 40  # no duplicate keys survived
-    assert {r["payload"] for r in got} == {"NEW"}  # every row actually replaced
-    assert store.manifest("seg")["n_buckets"] == 16
-    n_dirs = len(glob.glob(os.path.join(store.path("seg"), "__bucket=*")))
-    assert 0 < n_dirs <= 16  # layout not split by the 64-bucket default
-
-
 def test_read_pruned_pushes_bucket_partition_filter(spark, tmp_path):
     """ADVICE r3 #5: the merge readback must prune the __bucket partition
     column BEFORE any join — a plain read + semi-join scans every bucket.
@@ -232,7 +208,7 @@ def test_read_pruned_pushes_bucket_partition_filter(spark, tmp_path):
     store = StageStore(spark, str(tmp_path / "rp"))
     rows = [(f"u{i}", 1, f"p{i}") for i in range(60)]
     df = spark.createDataFrame(rows, "url string, warc_ts int, payload string")
-    store.upsert("seg", df, keys=["url", "warc_ts"], n_buckets=8)
+    store.upsert("seg", df, keys=["url", "warc_ts"])
     probe = spark.createDataFrame([("u1", 1), ("u2", 1)], "url string, warc_ts int")
     pruned = store.read_pruned("seg", probe, keys=["url", "warc_ts"])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -257,45 +233,6 @@ def test_fat_binary_scan_scopes_and_restores_conf(spark):
         assert spark.conf.get(key) == "256"
     after = spark.conf.get(key, None)
     assert after == before and after != "256"
-
-
-def test_unknown_modulus_falls_back_safely(spark, tmp_path):
-    """ADVICE r4: a bucketed stage whose modulus is unrecorded (manifest AND
-    sidecar lost) must not be pruned/merged with a guessed default modulus —
-    read_pruned falls back to the full read, and upsert routes through the
-    exact full-rebucket migration, so no prior row is ever dropped."""
-    import os
-
-    from docprocai_service_spark.sources.manifest import StageStore
-
-    store = StageStore(spark, str(tmp_path / "unkmod"))
-    rows = [(f"u{i}", 1, i) for i in range(40)]
-    v1 = spark.createDataFrame(rows, "url string, warc_ts int, w int")
-    store.upsert("seg", v1, keys=["url", "warc_ts"], n_buckets=24)  # non-default
-    # lose BOTH records of the modulus, then recover the data dir (adopt path)
-    os.remove(store._manifest_path("seg"))
-    os.remove(store._bucket_meta_path("seg"))
-    store._recover("seg")
-    assert store.is_done("seg")
-    assert store._recorded_n_buckets("seg") is None
-
-    # read_pruned: must return every row for the touched keys (a guessed
-    # modulus of 64 would prune live rows away)
-    on = spark.createDataFrame([(f"u{i}", 1) for i in range(40)], "url string, warc_ts int")
-    got = store.read_pruned("seg", on, ["url", "warc_ts"]).count()
-    assert got == 40
-
-    # upsert: replaces the 10 incoming keys, keeps the other 30 — under the
-    # wrong modulus, stale rows would survive as duplicates
-    v2 = spark.createDataFrame([(f"u{i}", 1, 100 + i) for i in range(10)],
-                               "url string, warc_ts int, w int")
-    store.upsert("seg", v2, keys=["url", "warc_ts"])
-    out = {r["url"]: r["w"] for r in store.read("seg").collect()}
-    assert len(out) == 40
-    assert all(out[f"u{i}"] == 100 + i for i in range(10))
-    assert all(out[f"u{i}"] == i for i in range(10, 40))
-    # modulus re-recorded durably by the migration
-    assert store._recorded_n_buckets("seg") is not None
 
 
 def test_json_scalar_matches_duckdb(spark):
