@@ -14,6 +14,7 @@ the weaker rows-only check for those, per the contract.
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Callable
 
@@ -746,6 +747,10 @@ def _tpch_entity_edges(spark, sf_dir):
         est = int(od._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         est = 1 << 62
+        logging.getLogger(__name__).warning(
+            "_tpch_entity_edges: orders size estimate failed; assuming %d bytes, "
+            "so the join is pinned to shuffle-hash", est, exc_info=True,
+        )
     od_side = F.broadcast(od) if est <= (64 << 20) else od.hint("shuffle_hash")
     sc = (
         li.join(od_side, li.l_orderkey == od_side.o_orderkey)

@@ -221,8 +221,10 @@ def run_pipeline(
         return canonicalize_entities(names, threshold=canon_threshold)
 
     canon_map = run_stage("canon_map", make_canon, ["entity_id"])
-    resolved = resolve_entities(triples, alias_dict, canon_map)
-    edges = run_stage("edges", lambda: edges_table(resolved), EDGE_KEYS)
+    # resolved inside `make`: a resumed edges stage never builds the alias map
+    edges = run_stage(
+        "edges", lambda: edges_table(resolve_entities(triples, alias_dict, canon_map)), EDGE_KEYS
+    )
     entities = run_stage("entities", lambda: entities_table(alias_dict, canon_map), ["entity_id"])
 
     lineage = None
@@ -234,12 +236,12 @@ def run_pipeline(
             lineage.write.mode("overwrite").parquet(store.path("lineage"))
 
     if store is not None:
-        # stage outputs are materialized parquet — count is metadata-cheap.
+        # the triples manifest holds the count its write observed — no job.
         # In no-store mode the count flows through the observe() accumulator
         # on the one cache-filling action instead (PipelineResult.n_triples):
         # a separate count() action here was a measured serial term that
         # capped N→4N scaling.
-        n_triples = triples.count()
+        n_triples = store.manifest("triples")["rows"]
         metrics["n_triples"] = n_triples
         metrics["triples_per_sec"] = n_triples / max(time.time() - t_start, 1e-9)
     metrics["total_wall_s"] = time.time() - t_start

@@ -22,6 +22,14 @@ service/DocProcAiService.py:639-668) — without per-row state:
     owned here alone (`bucket_of`, `write_bucketed`, `scan_buckets`) and
     recorded as `n_buckets` in the manifest; a committed stage in any other
     layout is refused, never migrated.
+  * two merge semantics on that layout: `upsert` REPLACES rows by key (the
+    ON CONFLICT DO UPDATE surface) or, with `add=<column>`, SUMS that column
+    over equal keys (the additive edge-weight merge) — each one scan of the
+    touched buckets plus one write job.
+  * schema-carrying reads: every manifest records the stage's data schema
+    (bucket column excluded, every field nullable — exactly what a parquet
+    read returns), and `read()` hands it to the reader, so no read pays
+    Spark's footer-inference job. A manifest without one reads by inference.
 
 This is the parquet-with-manifest fallback chosen at milestone M0 (no Iceberg
 runtime jar in the sandbox — SURVEY.md §7); the writer surface is one class so
@@ -35,8 +43,9 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 KEYS = ["url", "warc_ts"]
 
@@ -71,11 +80,38 @@ def scan_buckets(spark: SparkSession, path: str, on: DataFrame, key: str) -> Dat
     """Rows of the bucketed layout at `path` lying ONLY in the buckets of
     `on`'s `key` values. The bucket ids reach the scan as a PARTITION
     filter, so the parquet listing prunes to ≤ N_BUCKETS touched dirs (a
-    plain read + semi-join scans every bucket). The ids come from the JVM
-    xxhash64 that wrote the layout — a Python reimplementation would
-    silently drift."""
-    hot = [r[0] for r in on.select(bucket_of(key)).distinct().collect()]
-    return spark.read.parquet(path).where(F.col(BUCKET_COL).isin(hot)).drop(BUCKET_COL)
+    plain read + semi-join scans every bucket)."""
+    return _in_buckets(spark.read.parquet(path), _hot_buckets(on, key))
+
+
+def _hot_buckets(on: DataFrame, key: str) -> list[int]:
+    """Bucket ids of `on`'s `key` values, collected from the JVM xxhash64
+    that wrote the layout — a Python reimplementation would silently drift."""
+    return [r[0] for r in on.select(bucket_of(key)).distinct().collect()]
+
+
+def _in_buckets(df: DataFrame, hot: list[int]) -> DataFrame:
+    return df.where(F.col(BUCKET_COL).isin(hot)).drop(BUCKET_COL)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """`dt` with every field, element and value nullable — the schema a
+    parquet read returns for data written with `dt`."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _data_schema(df: DataFrame) -> StructType:
+    """The schema a parquet read of `df`'s written files returns, bucket
+    column excluded."""
+    return _nullable(StructType([f for f in df.schema.fields if f.name != BUCKET_COL]))
 
 
 def content_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, str]:
@@ -171,7 +207,8 @@ class StageStore:
         else:
             obs_df.write.mode("overwrite").parquet(self.path(stage))
         self._commit_manifest(
-            stage, rows=int(obs.get["rows"]), bucketed=bool(bucket_by), meta=meta
+            stage, rows=int(obs.get["rows"]), bucketed=bool(bucket_by),
+            schema=_data_schema(df), meta=meta,
         )
 
     def append_new(self, stage: str, df: DataFrame, keys: list[str] = KEYS) -> DataFrame:
@@ -181,29 +218,41 @@ class StageStore:
         (service/DocProcAiService.py:360-366).
         """
         if self.is_done(stage):
-            # Materialize done-keys BEFORE appending — the anti-join must not
-            # lazily re-list the directory it is being appended into.
-            done = self.read(stage).select(*keys).distinct().localCheckpoint()
-            obs_df, obs = _observed(df.join(done, keys, "left_anti"))
+            # The anti-join runs lazily against the frame read() returned
+            # before the write: Spark lists that frame's files when read()
+            # returns, and an append commits only at job end, so the write
+            # cannot see its own files.
+            done = self.read(stage).select(*keys).distinct()
+            # select: the join would move the keys first, and every file of
+            # the stage keeps the column order its schema records
+            obs_df, obs = _observed(df.join(done, keys, "left_anti").select(*df.columns))
             obs_df.write.mode("append").parquet(self.path(stage))
             rows = self.manifest(stage)["rows"] + int(obs.get["rows"])
         else:
             obs_df, obs = _observed(df)
             obs_df.write.mode("overwrite").parquet(self.path(stage))
             rows = int(obs.get["rows"])
-        self._commit_manifest(stage, rows=rows, bucketed=False)
+        self._commit_manifest(stage, rows=rows, bucketed=False, schema=_data_schema(df))
         return self.read(stage)
 
-    def upsert(self, stage: str, df: DataFrame, keys: list[str] = KEYS) -> DataFrame:
-        """MERGE semantics: rows whose key tuple already exists are REPLACED by
-        the incoming rows; new keys are appended — the reference's ON CONFLICT
-        DO UPDATE (persistence/SegmentDbConnector.py:101-124,
-        MediaRecordInfoDbConnector.py:26-38), bucket-scoped:
+    def upsert(
+        self, stage: str, df: DataFrame, keys: list[str] = KEYS, add: str | None = None
+    ) -> DataFrame:
+        """MERGE by key tuple, bucket-scoped. Two semantics:
+
+          * ``add=None`` — rows whose key tuple already exists are REPLACED
+            by the incoming rows; new keys are appended — the reference's ON
+            CONFLICT DO UPDATE (persistence/SegmentDbConnector.py:101-124,
+            MediaRecordInfoDbConnector.py:26-38).
+          * ``add="<column>"`` — the stage holds exactly `keys` + that one
+            column, and rows with equal keys are SUMMED: the touched buckets'
+            rows and the incoming rows go through one aggregation (the
+            additive edge-weight merge of streaming/incremental.py).
 
         The stage is laid out bucketed by `keys[0]` (`bucket_of`). Equal key
-        tuples share a bucket, so a merge reads ONLY the buckets the incoming
-        batch touches (partition pruning on an IN-list of ≤ N_BUCKETS ints),
-        anti-joins the replaced keys, and rewrites ONLY those buckets via
+        tuples share a bucket, so a merge collects the incoming batch's
+        bucket ids once, reads ONLY those buckets (partition pruning on an
+        IN-list of ≤ N_BUCKETS ints) and rewrites ONLY those buckets via
         dynamic partition overwrite — untouched buckets are never read or
         written, so merge cost is O(touched buckets), not O(table).
 
@@ -215,13 +264,17 @@ class StageStore:
           * mid-write crash: new files live in a hidden .spark-staging dir;
             committed data + manifest untouched; replay converges.
           * mid-commit crash (some buckets swapped): every swapped bucket holds
-            kept∪new for that bucket — a superset of nothing, a loss of
-            nothing; replaying the in-flight batch (which never got an ack)
-            converges. A leaked staging dir marks this; the next upsert then
-            recounts exactly instead of trusting manifest arithmetic.
+            the merge of old and new rows for that bucket — a loss of
+            nothing. A replace-upsert converges on replay; an additive one is
+            ambiguous (some buckets already hold the sum), which is why its
+            caller brackets it with an intent record. A leaked staging dir
+            marks this; the next upsert then recounts exactly instead of
+            trusting manifest arithmetic.
           * write-committed-but-manifest-missing crash: adopted on entry
             (_SUCCESS present → re-commit manifest), never rebuilt from the
             incoming batch alone."""
+        if add is not None and sorted(df.columns) != sorted([*keys, add]):
+            raise ValueError(f"add={add!r} needs exactly the columns {[*keys, add]}, got {df.columns}")
         target = self.path(stage)
         self._recover(stage)
         if not self.is_done(stage):
@@ -229,13 +282,25 @@ class StageStore:
             return self.read(stage)
         self._check_bucketed(stage)
         crashed = self.has_staging_leak(stage)
-        dfb = df.withColumn(BUCKET_COL, bucket_of(keys[0])).persist()
+        # A replace reads `df` three times (bucket ids, replaced keys, new
+        # rows), so it pins one evaluation; an additive merge reads it twice
+        # and its caller hands in a persisted frame.
+        src = df if add else df.withColumn(BUCKET_COL, bucket_of(keys[0])).persist()
         try:
-            old_hot, obs_old = _observed(scan_buckets(self.spark, target, dfb, keys[0]))
-            kept = old_hot.join(dfb.select(*keys).distinct(), keys, "left_anti")
-            merged, obs_out = _observed(
-                kept.withColumn(BUCKET_COL, bucket_of(keys[0])).unionByName(dfb)
+            old_hot, obs_old = _observed(
+                _in_buckets(self._reader(stage).parquet(target), _hot_buckets(src, keys[0]))
             )
+            if add:
+                merged = (
+                    old_hot.unionByName(df)
+                    .groupBy(*keys)
+                    .agg(F.sum(add).cast(df.schema[add].dataType).alias(add))
+                    .select(*old_hot.columns)
+                )
+            else:
+                kept = old_hot.join(src.select(*keys).distinct(), keys, "left_anti")
+                merged = kept.unionByName(src.drop(BUCKET_COL))
+            merged, obs_out = _observed(merged.withColumn(BUCKET_COL, bucket_of(keys[0])))
             (
                 merged.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -254,9 +319,10 @@ class StageStore:
                     - int(obs_old.get["rows"])
                     + int(obs_out.get["rows"])
                 )
-            self._commit_manifest(stage, rows=rows, bucketed=True)
+            self._commit_manifest(stage, rows=rows, bucketed=True, schema=_data_schema(merged))
         finally:
-            dfb.unpersist()
+            if src is not df:
+                src.unpersist()
         return self.read(stage)
 
     def _recover(self, stage: str) -> None:
@@ -264,9 +330,10 @@ class StageStore:
         manifest commit, instead of discarding committed rows."""
         target = self.path(stage)
         if not self.is_done(stage) and os.path.exists(os.path.join(target, "_SUCCESS")):
+            committed = self.spark.read.parquet(target)
             self._commit_manifest(
-                stage, rows=self.spark.read.parquet(target).count(),
-                bucketed=self._is_bucketed(stage),
+                stage, rows=committed.count(), bucketed=self._is_bucketed(stage),
+                schema=_data_schema(committed),
             )
 
     def _is_bucketed(self, stage: str) -> bool:
@@ -283,22 +350,26 @@ class StageStore:
                 f"(manifest n_buckets={n}); invalidate and rewrite it before merging"
             )
 
+    def _reader(self, stage: str) -> DataFrameReader:
+        """A parquet reader carrying the stage's recorded data schema, so the
+        read runs no footer-inference job (the bucket column is still
+        discovered from the dirs); inference when none is recorded."""
+        try:
+            schema = self.manifest(stage).get("schema")
+        except FileNotFoundError:
+            schema = None
+        reader = self.spark.read
+        return reader.schema(StructType.fromJson(schema)) if schema else reader
+
     def read(self, stage: str) -> DataFrame:
-        df = self.spark.read.parquet(self.path(stage))
+        df = self._reader(stage).parquet(self.path(stage))
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
 
-    def read_pruned(self, stage: str, on: DataFrame, keys: list[str]) -> DataFrame:
-        """Rows of `stage` lying ONLY in the buckets touched by `on`'s key
-        tuples — the partition-pruned readback for merge paths, O(touched
-        buckets) like upsert's write side (`scan_buckets`). Raises
-        ValueError on a stage in any other layout."""
-        self._check_bucketed(stage)
-        return scan_buckets(self.spark, self.path(stage), on, keys[0])
-
     def _commit_manifest(
-        self, stage: str, rows: int, bucketed: bool, meta: dict | None = None
+        self, stage: str, rows: int, bucketed: bool, schema: StructType,
+        meta: dict | None = None,
     ) -> None:
-        doc = {"stage": stage, "rows": rows}
+        doc = {"stage": stage, "rows": rows, "schema": schema.jsonValue()}
         if bucketed:
             doc["n_buckets"] = N_BUCKETS
         if meta:

@@ -275,7 +275,10 @@ def _sync_canonical_state(
         out["rebuilt_for_dict_change"] = True
     else:
         out["merged_edge_pages"] = merge_edge_deltas(store, alias_dict, canon_map)
-    store.write("entities", entities_table(alias_dict, canon_map))
+    if needs_refresh or map_fresh or not store.is_done("entities"):
+        # entities is a pure function of (alias_dict, canon_map); outside a
+        # refresh both are proven unchanged by the alias_fp stamp
+        store.write("entities", entities_table(alias_dict, canon_map))
     # refresh-complete stamp: ONLY now may a replay treat downstream state as
     # consistent with this dictionary
     store.annotate("canon_map", {"alias_fp": alias_fp})
@@ -374,11 +377,12 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
 
     Reads the committed `triples` stage for pages absent from the
     `edges_pages` ledger, resolves them to entities, aggregates delta
-    weights, and merges: existing rows for the touched (src, dst, pred) keys
-    are read back bucket-PRUNED (StageStore.read_pruned filters the __bucket
-    partition column before the semi-join, so the readback lists ≤ 16 dirs —
-    O(touched buckets) at the read step too, not just the write),
-    summed with the delta, and upserted. Returns the number of pages merged.
+    weights, and merges them with StageStore.upsert(add="weight"): the
+    touched buckets of `edges` (bucket-PRUNED on the __bucket partition
+    column, ≤ 16 dirs) and the delta go through one sum-by-key aggregation,
+    and only those buckets are rewritten — one scan plus one write job,
+    O(touched buckets). On a store without `edges` the same call writes the
+    delta as the stage. Returns the number of pages merged.
 
     Crash contract — EXACT, no double-count window (closes VERDICT r3 #2):
     the merge is bracketed by an atomically-renamed intent record
@@ -439,19 +443,7 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
         )
         try:
             _write_intent(store, fp, "begin")
-            if store.is_done("edges"):
-                old_hot = store.read_pruned(
-                    "edges", delta.select(*EDGE_KEYS), EDGE_KEYS
-                ).join(delta.select(*EDGE_KEYS), EDGE_KEYS, "left_semi")
-                combined = (
-                    old_hot.select(*EDGE_KEYS, "weight")
-                    .unionByName(delta.select(*EDGE_KEYS, "weight"))
-                    .groupBy(*EDGE_KEYS)
-                    .agg(F.sum("weight").cast("long").alias("weight"))
-                )
-                store.upsert("edges", combined, keys=EDGE_KEYS)
-            else:
-                store.upsert("edges", delta, keys=EDGE_KEYS)
+            store.upsert("edges", delta, EDGE_KEYS, add="weight")
             _write_intent(store, fp, "done")
         finally:
             delta.unpersist()

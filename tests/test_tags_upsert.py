@@ -81,6 +81,27 @@ def test_upsert_replaces_matching_keys(spark, tmp_path):
     assert store.is_done("seg")
 
 
+def test_upsert_add_sums_matching_keys(spark, tmp_path):
+    """upsert(add=col): rows with equal keys are summed into `col`, new keys
+    are appended, the manifest row count stays exact, and a frame with any
+    column beyond keys + `col` is refused before anything is written."""
+    from docprocai_service_spark.sources.manifest import StageStore
+
+    store = StageStore(spark, str(tmp_path / "add"))
+    schema = "src string, dst string, weight long"
+    store.upsert("e", spark.createDataFrame([("a", "b", 2), ("c", "d", 1)], schema),
+                 ["src", "dst"], add="weight")
+    store.upsert("e", spark.createDataFrame([("a", "b", 3), ("x", "y", 7)], schema),
+                 ["src", "dst"], add="weight")
+    got = {(r["src"], r["dst"]): r["weight"] for r in store.read("e").collect()}
+    assert got == {("a", "b"): 5, ("c", "d"): 1, ("x", "y"): 7}
+    assert store.manifest("e")["rows"] == 3
+    assert store.read("e").schema == spark.read.parquet(store.path("e")).drop("__bucket").schema
+    wide = spark.createDataFrame([("a", "b", 1, "p")], "src string, dst string, weight long, p string")
+    with pytest.raises(ValueError, match="weight"):
+        store.upsert("e", wide, ["src", "dst"], add="weight")
+
+
 def test_upsert_manifest_crash_adopts_committed_write(spark, tmp_path):
     """Crash AFTER the write job committed (_SUCCESS present) but BEFORE the
     manifest commit: the next upsert adopts the committed data instead of
@@ -104,8 +125,8 @@ def test_upsert_manifest_crash_adopts_committed_write(spark, tmp_path):
 def test_foreign_layout_is_refused_untouched(spark, tmp_path):
     """A committed stage in any layout but the store's own is input from
     disk, never migrated: for a plain unbucketed write and for a bucketed
-    stage whose manifest records another bucket count, upsert and
-    read_pruned raise naming the stage and leave every file as it was."""
+    stage whose manifest records another bucket count, upsert raises
+    naming the stage and leaves every file as it was."""
     import os
 
     from docprocai_service_spark.sources.manifest import StageStore
@@ -128,8 +149,6 @@ def test_foreign_layout_is_refused_untouched(spark, tmp_path):
         before = files()
         with pytest.raises(ValueError, match=stage):
             store.upsert(stage, df.limit(3), keys=["url", "warc_ts"])
-        with pytest.raises(ValueError, match=stage):
-            store.read_pruned(stage, df.select("url", "warc_ts"), ["url", "warc_ts"])
         assert files() == before
         assert store.read(stage).count() == 20
 
@@ -199,18 +218,18 @@ def test_dynamic_sessionize_rule(spark):
     assert sessions == {1: 3, 2: 2}
 
 
-def test_read_pruned_pushes_bucket_partition_filter(spark, tmp_path):
-    """ADVICE r3 #5: the merge readback must prune the __bucket partition
-    column BEFORE any join — a plain read + semi-join scans every bucket.
-    Asserts the partition filter reaches the scan node."""
-    from docprocai_service_spark.sources.manifest import StageStore
+def test_scan_buckets_pushes_bucket_partition_filter(spark, tmp_path):
+    """ADVICE r3 #5: a bucket-scoped readback must prune the __bucket
+    partition column BEFORE any join — a plain read + semi-join scans every
+    bucket. Asserts the partition filter reaches the scan node."""
+    from docprocai_service_spark.sources.manifest import StageStore, scan_buckets
 
     store = StageStore(spark, str(tmp_path / "rp"))
     rows = [(f"u{i}", 1, f"p{i}") for i in range(60)]
     df = spark.createDataFrame(rows, "url string, warc_ts int, payload string")
     store.upsert("seg", df, keys=["url", "warc_ts"])
     probe = spark.createDataFrame([("u1", 1), ("u2", 1)], "url string, warc_ts int")
-    pruned = store.read_pruned("seg", probe, keys=["url", "warc_ts"])
+    pruned = scan_buckets(spark, store.path("seg"), probe, "url")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "__bucket" in plan.split("PartitionFilters", 1)[1][:200]
     # and the rows it returns are exactly the touched buckets' contents
