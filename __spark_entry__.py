@@ -14,7 +14,6 @@ the weaker rows-only check for those, per the contract.
 
 from __future__ import annotations
 
-import logging
 import os
 from collections.abc import Callable
 
@@ -483,7 +482,7 @@ def near_dup_groups_docs(spark, sf_dir):
     Oracle-checked (round 3): the edge set equals the exact SQL pair set
     (see minhash_near_dup_docs), and DuckDB computes the same components via
     a recursive-CTE transitive closure — the first END-TO-END oracle over the
-    components operator (previously pytest-only). At this scale auto mode
+    components operator (previously pytest-only). At this scale the probe
     routes to the driver union-find; at web scale the same call routes to the
     O(log n) large-star/small-star formulation (operators/canonicalize.py)."""
     from docprocai_service_spark.operators.canonicalize import connected_components
@@ -493,9 +492,7 @@ def near_dup_groups_docs(spark, sf_dir):
     edges = minhash_near_dup_pairs(d, threshold=0.5, k=64, bands=32).select(
         F.col("id1").alias("src"), F.col("id2").alias("dst")
     )
-    comps = connected_components(
-        edges, vertices=d.select(F.col("doc_id").alias("id")), mode="auto"
-    )
+    comps = connected_components(edges, vertices=d.select(F.col("doc_id").alias("id")))
     return comps.select(F.col("id").alias("doc_id"), F.col("comp").alias("group_id"))
 
 
@@ -732,29 +729,12 @@ def _tpch_entity_edges(spark, sf_dir):
     def tag(prefix, col):
         return F.concat(F.lit(prefix), F.col(col).cast("string"))
 
-    # The one big⋈big join of the derivation (guide §3.1 — pick the strategy
-    # deliberately): the orders side is projected to (o_orderkey, o_custkey),
-    # a sliver of the lineitem side. At bench scales its estimate sits under
-    # the 10 MB autoBroadcast default and the planner already broadcasts it
-    # (plan-verified at sf0.1 and a scaled sf1.0 twin — this branch changes
-    # NOTHING there); the point is the next decade: between 10 and 64 MiB
-    # the default would silently flip to sort-merge, so broadcast is pinned
-    # while the projection comfortably fits executor memory, and past 64 MiB
-    # a shuffled-hash join is pinned so the O(m) lineitem stream is never
-    # SORTED — sort-merge's only extra cost on an equi-join whose output
-    # feeds a hash aggregation anyway (same shuffles, no Sort operators).
-    try:
-        est = int(od._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = 1 << 62
-        logging.getLogger(__name__).warning(
-            "_tpch_entity_edges: orders size estimate failed; assuming %d bytes, "
-            "so the join is pinned to shuffle-hash", est, exc_info=True,
-        )
-    od_side = F.broadcast(od) if est <= (64 << 20) else od.hint("shuffle_hash")
-    sc = (
-        li.join(od_side, li.l_orderkey == od_side.o_orderkey)
-        .select(tag("S", "l_suppkey").alias("src"), tag("C", "o_custkey").alias("dst"))
+    # lineitem⋈orders is left to the planner: the (o_orderkey, o_custkey)
+    # projection (~0.8 MB estimated at sf0.1) sits far under the session's
+    # 64 MiB autoBroadcastJoinThreshold (session.py), so it plans a
+    # BroadcastHashJoin with orders as the build side.
+    sc = li.join(od, li.l_orderkey == od.o_orderkey).select(
+        tag("S", "l_suppkey").alias("src"), tag("C", "o_custkey").alias("dst")
     )
     cn = cu.select(tag("C", "c_custkey").alias("src"), tag("N", "c_nationkey").alias("dst"))
     sn = su.select(tag("S", "s_suppkey").alias("src"), tag("N", "s_nationkey").alias("dst"))
@@ -995,15 +975,13 @@ def kg_edges_docs(spark, sf_dir):
     is what lets the oracle mirror it as min(entity_id) per name — the LSH
     mechanics themselves are oracle-checked separately
     (minhash_near_dup_docs / near_dup_groups_docs)."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     return edges_table(resolve_entities(t, alias, canon))
 
@@ -1016,16 +994,14 @@ def kg_pagerank_docs(spark, sf_dir):
     with the unrolled weighted-PR CTEs via _pagerank_blocks_sql). Edge
     weight = number of triples asserting the edge, so rank follows
     corroboration."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import pagerank_fixed
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     edges = edges_table(resolve_entities(t, alias, canon))
     e = edges.select(
@@ -1042,16 +1018,14 @@ def kg_communities_docs(spark, sf_dir):
     composed DuckDB oracle (the kg_edges_docs chain + _lpa_blocks_sql).
     Corroboration-weighted: a pair's vote weight is the number of triples
     asserting it in either direction."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import label_propagation
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     edges = edges_table(resolve_entities(t, alias, canon))
     e = edges.select(
@@ -1069,16 +1043,14 @@ def kg_features_docs(spark, sf_dir):
     deliverable's oracle-checked twin, streaming/incremental.py). Entities
     whose only edges are self-loops carry their own id as community (LPA's
     simple graph drops self-loops)."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import label_propagation, pagerank_fixed
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     edges = edges_table(resolve_entities(t, alias, canon)).localCheckpoint()
     e = edges.select(
@@ -1102,16 +1074,14 @@ def kg_bfs_docs(spark, sf_dir):
     that entry pins the partition-pruned point-query READ over the
     materialized table; this one pins the in-memory BFS operator's
     distances on the same graph."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import bfs_distances
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     edges = edges_table(resolve_entities(t, alias, canon))
     e = edges.select(
@@ -1126,28 +1096,28 @@ def kg_components_docs(spark, sf_dir):
     the north-star's canonicalization engine (connected_components,
     operators/canonicalize.py) run as the terminal stage of the full DAG
     and oracle-checked against a recursive-CTE transitive closure.
-    mode='twophase' pins the DISTRIBUTED large-star/small-star formulation
-    (O(log n) rounds at any diameter) rather than letting auto route the
-    small corpus to the driver union-find — the scale engine is the one
-    under oracle here; the two engines are equality-tested in pytest."""
+    driver_threshold=0 routes it to the DISTRIBUTED large-star/small-star
+    formulation (O(log n) rounds at any diameter) rather than the driver
+    union-find the small corpus would get by default — the scale engine is
+    the one under oracle here; the two routes are equality-tested in
+    pytest."""
     from docprocai_service_spark.operators.canonicalize import (
         canonicalize_entities,
         connected_components,
+        entity_names,
     )
     from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
     from docprocai_service_spark.operators.triples import fused_triples_stage
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     edges = edges_table(resolve_entities(t, alias, canon))
     e = edges.select(
         F.col("src_entity").alias("src"), F.col("dst_entity").alias("dst")
     )
-    return connected_components(e, mode="twophase")
+    return connected_components(e, driver_threshold=0)
 
 
 def kg_neighborhood_docs(spark, sf_dir):
@@ -1162,7 +1132,7 @@ def kg_neighborhood_docs(spark, sf_dir):
     import os
     import tempfile
 
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.materialize import (
         edges_table,
         out_neighborhood,
@@ -1173,9 +1143,7 @@ def kg_neighborhood_docs(spark, sf_dir):
 
     t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     edges = edges_table(resolve_entities(t, alias, canon))
     # per-invocation dir (ADVICE r5: a fixed shared path races concurrent
@@ -1196,13 +1164,11 @@ def kg_entities_docs(spark, sf_dir):
     """Canonical entity registry (materialize's second output): id = MIN
     member id, canonical_name = that member's name, member_count — order-free
     reductions, oracle-checked (arg_min in DuckDB)."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.materialize import entities_table
 
     alias = _kg_alias_df(spark)
-    names = alias.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
+    names = entity_names(alias)
     canon = canonicalize_entities(names, threshold=0.7)
     return entities_table(alias, canon)
 

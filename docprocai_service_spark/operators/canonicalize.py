@@ -7,14 +7,20 @@ Replaces two reference mechanisms:
     candidate count is ~linear instead of quadratic;
   * the global BERTopic re-fit per ingest that transitively groups similar
     items (reference: fileextractlib/TopicModel.py:28-71, triggered from
-    service/DocProcAiService.py:186-189) → iterative min-label propagation on
-    DataFrames (GraphFrames-style), run per batch.
+    service/DocProcAiService.py:186-189) → connected components, run per
+    batch: an exact union-find on the driver when a bounded probe shows the
+    input is dimension-sized, large-star/small-star on DataFrames above it.
 
 Determinism: canonical id = MIN(member id) per component — an order-free
 reduction, never `first()`; signatures are pure functions of the name
-(functions/hashing.py). Iteration uses localCheckpoint() every round to
-truncate lineage (the known plan-size hazard of iterative DataFrame jobs,
-SURVEY.md §4.2).
+(functions/hashing.py); an entity's name is its longest alias, ties to the
+lexicographically smallest (entity_names). The distributed rounds
+localCheckpoint() every round to truncate lineage (the known plan-size
+hazard of iterative DataFrame jobs, SURVEY.md §4.2).
+
+Routing: both operators pick driver vs distributed from a probe count
+bounded by `driver_threshold` — the only selector — and log the route with
+the count that chose it.
 
 Scale notes: similarity runs over DISTINCT names, not mentions — at web scale
 distinct surface forms are orders of magnitude smaller than mention count.
@@ -23,6 +29,8 @@ group-size guard to bound the pair explosion.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -35,6 +43,18 @@ from ..functions.hashing import (
     make_minhash_udf,
     signature_similarity,
 )
+
+_log = logging.getLogger(__name__)
+
+
+def entity_names(alias_dict: DataFrame) -> DataFrame:
+    """(entity_id, name): each entity's display name — its LONGEST alias,
+    ties broken by the lexicographically smallest. The total order makes the
+    name a pure function of the alias set (a bare max_by on length keeps
+    whichever tied alias it meets first, i.e. depends on row order)."""
+    return alias_dict.groupBy("entity_id").agg(
+        F.min_by("alias", F.struct(-F.length("alias"), F.col("alias"))).alias("name")
+    )
 
 
 def similarity_edges(
@@ -152,118 +172,37 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 25,
-    checkpoint_every: int = 1,
-    mode: str = "auto",
     driver_threshold: int = 200_000,
     reliable_checkpoint: bool = False,
-    on_unconverged: str = "raise",
-    force_driver: bool = False,
 ) -> DataFrame:
     """Undirected connected components → (id, comp) with comp = MIN(id) in component.
 
-    mode='distributed': iterative min-label propagation — each round every
-    vertex takes the min of its own and its neighbors' labels; converges in
-    O(diameter) rounds, one shuffle per round, localCheckpoint() truncating
-    lineage (without it iteration k replays all k-1 prior shuffles). For
-    huge-diameter graphs swap in large-star/small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — same skeleton.
-
-    mode='twophase': alternating large-star/small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — converges in O(log n)
-    ROUNDS regardless of graph diameter, where min-label propagation needs
-    O(diameter). The route for web-scale near-dup graphs whose transitive
-    chains can be thousands of links long (a 10⁴-link chain exhausts
-    max_iter=25 under propagation but finishes in ~⌈log⌉ two-phase rounds).
-
-    mode='auto': when the edge set is small (≤ driver_threshold — the normal
+    Route, chosen by `driver_threshold` alone: when the edge set and the
+    supplied vertex set each hold at most driver_threshold rows (the normal
     case: edges are LSH-verified near-duplicate pairs over DISTINCT names, a
-    tiny fraction of corpus size even at web scale), run an exact union-find
-    on the driver instead. Result is IDENTICAL (comp = min reachable id,
-    order-free) but costs one collect instead of ~2 actions × O(diameter)
-    rounds of scheduler latency — the iterative loop's fixed cost was the
-    single biggest non-scaling term in the pipeline. Above the threshold
-    (or when a supplied vertex set is itself above it — both probes are
-    bounded limit().count()s, never an unbounded collect), auto routes to
-    'twophase', the diameter-safe distributed formulation. 'distributed'
-    (min-label) remains available and is exercised directly by tests.
+    tiny fraction of corpus size even at web scale), an exact union-find runs
+    on the driver — one collect instead of ~2 actions × O(log n) rounds of
+    scheduler latency. Both probes are bounded limit().count()s, never an
+    unbounded collect. Above it the distributed large-star/small-star
+    formulation runs (_components_two_phase): O(log n) ROUNDS regardless of
+    graph diameter, so a 10⁴-link transitive near-dup chain finishes in
+    ~⌈log⌉ rounds. driver_threshold=0 sends every non-empty graph there.
+    Both routes give the same result (comp = min reachable id, order-free);
+    a two-phase run that does not reach its fixed point in max_iter rounds
+    raises RuntimeError.
     """
-    if mode == "driver":
-        # Explicit driver mode used to collect() unboundedly on trust; the
-        # same bounded probes 'auto' uses now guard it — a web-scale edge set
-        # reaching this path by accident fails loudly instead of OOMing the
-        # driver. force_driver=True is the documented opt-out.
-        if not force_driver:
-            too_big = edges.limit(driver_threshold + 1).count() > driver_threshold or (
-                vertices is not None
-                and vertices.limit(driver_threshold + 1).count() > driver_threshold
-            )
-            if too_big:
-                raise ValueError(
-                    f"mode='driver' on > driver_threshold={driver_threshold} "
-                    "edges/vertices would collect() unboundedly on the driver; "
-                    "use mode='auto'/'twophase', raise driver_threshold, or "
-                    "pass force_driver=True if the collect is intended."
-                )
+    n_edges = edges.limit(driver_threshold + 1).count()
+    n_vertices = 0 if vertices is None else vertices.limit(driver_threshold + 1).count()
+    driver = n_edges <= driver_threshold and n_vertices <= driver_threshold
+    _log.info(
+        "connected_components: edges=%d vertices=%d driver_threshold=%d -> %s",
+        n_edges, n_vertices, driver_threshold, "driver" if driver else "twophase",
+    )
+    if driver:
         return _components_driver(edges, vertices)
-    if mode == "auto":
-        n_edges = edges.limit(driver_threshold + 1).count()
-        vertices_small = vertices is None or (
-            vertices.limit(driver_threshold + 1).count() <= driver_threshold
-        )
-        if n_edges <= driver_threshold and vertices_small:
-            return _components_driver(edges, vertices)
-        mode = "twophase"
-    if mode == "twophase":
-        return _components_two_phase(
-            edges, vertices, max_iter=max_iter,
-            reliable_checkpoint=reliable_checkpoint, on_unconverged=on_unconverged,
-        )
-    sym = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if vertices is None:
-        vertices = sym.select(F.col("src").alias("id")).distinct()
-    vertices = vertices.select("id")
-    labels = _truncate_lineage(vertices.select("id", F.col("id").alias("comp")), reliable_checkpoint)
-    sym = _truncate_lineage(sym, reliable_checkpoint)
-
-    changed = -1
-    for i in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_min"))
-            .withColumnRenamed("src", "id")
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .select("id", F.least(F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))).alias("comp"))
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = _truncate_lineage(new_labels, reliable_checkpoint)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        # Silent non-convergence = silently WRONG components (labels still
-        # propagating when the loop ran out). Plausible for long transitive
-        # near-duplicate chains whose diameter exceeds max_iter.
-        msg = (
-            f"connected_components did not converge in max_iter={max_iter} rounds "
-            "(labels still changing); components are incorrect. Raise max_iter "
-            "or switch to a large-star/small-star formulation (O(log n) rounds)."
-        )
-        if on_unconverged == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels
+    return _components_two_phase(
+        edges, vertices, max_iter=max_iter, reliable_checkpoint=reliable_checkpoint
+    )
 
 
 def _components_two_phase(
@@ -271,7 +210,6 @@ def _components_two_phase(
     vertices: DataFrame | None,
     max_iter: int = 25,
     reliable_checkpoint: bool = False,
-    on_unconverged: str = "raise",
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond", Algorithm 2/3) — the
@@ -349,15 +287,11 @@ def _components_two_phase(
             break
         pairs = new_pairs
     if not converged:
-        msg = (
-            f"two-phase connected_components did not reach a fixed point in "
+        # silent non-convergence = silently WRONG components
+        raise RuntimeError(
+            f"two-phase connected_components did not converge in "
             f"max_iter={max_iter} rounds; components are incorrect."
         )
-        if on_unconverged == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # star forest → labels: members point at roots; roots + isolated vertices
     # (self-loop-only nodes, or extra ids from `vertices`) label themselves
     members = pairs.select(F.col("v").alias("id"), F.col("u").alias("comp"))
@@ -374,9 +308,8 @@ def _components_driver(edges: DataFrame, vertices: DataFrame | None) -> DataFram
     """Exact union-find on collected edges; identical output contract.
 
     The output id/comp columns keep the INPUT id type (string, long, …) —
-    the distributed and twophase routes preserve it structurally, so the
-    driver route must too or the result dtype would depend on which route
-    `mode='auto'` picked."""
+    the two-phase route preserves it structurally, so the driver route must
+    too or the result dtype would depend on which route the probe picked."""
     from pyspark.sql import types as T
 
     spark = edges.sparkSession
@@ -466,9 +399,8 @@ def _canonicalize_driver(
 
 
 def canonicalize_entities(
-    entity_names: DataFrame,
+    names: DataFrame,
     threshold: float = 0.7,
-    mode: str = "auto",
     driver_threshold: int = 20_000,
 ) -> DataFrame:
     """(entity_id, name) → (entity_id, canon_id) mapping via LSH components.
@@ -477,47 +409,37 @@ def canonicalize_entities(
     noise) collapse to one canonical id = MIN(entity_id) of the component;
     entities with no similar peer map to themselves.
 
-    mode='auto': dimension-sized inputs run the whole LSH+verify+union-find on
-    the driver (_canonicalize_driver), the same "small side stays local" call
-    a broadcast join makes. The probe collects at most driver_threshold+1 raw
+    Route: dimension-sized inputs run the whole LSH+verify+union-find on the
+    driver (_canonicalize_driver), the same "small side stays local" call a
+    broadcast join makes. The probe collects at most driver_threshold+1 raw
     (entity_id, name) ROWS in one bounded job (not a distinct-name count — a
     full result proves the input is dimension-sized and is already in hand).
-    Larger inputs — the web-scale case — run the distributed banded join +
-    components. Both paths are output-identical and tests pin that.
+    Larger inputs — the web-scale case, or any non-empty input at
+    driver_threshold=0 — run the distributed banded join + components. Both
+    routes are output-identical (tests/test_canonicalize.py pins that).
     """
-    rows = None
-    if mode == "auto":
-        # probe and fetch in ONE job: collect at most threshold+1 rows; a full
-        # result means the input is dimension-sized and already in hand.
-        probe = entity_names.select("entity_id", "name").limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            mode, rows = "driver", [(r["entity_id"], r["name"]) for r in probe]
-        else:
-            mode = "distributed"
-    if mode == "driver":
-        if rows is None:
-            rows = [
-                (r["entity_id"], r["name"])
-                for r in entity_names.select("entity_id", "name").collect()
-            ]
-        mapping = _canonicalize_driver(rows, threshold)
-        spark = entity_names.sparkSession
-        if not mapping:
-            return spark.createDataFrame([], "entity_id string, canon_id string")
-        return spark.createDataFrame(mapping, "entity_id string, canon_id string")
+    probe = names.select("entity_id", "name").limit(driver_threshold + 1).collect()
+    driver = len(probe) <= driver_threshold
+    _log.info(
+        "canonicalize_entities: rows=%d driver_threshold=%d -> %s",
+        len(probe), driver_threshold, "driver" if driver else "distributed",
+    )
+    if driver:
+        mapping = _canonicalize_driver([(r["entity_id"], r["name"]) for r in probe], threshold)
+        return names.sparkSession.createDataFrame(mapping, "entity_id string, canon_id string")
     sigs_holder: list = []
     edges = similarity_edges(
-        entity_names, id_col="entity_id", name_col="name", threshold=threshold,
+        names, id_col="entity_id", name_col="name", threshold=threshold,
         sigs_out=sigs_holder,
     )
     comps = connected_components(edges)
     # every connected_components route has materialized `edges` by now (driver:
-    # collect; twophase/distributed: eager lineage truncation) — the signature
-    # cache has served its purpose and must not accumulate across invocations.
+    # collect; two-phase: eager lineage truncation) — the signature cache has
+    # served its purpose and must not accumulate across invocations.
     for cached in sigs_holder:
         cached.unpersist()
     return (
-        entity_names.select(F.col("entity_id"))
+        names.select(F.col("entity_id"))
         .join(comps.withColumnRenamed("id", "entity_id"), "entity_id", "left")
         .select("entity_id", F.coalesce(F.col("comp"), F.col("entity_id")).alias("canon_id"))
     )

@@ -76,7 +76,6 @@ def contamination_pairs(
     text_col: str = "text",
     bench_id_col: str = "bench_id",
     bench_text_col: str = "text",
-    broadcast_benchmarks: bool = True,
 ) -> DataFrame:
     """(doc, benchmark-item) pairs sharing >= min_common distinct word
     n-grams → (id_col, bench_id_col, n_common_grams), the decontamination
@@ -84,10 +83,9 @@ def contamination_pairs(
 
     Both gram sets are DISTINCT per id, so count(*) over the gram equi-join
     IS the distinct-intersection size — no countDistinct shuffle needed.
-    With broadcast_benchmarks (the normal regime: eval suites are tiny next
-    to the corpus) the corpus never shuffles on grams; only matching pairs
-    reach the aggregation. Set it False when screening against a
-    corpus-sized blocklist — the join then shuffles both sides on gram.
+    The benchmark side is broadcast (eval suites are tiny next to the
+    corpus), so the corpus never shuffles on grams; only matching pairs
+    reach the aggregation.
     """
     # Spread small-file inputs BEFORE the gram explode/probe (guide §2.5
     # input skew / §6 small files): a few-MB parquet corpus arrives as 1-2
@@ -121,10 +119,8 @@ def contamination_pairs(
         F.col(bench_id_col),
         F.explode(word_ngrams(F.col(bench_text_col), n)).alias("gram"),
     )
-    if broadcast_benchmarks:
-        b = F.broadcast(b)
     return (
-        c.join(b, "gram")
+        c.join(F.broadcast(b), "gram")
         .groupBy(id_col, bench_id_col)
         .agg(F.count(F.lit(1)).alias("n_common_grams"))
         .filter(F.col("n_common_grams") >= min_common)

@@ -15,15 +15,41 @@ one round of connected_components, with the same lineage-truncation hazard
 sizes; for hub-heavy graphs cap k small (k=2..3 is what feature pipelines
 use) — an unbounded k is transitive closure, which is what
 connected_components is for.
+
+Join strategy: every iterative operator here knows, driver-side, the exact
+size of the small side of its per-round join (node count, frontier count —
+free once the side is checkpointed). _small_side turns that count into the
+plan choice in ONE place, and logs it: at or below BROADCAST_ROWS the side
+is broadcast, so the O(m) edge side is only streamed; above it the side is
+hinted shuffle-hash, and pagerank/LPA pin their edge side to the join key
+(_pin_by_key) so only the O(n) side moves per round.
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .canonicalize import _truncate_lineage
+
+_log = logging.getLogger(__name__)
+
+#: Row count at or below which a per-round join's small side (rank, label,
+#: contribution or frontier vector) is broadcast. ~50 MB of broadcast per 2M
+#: string-keyed rows.
+BROADCAST_ROWS = 2_000_000
+
+
+def _small_side(df: DataFrame, n: int, site: str) -> DataFrame:
+    """The small side of a join whose exact row count `n` the driver already
+    holds: broadcast at or below BROADCAST_ROWS, shuffle-hash above it. The
+    choice is logged with its site and count."""
+    broadcast = n <= BROADCAST_ROWS
+    _log.info("%s: n=%d -> %s", site, n, "broadcast" if broadcast else "shuffle_hash")
+    return F.broadcast(df) if broadcast else df.hint("shuffle_hash")
 
 
 def _fresh(df: DataFrame) -> DataFrame:
@@ -65,7 +91,6 @@ def khop_reach(
     edges: DataFrame,
     k: int = 2,
     reliable_checkpoint: bool = False,
-    pin_edges: bool = False,
 ) -> DataFrame:
     """Directed reach pairs: (src, dst) such that dst is reachable from src
     in 1..k hops. Self-pairs are ALWAYS excluded — the extension join filters
@@ -90,84 +115,46 @@ def khop_reach(
     # _fresh re-aliases each checkpointed plan because localCheckpoint
     # preserves attribute ids, and joining/unioning two checkpoints that
     # share exprIds trips Catalyst's union constraint rewrite.
-    #
-    # pin_edges: pins the edge set to hashpartitioning(src) via
-    # repartition+persist so the extension join never re-shuffles it — only
-    # the frontier moves per round (the GraphX strategy). Default OFF: an
-    # interleaved sf0.1 A/B measured the pinned shape ~1.7x SLOWER in
-    # local[32] (cache fill + per-round columnar decode outweigh a shuffle
-    # that is memory-speed in one JVM); on a real cluster, where the saved
-    # exchange is O(m) NETWORK movement per round, turn it on when frontiers
-    # stay edge-sized for many rounds (neither join side is ever
-    # broadcastable here, unlike pagerank's rank vector).
     base = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    pinned = _pin_by_key(base, "src", reliable_checkpoint) if pin_edges else None
-    # try/finally (ADVICE r5): an exception mid-iteration (task failure,
-    # cancellation) must not strand the O(m) MEMORY_AND_DISK cache for the
-    # session lifetime.
-    try:
-        pairs = _fresh(pinned) if pin_edges else _fresh(
-            _truncate_lineage(base, reliable_checkpoint)
+    pairs = _fresh(_truncate_lineage(base, reliable_checkpoint))
+    reach = pairs
+    frontier = pairs
+    for _ in range(1, k):
+        # Per-round join strategy (r7, guide §3.1): sort-merge would SORT
+        # both the frontier and the edge set EVERY round (checkpoints
+        # come back unpartitioned, so nothing is ever pre-sorted).
+        # shuffle_hash keeps the same exchanges with zero Sort operators:
+        # the edge set is the build side (uniform hash-partitioned slices
+        # of the deduped pair set — no skew, no oversized build). Same for
+        # the anti-join: reach's (src, dst) keys are unique and
+        # hash-uniform, so its per-partition build is bounded. Measured
+        # (scaled-sf1.0 twin, alternating-order interleaved A/B): won
+        # every paired round, 5.0-6.2 s vs 6.1-10.3 s.
+        ext = (
+            frontier.alias("r")
+            .join(pairs.alias("e").hint("shuffle_hash"), F.col("r.dst") == F.col("e.src"))
+            .select(F.col("r.src").alias("src"), F.col("e.dst").alias("dst"))
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
         )
-        reach = pairs
-        frontier = pairs
-        for _ in range(1, k):
-            # Per-round join strategy (r7, guide §3.1): sort-merge would SORT
-            # both the frontier and the edge set EVERY round (checkpoints
-            # come back unpartitioned, so nothing is ever pre-sorted).
-            # shuffle_hash keeps the same exchanges with zero Sort operators:
-            # in the default path the edge set is the build side (uniform
-            # hash-partitioned slices of the deduped pair set — no skew, no
-            # oversized build); in the pin_edges path the hint sits on the
-            # frontier instead so the PINNED side streams without a sort.
-            # Same for the anti-join: reach's (src, dst) keys are unique and
-            # hash-uniform, so its per-partition build is bounded. Measured
-            # (scaled-sf1.0 twin, alternating-order interleaved A/B): won
-            # every paired round, 5.0-6.2 s vs 6.1-10.3 s.
-            fr = frontier.alias("r")
-            e_side = pairs.alias("e")
-            if pin_edges:
-                fr = fr.hint("shuffle_hash")  # keep the pinned side sort-free
-            else:
-                e_side = e_side.hint("shuffle_hash")
-            ext = (
-                fr.join(e_side, F.col("r.dst") == F.col("e.src"))
-                .select(F.col("r.src").alias("src"), F.col("e.dst").alias("dst"))
-                .filter(F.col("src") != F.col("dst"))
-                .distinct()
+        frontier = _fresh(
+            _truncate_lineage(
+                ext.join(reach.hint("shuffle_hash"), ["src", "dst"], "left_anti"),
+                reliable_checkpoint,
             )
-            frontier = _fresh(
-                _truncate_lineage(
-                    ext.join(
-                        reach.hint("shuffle_hash"), ["src", "dst"], "left_anti"
-                    ),
-                    reliable_checkpoint,
-                )
-            )
-            if frontier.isEmpty():
-                break
-            # LAZY union, deliberately NOT re-checkpointed: every leg of the
-            # union is itself a checkpoint (pairs + each round's frontier),
-            # so lineage depth is bounded at k legs and consumers just scan
-            # the materialized blocks. The old per-round
-            # _truncate_lineage(reach.union(frontier)) re-wrote the ENTIRE
-            # accumulated reach set each round — O(k·|reach|) extra block
-            # writes for zero lineage benefit (guide §1.2: don't compute
-            # things you throw away). pin_edges keeps the old re-checkpoint:
-            # there the first leg is the pinned CACHE, which the finally
-            # unpersists — a lazy union returned to the caller would silently
-            # recompute the whole edge derivation from lineage.
-            if pinned is not None:
-                reach = _fresh(_truncate_lineage(reach.union(frontier), reliable_checkpoint))
-            else:
-                reach = _fresh(reach.union(frontier))
-        if pinned is not None and reach is pairs:
-            # k == 1 or round 1 drained: detach from the cache before unpersist
-            reach = _fresh(_truncate_lineage(pairs, reliable_checkpoint))
-        return reach
-    finally:
-        if pinned is not None:
-            pinned.unpersist()
+        )
+        if frontier.isEmpty():
+            break
+        # LAZY union, deliberately NOT re-checkpointed: every leg of the
+        # union is itself a checkpoint (pairs + each round's frontier),
+        # so lineage depth is bounded at k legs and consumers just scan
+        # the materialized blocks. A per-round
+        # _truncate_lineage(reach.union(frontier)) would re-write the ENTIRE
+        # accumulated reach set each round — O(k·|reach|) extra block
+        # writes for zero lineage benefit (guide §1.2: don't compute
+        # things you throw away).
+        reach = _fresh(reach.union(frontier))
+    return reach
 
 
 #: PageRank mass is carried in integer micro-units of 1e-12 so every sum is
@@ -186,7 +173,6 @@ def pagerank_fixed(
     checkpoint_every: int = 1,
     seeds: list[str] | None = None,
     weight_col: str | None = None,
-    broadcast_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Deterministic fixed-point PageRank over directed (src, dst) edges.
 
@@ -232,13 +218,13 @@ def pagerank_fixed(
     barrier jobs (measured ~11% faster at sf0.1 with 3). The RESULT is
     cadence-independent — the integer arithmetic is exact either way.
 
-    broadcast_nodes: node-count threshold selecting the per-iteration join
-    strategy (the RESULT is identical either side of it — integer math is
-    partitioning-free). At or below it the rank vector is statically
-    broadcast (zero join exchanges per round; ~50 MB of broadcast per 2M
-    nodes); above it the edge list is pinned to hashpartitioning(src) via
-    repartition+persist so only the O(n) rank vector shuffles per round
-    (the GraphX strategy — never the O(m) edges).
+    Join strategy comes from the node count n (module docstring): at or
+    below BROADCAST_ROWS the degree, rank and contribution vectors are
+    broadcast (zero join exchanges per round); above it the edge list is
+    pinned to hashpartitioning(src) via repartition+persist so only the
+    O(n) vectors shuffle per round (the GraphX strategy — never the O(m)
+    edges). The RESULT is identical either way — integer math is
+    partitioning-free.
     """
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
@@ -288,7 +274,7 @@ def pagerank_fixed(
     # only after the iteration's shuffle stage already moved the full edge
     # list — measured: `Exchange hashpartitioning(src)` over the 600k-pair
     # scan feeding a BroadcastHashJoin, every round):
-    #   * rank vector fits a broadcast (n <= broadcast_nodes): keep the
+    #   * rank vector fits a broadcast (n <= BROADCAST_ROWS): keep the
     #     edge list as a plain checkpoint and statically broadcast the
     #     ranks — ZERO exchange on either join side per iteration; only the
     #     contribution aggregation shuffles (its map-side partials reduce
@@ -299,14 +285,14 @@ def pagerank_fixed(
     #     and only the O(n) rank vector shuffles per round — the GraphX
     #     partitioning strategy; shuffle_hash keeps the cached side
     #     sort-free.
-    small_n = n <= broadcast_nodes
+    small_n = n <= BROADCAST_ROWS
     # The per-edge contribution denominator (outdeg(u), or total out-weight
     # W_out(u) in weighted mode) is LOOP-INVARIANT — fold it into the edge
     # list ONCE (VERDICT r4 #1: re-deriving it inside every iteration's plan
     # cost one extra aggregation + join shuffle per round).
     #
     # Join strategy for that one setup join (r7, guide §3.1): the degree
-    # table is NODE-sized — exactly the object small_n already deems
+    # table is NODE-sized — exactly the object n already deems
     # broadcastable for the per-iteration rank join — but left to itself
     # Catalyst picked a SortMergeJoin here (post-aggregate size estimates
     # are unusable), paying an Exchange + TWO Sorts over the full O(m) pair
@@ -320,8 +306,7 @@ def pagerank_fixed(
     else:
         deg_plan = pairs.groupBy(F.col("src")).agg(F.sum("w").alias("outw"))
         contrib_expr = f"((rank * {damping_pct}) DIV 100) * w DIV outw"
-    deg_side = F.broadcast(deg_plan) if small_n else deg_plan.hint("shuffle_hash")
-    deg_pairs_plan = pairs.join(deg_side, "src")
+    deg_pairs_plan = pairs.join(_small_side(deg_plan, n, "pagerank.degree"), "src")
     if small_n:
         deg_pairs = _truncate_lineage(deg_pairs_plan, reliable_checkpoint)
     else:
@@ -345,9 +330,8 @@ def pagerank_fixed(
     # when an iteration fails mid-loop.
     try:
         for i in range(iters):
-            rank_side = ranks.withColumnRenamed("id", "src")
-            rank_side = (
-                F.broadcast(rank_side) if small_n else rank_side.hint("shuffle_hash")
+            rank_side = _small_side(
+                ranks.withColumnRenamed("id", "src"), n, "pagerank.rank"
             )
             contrib = (
                 deg_pairs.join(rank_side, "src")
@@ -358,11 +342,8 @@ def pagerank_fixed(
                 .groupBy("id")
                 .agg(F.sum("c").cast("long").alias("c"))
             )
-            contrib_side = (
-                F.broadcast(contrib) if small_n else contrib.hint("shuffle_hash")
-            )
             ranks = (
-                nodes.join(contrib_side, "id", "left")
+                nodes.join(_small_side(contrib, n, "pagerank.contrib"), "id", "left")
                 .select(
                     "id",
                     (base_col + F.coalesce(F.col("c"), F.lit(0))).alias("rank"),
@@ -380,7 +361,6 @@ def khop_reach_counts(
     edges: DataFrame,
     k: int = 2,
     reliable_checkpoint: bool = False,
-    pin_edges: bool = False,
 ) -> DataFrame:
     """(id, n_reach): number of DISTINCT nodes reachable from id in <= k
     hops — the neighborhood-size feature column. Exact (integer) semantics,
@@ -389,9 +369,7 @@ def khop_reach_counts(
     feature contract, O(n·avg_deg^k) on hub graphs beyond it; the
     bounded-memory scale path for counts is khop_reach_counts_approx."""
     return (
-        khop_reach(
-            edges, k=k, reliable_checkpoint=reliable_checkpoint, pin_edges=pin_edges
-        )
+        khop_reach(edges, k=k, reliable_checkpoint=reliable_checkpoint)
         .groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_reach"))
     )
@@ -590,7 +568,6 @@ def bfs_distances(
     seeds: list[str],
     max_hops: int = 3,
     reliable_checkpoint: bool = False,
-    broadcast_frontier: int = 2_000_000,
 ) -> DataFrame:
     """Multi-source BFS hop distances: (id, dist) for every node reachable
     from ANY seed in <= max_hops directed hops, dist = MINIMUM hop count
@@ -636,17 +613,15 @@ def bfs_distances(
     )
     frontier = visited.select("id")
     # The frontier's exact size is known each round (the checkpoint makes
-    # counting it free), so the extension join's strategy is chosen
-    # explicitly: a broadcastable frontier means the O(m) edge side never
-    # shuffles — for the seeded-proximity contract (|seeds| small, few hops)
-    # every round stays broadcast and the edge list is only ever STREAMED.
-    # A frontier beyond the threshold falls back to the plain shuffle join
-    # (both sides move — the khop_reach regime; see its pin_edges note).
+    # counting it free), so it picks the extension join's strategy: a
+    # broadcastable frontier means the O(m) edge side never shuffles — for
+    # the seeded-proximity contract (|seeds| small, few hops) every round
+    # stays broadcast and the edge list is only ever STREAMED. A frontier
+    # beyond BROADCAST_ROWS is a shuffle-hash build side (both sides move —
+    # the khop_reach regime).
     n_frontier = len(set(seeds))
     for i in range(1, max_hops + 1):
-        f = frontier.alias("f")
-        if n_frontier <= broadcast_frontier:
-            f = F.broadcast(f)
+        f = _small_side(frontier.alias("f"), n_frontier, "bfs_distances.frontier")
         nxt = _fresh(
             _truncate_lineage(
                 f.join(pairs.alias("e"), F.col("f.id") == F.col("e.src"))
@@ -681,7 +656,6 @@ def label_propagation(
     weight_col: str | None = None,
     reliable_checkpoint: bool = False,
     checkpoint_every: int = 1,
-    broadcast_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Deterministic SYNCHRONOUS label propagation over the undirected
     simple graph — the community-detection pass the north-star pipeline
@@ -752,8 +726,8 @@ def label_propagation(
             reliable_checkpoint,
         )
     )
-    small_n = labels.count() <= broadcast_nodes
-    if not small_n:
+    n = labels.count()
+    if n > BROADCAST_ROWS:
         # re-read the checkpointed adjacency (no re-derivation), pinned
         pinned = _pin_by_key(adj, "nb", False)
         adj = _fresh(pinned)
@@ -766,9 +740,8 @@ def label_propagation(
             # the per-id argmax sees at most (distinct labels per id) rows —
             # the hub-safe shape. Collapsing agg+argmax onto one id-shuffle
             # would move every raw vote of a hub into one partition.
-            label_side = labels.select(F.col("id").alias("nb"), "label")
-            label_side = (
-                F.broadcast(label_side) if small_n else label_side.hint("shuffle_hash")
+            label_side = _small_side(
+                labels.select(F.col("id").alias("nb"), "label"), n, "label_propagation.label"
             )
             scores = (
                 adj.join(label_side, "nb")
@@ -805,7 +778,6 @@ def khop_reach_counts_approx(
     k: int = 2,
     lg_config_k: int = 12,
     reliable_checkpoint: bool = False,
-    pin_edges: bool = False,
 ) -> DataFrame:
     """(id, n_reach_approx): HLL-sketch estimate of the <=k-hop reach size —
     the SCALE path for khop_reach_counts (VERDICT r4 #2).
@@ -831,49 +803,29 @@ def khop_reach_counts_approx(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    # pin_edges: pins the loop-invariant edge set to hashpartitioning(dst) —
-    # the per-hop sketch-merge join's key — so no hop re-shuffles it. Same
-    # measured local-mode trade as khop_reach's knob (default OFF; turn on
-    # when the saved exchange is real network movement and k is large —
-    # neither side is broadcastable here: the sketch table is O(n · 2^lgK)
-    # bytes).
     base = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    pairs = (
-        _pin_by_key(base, "dst", reliable_checkpoint)
-        if pin_edges
-        else _truncate_lineage(base, reliable_checkpoint)
-    )
+    pairs = _truncate_lineage(base, reliable_checkpoint)
     lgk = F.lit(lg_config_k)
-    # try/finally (ADVICE r5): release the pinned edge cache on any exit.
-    try:
-        s = (
-            pairs.groupBy("src")
-            .agg(F.hll_sketch_agg("dst", lgk).alias("sk"))
-            .withColumnRenamed("src", "id")
-        )
-        s = _truncate_lineage(s, reliable_checkpoint)
-        for _ in range(1, k):
-            sk_side = s.withColumnRenamed("id", "dst")
-            if pin_edges:
-                sk_side = sk_side.hint("shuffle_hash")
-            s = _truncate_lineage(
-                pairs.join(sk_side, "dst", "left")
-                .groupBy("src")
-                .agg(
-                    F.hll_sketch_agg("dst", lgk).alias("a"),  # direct neighbors
-                    F.hll_union_agg("sk").alias("b"),  # their reach sets (nulls skipped)
-                )
-                .select(
-                    F.col("src").alias("id"),
-                    F.when(F.col("b").isNull(), F.col("a"))
-                    .otherwise(F.hll_union("a", "b"))
-                    .alias("sk"),
-                ),
-                reliable_checkpoint,
+    s = (
+        pairs.groupBy("src")
+        .agg(F.hll_sketch_agg("dst", lgk).alias("sk"))
+        .withColumnRenamed("src", "id")
+    )
+    s = _truncate_lineage(s, reliable_checkpoint)
+    for _ in range(1, k):
+        s = _truncate_lineage(
+            pairs.join(s.withColumnRenamed("id", "dst"), "dst", "left")
+            .groupBy("src")
+            .agg(
+                F.hll_sketch_agg("dst", lgk).alias("a"),  # direct neighbors
+                F.hll_union_agg("sk").alias("b"),  # their reach sets (nulls skipped)
             )
-        return s.select(
-            "id", F.hll_sketch_estimate("sk").cast("long").alias("n_reach_approx")
+            .select(
+                F.col("src").alias("id"),
+                F.when(F.col("b").isNull(), F.col("a"))
+                .otherwise(F.hll_union("a", "b"))
+                .alias("sk"),
+            ),
+            reliable_checkpoint,
         )
-    finally:
-        if pin_edges:
-            pairs.unpersist()
+    return s.select("id", F.hll_sketch_estimate("sk").cast("long").alias("n_reach_approx"))

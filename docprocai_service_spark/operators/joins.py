@@ -11,6 +11,8 @@ does. AQE skew-join stays enabled as the backstop (session.py).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -119,9 +121,11 @@ def skew_aware_join(
         )
     except Exception:
         est_bytes = 0  # unknown -> probe (small/test plans lack stats rarely)
+        logging.getLogger(__name__).warning(
+            "skew_aware_join: largest-leaf size estimate failed; probing anyway",
+            exc_info=True,
+        )
     if est_bytes > max_probe_bytes:
-        import logging
-
         logging.getLogger(__name__).info(
             "skew_aware_join: probe skipped (largest leaf ~%d bytes > "
             "max_probe_bytes=%d); falling back to plain join with AQE "

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.manifest import scan_buckets, write_bucketed
+from .canonicalize import entity_names
 from .linking import reduce_alias_dict
 
 #: Key of the edges table; the store buckets it by the first (src_entity).
@@ -84,10 +85,7 @@ def edges_table(resolved: DataFrame) -> DataFrame:
 def entities_table(alias_dict: DataFrame, canon_map: DataFrame) -> DataFrame:
     """Canonical entity registry: id = MIN member id, name = name of that member,
     member_count = #merged entity ids. Order-free reductions only."""
-    names = alias_dict.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
-    members = canon_map.join(names, "entity_id", "left")
+    members = canon_map.join(entity_names(alias_dict), "entity_id", "left")
     return members.groupBy(F.col("canon_id").alias("entity_id")).agg(
         F.min_by("name", F.col("entity_id")).alias("canonical_name"),
         F.count("*").alias("member_count"),

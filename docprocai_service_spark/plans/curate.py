@@ -118,9 +118,7 @@ def curate_corpus(
         pairs = minhash_near_dup_pairs(
             survivors, threshold=near_dup_threshold, id_col=id_col, text_col=text_col
         ).select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        comps = connected_components(
-            pairs, vertices=survivors.select(F.col(id_col).alias("id")), mode="auto"
-        )
+        comps = connected_components(pairs, vertices=survivors.select(F.col(id_col).alias("id")))
         keep_near = comps.filter(F.col("id") == F.col("comp")).select(
             F.col("id").alias(id_col)
         )

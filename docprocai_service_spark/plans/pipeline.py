@@ -25,7 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonicalize_entities
+from ..operators.canonicalize import canonicalize_entities, entity_names
 from ..operators.extract import extract_stage
 from ..operators.linking import link_mentions
 from ..operators.materialize import EDGE_KEYS, edges_table, entities_table, resolve_entities
@@ -214,13 +214,11 @@ def run_pipeline(
         "linked", lambda: link_mentions(mentions, alias_dict, strategy=link_strategy), ["mention_id"]
     )
 
-    def make_canon() -> DataFrame:
-        names = alias_dict.groupBy("entity_id").agg(
-            F.max_by("alias", F.length("alias")).alias("name")
-        )
-        return canonicalize_entities(names, threshold=canon_threshold)
-
-    canon_map = run_stage("canon_map", make_canon, ["entity_id"])
+    canon_map = run_stage(
+        "canon_map",
+        lambda: canonicalize_entities(entity_names(alias_dict), threshold=canon_threshold),
+        ["entity_id"],
+    )
     # resolved inside `make`: a resumed edges stage never builds the alias map
     edges = run_stage(
         "edges", lambda: edges_table(resolve_entities(triples, alias_dict, canon_map)), EDGE_KEYS

@@ -98,6 +98,21 @@ def fat_binary_scan(spark: SparkSession, batch_rows: int = FAT_SCAN_BATCH):
             spark.conf.set(key, old)
 
 
+def _default_driver_mem() -> str:
+    """min(12g, half of physical RAM). 12g, NOT bigger: on a huge heap (48g)
+    G1 grows the young gen to tens of GB and each young pause copies a
+    massive survivor set — measured 250ms pauses and a 2-5× end-to-end
+    slowdown of the allocation-heavy KG pipeline at 16 threads (a real
+    cluster sizes executor heaps 8-16g per 4-8 cores for the same reason).
+    Half of RAM leaves the other half to the Python workers and the OS on a
+    small host."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf: keep the cap
+        return "12g"
+    return f"{min(12 << 10, ram // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "docprocai_service_spark",
     cores: int | str | None = None,
@@ -140,12 +155,7 @@ def get_spark(
         # pipelining at batch granularity). 1k rows ≈ 5MB batches.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
         .config("spark.sql.session.timeZone", "UTC")
-        # 12g, NOT bigger: on a huge heap (48g) G1 grows the young gen to tens
-        # of GB and each young pause copies a massive survivor set — measured
-        # 250ms pauses and a 2-5× end-to-end slowdown of the allocation-heavy
-        # KG pipeline at 16 threads. A real cluster sizes executor heaps
-        # 8-16g per 4-8 cores for exactly this reason.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet scan batch stays at the 4096 default HERE: a global 256
@@ -167,7 +177,7 @@ def get_spark(
     if lc:
         # Executor JVM sizing: the worker-memory field of local-cluster is the
         # cap; claim all of it for the executor heap. 4-8g per 2-4 cores is
-        # the same shape a real cluster uses (see the 12g driver note above).
+        # the same shape a real cluster uses (see _default_driver_mem).
         builder = builder.config("spark.executor.memory", f"{lc.group(3)}m")
         # Every executor JVM on this ONE box otherwise sizes its GC / JIT /
         # netty thread pools to the MACHINE's core count (32) — n executors

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..operators.canonicalize import canonicalize_entities
+from ..operators.canonicalize import canonicalize_entities, entity_names
 from ..operators.extract import extract_stage
 from ..operators.linking import link_mentions
 from ..operators.materialize import EDGE_KEYS, edges_table, entities_table, resolve_entities
@@ -241,12 +241,9 @@ def _sync_canonical_state(
         store.invalidate("canon_map")
     map_fresh = not store.is_done("canon_map")
     if map_fresh:
-        names = alias_dict.groupBy("entity_id").agg(
-            F.max_by("alias", F.length("alias")).alias("name")
-        )
         store.write(
             "canon_map",
-            canonicalize_entities(names, threshold=canon_threshold),
+            canonicalize_entities(entity_names(alias_dict), threshold=canon_threshold),
             meta={"alias_fp_pending": alias_fp},
         )
     canon_map = store.read("canon_map")
@@ -303,10 +300,7 @@ def _legacy_store_consistent_with(
     (both verified), and entity names are verified directly. One-time cost
     on adoption, all reads — cheaper than the blind exact refresh it avoids
     when the store IS consistent, and exactly as safe when it is not."""
-    names = alias_dict.groupBy("entity_id").agg(
-        F.max_by("alias", F.length("alias")).alias("name")
-    )
-    recomputed = canonicalize_entities(names, threshold=canon_threshold)
+    recomputed = canonicalize_entities(entity_names(alias_dict), threshold=canon_threshold)
     _, want = content_fingerprint(recomputed, ["entity_id", "canon_id"])
     _, have = content_fingerprint(
         store.read("canon_map").select("entity_id", "canon_id"),

@@ -14,6 +14,7 @@ from docprocai_service_spark.functions.hashing import (
 from docprocai_service_spark.operators.canonicalize import (
     canonicalize_entities,
     connected_components,
+    entity_names,
     similarity_edges,
 )
 
@@ -63,20 +64,29 @@ GRAPHS = {
 }
 
 
-@pytest.mark.parametrize("mode", ["driver", "distributed", "twophase"])
+# The two connected_components routes: the default probe sends these small
+# graphs to the driver union-find; driver_threshold=0 forces large-star/
+# small-star.
+ROUTES = {"driver": {}, "twophase": {"driver_threshold": 0}}
+
+
+@pytest.mark.parametrize("mode", sorted(ROUTES))
 @pytest.mark.parametrize("name", sorted(GRAPHS))
 def test_connected_components_micro(spark, name, mode):
     edges, expected = GRAPHS[name]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["id"]: r["comp"] for r in connected_components(df, mode=mode).collect()}
+    got = {r["id"]: r["comp"] for r in connected_components(df, **ROUTES[mode]).collect()}
     assert got == expected
 
 
-@pytest.mark.parametrize("mode", ["driver", "distributed", "twophase"])
+@pytest.mark.parametrize("mode", sorted(ROUTES))
 def test_connected_components_singletons(spark, mode):
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     verts = spark.createDataFrame([("a",), ("b",), ("lonely",)], "id string")
-    got = {r["id"]: r["comp"] for r in connected_components(edges, vertices=verts, mode=mode).collect()}
+    got = {
+        r["id"]: r["comp"]
+        for r in connected_components(edges, vertices=verts, **ROUTES[mode]).collect()
+    }
     assert got == {"a": "a", "b": "a", "lonely": "lonely"}
 
 
@@ -85,9 +95,7 @@ def test_components_unconverged_raises(spark):
     edges, expected = GRAPHS["chain"]
     df = spark.createDataFrame(edges, "src string, dst string")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, mode="distributed", max_iter=1)
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(df, mode="distributed", max_iter=1, on_unconverged="warn")
+        connected_components(df, driver_threshold=0, max_iter=1)
 
 
 def test_components_two_phase_long_chain(spark):
@@ -97,9 +105,10 @@ def test_components_two_phase_long_chain(spark):
     n = 3000  # diameter 2999 ≫ 25 rounds
     edges = [(f"n{i:05d}", f"n{i + 1:05d}") for i in range(n - 1)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, mode="distributed", max_iter=25)
-    got = {r["id"]: r["comp"] for r in connected_components(df, mode="twophase", max_iter=25).collect()}
+    got = {
+        r["id"]: r["comp"]
+        for r in connected_components(df, driver_threshold=0, max_iter=25).collect()
+    }
     assert len(got) == n
     assert set(got.values()) == {"n00000"}  # one component rooted at the min
 
@@ -112,8 +121,8 @@ def test_components_two_phase_matches_driver_random(spark):
     rnd = random.Random(13)
     edges = [(f"v{rnd.randrange(80)}", f"v{rnd.randrange(80)}") for _ in range(150)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    want = sorted(map(tuple, connected_components(df, mode="driver").collect()))
-    got = sorted(map(tuple, connected_components(df, mode="twophase").collect()))
+    want = sorted(map(tuple, connected_components(df).collect()))
+    got = sorted(map(tuple, connected_components(df, driver_threshold=0).collect()))
     assert got == want
 
 
@@ -123,12 +132,14 @@ def test_components_reliable_checkpoint(spark, tmp_path):
     edges, expected = GRAPHS["two_cliques_bridged"]
     df = spark.createDataFrame(edges, "src string, dst string")
     with pytest.raises(ValueError, match="checkpoint dir"):
-        connected_components(df, mode="distributed", reliable_checkpoint=True)
+        connected_components(df, driver_threshold=0, reliable_checkpoint=True)
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         got = {
             r["id"]: r["comp"]
-            for r in connected_components(df, mode="distributed", reliable_checkpoint=True).collect()
+            for r in connected_components(
+                df, driver_threshold=0, reliable_checkpoint=True
+            ).collect()
         }
     finally:
         spark.sparkContext.setCheckpointDir(None)
@@ -137,7 +148,7 @@ def test_components_reliable_checkpoint(spark, tmp_path):
 
 def test_lsh_recall_on_planted_pairs(spark, spark_corpus, corpus):
     _, alias = spark_corpus
-    names = alias.groupBy("entity_id").agg(F.max_by("alias", F.length("alias")).alias("name"))
+    names = entity_names(alias)
     edges = similarity_edges(names, id_col="entity_id", name_col="name", threshold=0.7)
     got_pairs = {tuple(sorted((r["src"], r["dst"]))) for r in edges.collect()}
     for g in corpus.dup_groups:
@@ -146,7 +157,7 @@ def test_lsh_recall_on_planted_pairs(spark, spark_corpus, corpus):
 
 def test_canonicalization_pr_vs_planted(spark, spark_corpus, corpus):
     _, alias = spark_corpus
-    names = alias.groupBy("entity_id").agg(F.max_by("alias", F.length("alias")).alias("name"))
+    names = entity_names(alias)
     mp = {r["entity_id"]: r["canon_id"] for r in canonicalize_entities(names).collect()}
     merged = sum(1 for g in corpus.dup_groups if mp[g[0]] == mp[g[1]])
     assert merged == len(corpus.dup_groups)  # full recall on planted dups
@@ -158,6 +169,29 @@ def test_canonicalization_pr_vs_planted(spark, spark_corpus, corpus):
     assert not spurious  # full precision at this scale
 
 
+def test_canonicalize_distributed_route_matches_driver(spark, spark_corpus):
+    """driver_threshold=0 sends the corpus names through the distributed
+    banded join + components; the mapping must equal the default driver
+    route's."""
+    _, alias = spark_corpus
+    names = entity_names(alias)
+    want = sorted(map(tuple, canonicalize_entities(names).collect()))
+    got = sorted(map(tuple, canonicalize_entities(names, driver_threshold=0).collect()))
+    assert got == want
+    assert len({c for _, c in got}) < len(got)  # some entities did merge
+
+
+def test_entity_names_tie_break_is_order_free(spark):
+    """Longest alias wins; equal-length aliases tie to the lexicographically
+    smallest, whatever order the rows arrive in."""
+    rows = [("acme", "E1"), ("acmx", "E1"), ("ab", "E1"), ("globex", "E2")]
+    got = []
+    for order in (rows, rows[::-1]):
+        df = spark.createDataFrame(order, "alias string, entity_id string").coalesce(1)
+        got.append(sorted(map(tuple, entity_names(df).collect())))
+    assert got[0] == got[1] == [("E1", "acme"), ("E2", "globex")]
+
+
 def test_components_partitioning_invariance(spark):
     import random
 
@@ -167,22 +201,6 @@ def test_components_partitioning_invariance(spark):
     a = sorted(map(tuple, connected_components(df.repartition(2)).collect()))
     b = sorted(map(tuple, connected_components(df.repartition(13)).collect()))
     assert a == b
-
-
-def test_driver_mode_guarded_against_unbounded_collect(spark):
-    """VERDICT r3 #9: explicit mode='driver' used to collect() on trust; it
-    now probes size (bounded limit().count()) and refuses edge sets above
-    driver_threshold unless force_driver=True."""
-    import pytest
-
-    edges = spark.range(50).selectExpr("cast(id as string) as src",
-                                       "cast(id + 1 as string) as dst")
-    with pytest.raises(ValueError, match="driver_threshold"):
-        connected_components(edges, mode="driver", driver_threshold=10)
-    got = connected_components(edges, mode="driver", driver_threshold=10,
-                               force_driver=True)
-    # one chain -> one component rooted at the minimum id
-    assert got.select("comp").distinct().count() == 1
 
 
 def test_skew_aware_join_probe_picks_regime(spark):
@@ -734,14 +752,14 @@ def test_label_propagation_partitioning_invariant(spark):
     assert r1 == r2 == _py_lpa(rows, 5)
 
 
-def test_graph_scale_paths_match_default(spark):
-    """The explicit join-strategy knobs (broadcast vs pinned edge
-    partitioning) must not change any result — integer/set semantics are
-    partitioning-free by contract. Exercises the non-default branch of
-    every size-aware iterative operator."""
+def test_graph_scale_paths_match_default(spark, monkeypatch):
+    """The above-BROADCAST_ROWS join strategy (shuffle-hash small sides,
+    pinned edge partitioning) must not change any result — integer/set
+    semantics are partitioning-free by contract. Exercises the large-n
+    branch of every size-aware iterative operator."""
+    from docprocai_service_spark.operators import graph
     from docprocai_service_spark.operators.graph import (
         bfs_distances,
-        khop_reach_counts,
         label_propagation,
         pagerank_fixed,
     )
@@ -749,63 +767,43 @@ def test_graph_scale_paths_match_default(spark):
     rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
             ("e", "b"), ("a", "d"), ("b", "d")]
     edges = spark.createDataFrame(rows, "src string, dst string")
-
-    pr_b = {r.id: r.rank for r in pagerank_fixed(edges, iters=5).collect()}
-    pr_p = {
-        r.id: r.rank
-        for r in pagerank_fixed(edges, iters=5, broadcast_nodes=0).collect()
-    }
-    assert pr_b == pr_p
-
-    lp_b = {r.id: r.label for r in label_propagation(edges, iters=3).collect()}
-    lp_p = {
-        r.id: r.label
-        for r in label_propagation(edges, iters=3, broadcast_nodes=0).collect()
-    }
-    assert lp_b == lp_p
-
-    kh_d = {r.id: r.n_reach for r in khop_reach_counts(edges, k=3).collect()}
-    kh_p = {
-        r.id: r.n_reach
-        for r in khop_reach_counts(edges, k=3, pin_edges=True).collect()
-    }
-    assert kh_d == kh_p
-
-    bf_b = {r.id: r.dist for r in bfs_distances(edges, ["a"], 3).collect()}
-    bf_s = {
-        r.id: r.dist
-        for r in bfs_distances(edges, ["a"], 3, broadcast_frontier=0).collect()
-    }
-    assert bf_b == bf_s
-
-    # weighted variants through the pinned branch too
     wedges = spark.createDataFrame(
         [(s, d, i + 1) for i, (s, d) in enumerate(rows)],
         "src string, dst string, w long",
     )
-    wpr_b = {
-        r.id: r.rank
-        for r in pagerank_fixed(wedges, iters=4, weight_col="w").collect()
-    }
-    wpr_p = {
-        r.id: r.rank
-        for r in pagerank_fixed(
-            wedges, iters=4, weight_col="w", broadcast_nodes=0
-        ).collect()
-    }
-    assert wpr_b == wpr_p
 
-    wlp_b = {
-        r.id: r.label
-        for r in label_propagation(wedges, iters=3, weight_col="w").collect()
-    }
-    wlp_p = {
-        r.id: r.label
-        for r in label_propagation(
-            wedges, iters=3, weight_col="w", broadcast_nodes=0
-        ).collect()
-    }
-    assert wlp_b == wlp_p
+    def run():
+        return (
+            {r.id: r.rank for r in pagerank_fixed(edges, iters=5).collect()},
+            {r.id: r.label for r in label_propagation(edges, iters=3).collect()},
+            {r.id: r.dist for r in bfs_distances(edges, ["a"], 3).collect()},
+            # weighted variants through the pinned branch too
+            {r.id: r.rank for r in pagerank_fixed(wedges, iters=4, weight_col="w").collect()},
+            {
+                r.id: r.label
+                for r in label_propagation(wedges, iters=3, weight_col="w").collect()
+            },
+        )
+
+    small = run()
+    monkeypatch.setattr(graph, "BROADCAST_ROWS", 0)
+    assert run() == small
+
+
+def test_graph_join_choice_is_logged(spark, caplog, monkeypatch):
+    """Every size-driven plan choice is logged with its site and count."""
+    import logging
+
+    from docprocai_service_spark.operators import graph
+
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    with caplog.at_level(logging.INFO, logger=graph.__name__):
+        graph.bfs_distances(edges, ["a"], 1)
+        monkeypatch.setattr(graph, "BROADCAST_ROWS", 0)
+        graph.label_propagation(edges, iters=1)
+    msgs = [r.getMessage() for r in caplog.records]
+    assert "bfs_distances.frontier: n=1 -> broadcast" in msgs
+    assert "label_propagation.label: n=3 -> shuffle_hash" in msgs
 
 
 def test_skew_probe_size_gate_skips_probe(spark):
