@@ -236,13 +236,18 @@ def main() -> None:
 
 
 def kg_only() -> None:
-    """Subprocess entry for --scaling: KG throughput only, one JSON line."""
+    """Subprocess entry for --scaling: KG throughput only, one JSON line.
+    `jvm_thread_cpu_s` is the driver JVM's CPU over the whole process, by
+    thread group (JIT compilers, GC, task threads, py4j calls)."""
+    from docprocai_service_spark.metrics import jvm_thread_cpu
+
     sf = _sf_of(SF_DIR)
     spark = make_spark(CPUS)
     warmup(spark)
     kg = run_kg(spark, _bench_pages(sf))
+    threads = {k: round(v, 2) for k, v in jvm_thread_cpu(spark).items()}
     spark.stop()
-    print(json.dumps({"cpus": CPUS, **kg}))
+    print(json.dumps({"cpus": CPUS, **kg, "jvm_thread_cpu_s": threads}))
 
 
 def _wait_quiet(wait_s: float | None = None) -> float:

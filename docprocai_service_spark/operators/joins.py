@@ -1,4 +1,4 @@
-"""Skew-aware join utilities (explicit salting + canonical-pair helpers).
+"""Skew-aware join utilities (explicit salting).
 
 The reference never faces skew — it processes one document at a time
 (reference: service/DocProcAiService.py:694-707) and delegates every real join
@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -177,23 +177,3 @@ def skew_aware_join(
             return salted_join(big, small, key=key, salt_on=salt_on, n_salts=n_salts, how=how)
     return big.join(small, key, how)
 
-
-def canonical_pair(c1: Column, c2: Column) -> tuple[Column, Column]:
-    """Order-free edge representation (least, greatest).
-
-    Replaces the reference's symmetric OR-predicate link-exists check
-    (reference: persistence/SegmentDbConnector.py:201-221) with a canonical
-    form so existence checks become plain equi-joins — an OR-join would defeat
-    hash partitioning.
-    """
-    return F.least(c1, c2), F.greatest(c1, c2)
-
-
-def anti_join_on_keys(df: DataFrame, done: DataFrame, keys: list[str]) -> DataFrame:
-    """Rows of df whose key tuple is NOT in done (resume / existence filter).
-
-    Spark plans a left-anti hash join; with AQE the small `done` side is
-    broadcast. This replaces the reference's per-row existence check before
-    insert (reference: service/DocProcAiService.py:360-366).
-    """
-    return df.join(done.select(*keys).distinct(), keys, "left_anti")

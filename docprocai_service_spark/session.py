@@ -9,6 +9,16 @@ Defaults are tuned for the sandbox (local[N], single JVM) but every knob is
 what you would set on a 1000-executor cluster too: AQE for runtime re-planning
 and skew-join mitigation, Arrow for the pandas-UDF fast path, explicit shuffle
 partition count instead of the 200 default.
+
+The driver JVM gets a JIT default (`DRIVER_JIT_OPTIONS`): one C2 compiler
+thread. A batch job runs in a fresh JVM, and C2 otherwise spends about half
+of a cold pass's JVM CPU compiling driver code that runs once per JVM
+(Janino, ASM class reading for closure cleaning, serialization, Catalyst).
+With one C2 thread the compile queue is worked hottest-first and lukewarm
+methods age out of it, while hot task loops still get compiled. It goes in
+`spark.driver.defaultJavaOptions`, not `extraJavaOptions`, so that a
+caller's `extraJavaOptions` (a tmpdir, a heap size) adds to it instead of
+silently replacing it; a caller who sets `defaultJavaOptions` replaces it.
 """
 
 from __future__ import annotations
@@ -113,6 +123,14 @@ def _default_driver_mem() -> str:
     return f"{min(12 << 10, ram // 2 >> 20)}m"
 
 
+# One C1 + one C2 compiler thread, the tiered minimum (HotSpot's default is
+# 3 on 4 cores and grows with the core count). Levers and numbers: CHANGES.md
+# (JIT defaults entry). Raising the tier-4 thresholds cut a little more cold
+# CPU but kept hot task loops in profiled C1 code longer (pagerank_tpch at
+# sf0.1 ~8% slower); TieredStopAtLevel=1 leaves them in C1 code for good.
+DRIVER_JIT_OPTIONS = "-XX:CICompilerCount=2"
+
+
 def get_spark(
     app_name: str = "docprocai_service_spark",
     cores: int | str | None = None,
@@ -156,6 +174,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet scan batch stays at the 4096 default HERE: a global 256

@@ -1,1 +1,1 @@
-"""Table IO: testdata loaders + checkpoint-manifest store (resume semantics)."""
+"""Checkpoint-manifest stage store (resume semantics)."""

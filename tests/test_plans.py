@@ -233,3 +233,30 @@ def test_similarity_exact_verify_single_udf_evaluation(spark):
     # node lines whose UDF list carries jaccard_udf
     jac_nodes = re.findall(r"^.*\bArrowEvalPython \[.*\bjaccard_udf\(.*$", executed, re.M)
     assert len(jac_nodes) == 1, f"expected 1 jaccard ArrowEvalPython, got {len(jac_nodes)}"
+
+
+@pytest.mark.parametrize("splits", [1, 8])
+def test_small_input_spread_guard_repartitions_only_single_split_input(spark, splits):
+    """The `min(par, 8)` spread guard in contamination_pairs and term_counts
+    adds its repartition Exchange only to an input with fewer scan splits than
+    that; a multi-split input plans no repartition. (Plan-required shuffles,
+    e.g. the tf aggregation's, are ENSURE_REQUIREMENTS exchanges and are not
+    counted.)"""
+    from docprocai_service_spark.operators.contamination import contamination_pairs
+    from docprocai_service_spark.operators.tags import term_counts
+
+    assert spark.sparkContext.defaultParallelism >= 8
+    docs = spark.range(0, 64, numPartitions=splits).select(
+        F.col("id").alias("doc_id"), F.lit("x").alias("source"),
+        F.concat(F.lit("the quick brown fox "), F.col("id").cast("string")).alias("text"),
+    )
+    bench = spark.range(0, 4, numPartitions=splits).select(
+        F.col("id").alias("bench_id"), F.lit("the quick brown fox").alias("text"),
+    )
+    spreads = {
+        "contamination": plan_str(contamination_pairs(docs, bench)).count("REPARTITION_BY_NUM"),
+        "tags": plan_str(term_counts(docs)).count("REPARTITION_BY_NUM"),
+    }
+    # single split: the corpus and the benchmark side are each spread once
+    want = {"contamination": 2, "tags": 1} if splits == 1 else {"contamination": 0, "tags": 0}
+    assert spreads == want
