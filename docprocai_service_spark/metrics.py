@@ -36,28 +36,36 @@ def jvm_pid(spark) -> int:
     return int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
 
 
-def jvm_thread_cpu(spark) -> dict[str, float]:
-    """User + system CPU seconds of the driver JVM's live threads, summed by
-    group: `jit_c2`, `jit_c1`, `gc`, `tasks`, `py4j`, `other`.
+def _stat(path: str) -> tuple[str, float]:
+    """Name and utime + stime seconds from one `/proc/.../stat` file."""
+    with open(path) as f:
+        head, _, rest = f.read().rpartition(")")
+    fields = rest.split()
+    # fields[0] is stat field 3 (state); utime and stime are fields 14, 15
+    return head.partition("(")[2], (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
 
-    Threads that have exited are not counted (HotSpot retires idle compiler
-    threads), so the sum is at most the process's own CPU. Returns `{}`
-    where `/proc` is not available."""
-    task_dir = f"/proc/{jvm_pid(spark)}/task"
+
+def jvm_thread_cpu(spark) -> dict[str, float]:
+    """User + system CPU seconds of the driver JVM, summed by thread group:
+    `jit_c2`, `jit_c1`, `gc`, `tasks`, `py4j`, `other`, and `exited`.
+
+    `exited` is the CPU of threads that have already ended (HotSpot retires
+    idle compiler threads, Spark's task pool retires idle workers): the
+    process's own total minus its live threads. The groups add up to the
+    process total. Returns `{}` where `/proc` is not available."""
+    proc = f"/proc/{jvm_pid(spark)}"
     try:
-        tids = os.listdir(task_dir)
+        tids = os.listdir(f"{proc}/task")
     except OSError:
         return {}
-    tick = os.sysconf("SC_CLK_TCK")
     out = dict.fromkeys([name for name, _ in _GROUPS] + ["other"], 0.0)
     for tid in tids:
         try:
-            with open(f"{task_dir}/{tid}/stat") as f:
-                stat = f.read()
+            comm, cpu_s = _stat(f"{proc}/task/{tid}/stat")
         except OSError:  # the thread exited while we listed
             continue
-        head, _, rest = stat.rpartition(")")
-        fields = rest.split()
-        # fields[0] is stat field 3 (state); utime and stime are fields 14, 15
-        out[_group(head.partition("(")[2])] += (int(fields[11]) + int(fields[12])) / tick
+        out[_group(comm)] += cpu_s
+    # the process total is read last, so the remainder is not negative; CPU
+    # that live threads spend between the reads lands in `exited`
+    out["exited"] = max(0.0, _stat(f"{proc}/stat")[1] - sum(out.values()))
     return out

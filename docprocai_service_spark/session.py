@@ -10,13 +10,16 @@ what you would set on a 1000-executor cluster too: AQE for runtime re-planning
 and skew-join mitigation, Arrow for the pandas-UDF fast path, explicit shuffle
 partition count instead of the 200 default.
 
-The driver JVM gets a JIT default (`DRIVER_JIT_OPTIONS`): one C2 compiler
-thread. A batch job runs in a fresh JVM, and C2 otherwise spends about half
-of a cold pass's JVM CPU compiling driver code that runs once per JVM
-(Janino, ASM class reading for closure cleaning, serialization, Catalyst).
-With one C2 thread the compile queue is worked hottest-first and lukewarm
-methods age out of it, while hot task loops still get compiled. It goes in
-`spark.driver.defaultJavaOptions`, not `extraJavaOptions`, so that a
+On a small host the driver JVM gets a JIT default (`DRIVER_JIT_OPTIONS`):
+one C2 compiler thread. A batch job runs in a fresh JVM, and C2 otherwise
+spends about half of a cold pass's JVM CPU compiling driver code that runs
+once per JVM (Janino, ASM class reading for closure cleaning, serialization,
+Catalyst). With one C2 thread the compile queue is worked hottest-first and
+lukewarm methods age out of it, while hot task loops still get compiled. It
+was measured only at `local[4]` on a 4-CPU host, so it is set only for a
+`local[N]` master with N and the host's CPUs both at most
+`DRIVER_JIT_MAX_CPUS` (4); wider hosts keep HotSpot's own compiler count. It
+goes in `spark.driver.defaultJavaOptions`, not `extraJavaOptions`, so that a
 caller's `extraJavaOptions` (a tmpdir, a heap size) adds to it instead of
 silently replacing it; a caller who sets `defaultJavaOptions` replaces it.
 """
@@ -129,6 +132,32 @@ def _default_driver_mem() -> str:
 # CPU but kept hot task loops in profiled C1 code longer (pagerank_tpch at
 # sf0.1 ~8% slower); TieredStopAtLevel=1 leaves them in C1 code for good.
 DRIVER_JIT_OPTIONS = "-XX:CICompilerCount=2"
+# Every measurement of DRIVER_JIT_OPTIONS ran 4 task threads on 4 CPUs. On a
+# wider host HotSpot's own count grows (~12 compiler threads at 32 cores) and
+# more task threads' hot loops would queue behind the one C2 thread; that was
+# not measured, so the default stops at this bound.
+DRIVER_JIT_MAX_CPUS = 4
+
+_LOCAL = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
+
+
+def _host_cpus() -> int:
+    """CPUs this process may run on (the JVM it launches inherits them)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _driver_jit_options(master: str) -> str | None:
+    """DRIVER_JIT_OPTIONS for a `local[N]` master within DRIVER_JIT_MAX_CPUS
+    task threads and host CPUs, else None (HotSpot's defaults). Masters whose
+    tasks run in other JVMs (`local-cluster`, a cluster URL) get None too."""
+    m = _LOCAL.fullmatch(master)
+    if m is None:
+        return None
+    host = _host_cpus()
+    slots = host if m.group(1) == "*" else int(m.group(1) or 1)
+    return DRIVER_JIT_OPTIONS if max(slots, host) <= DRIVER_JIT_MAX_CPUS else None
 
 
 def get_spark(
@@ -174,7 +203,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
-        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Parquet scan batch stays at the 4096 default HERE: a global 256
@@ -193,6 +221,9 @@ def get_spark(
         # JVM case mapping is identical for the ASCII join keys used here.
         .config("spark.sql.icu.caseMappings.enabled", "false")
     )
+    jit = _driver_jit_options(master)
+    if jit:
+        builder = builder.config("spark.driver.defaultJavaOptions", jit)
     if lc:
         # Executor JVM sizing: the worker-memory field of local-cluster is the
         # cap; claim all of it for the executor heap. 4-8g per 2-4 cores is
