@@ -703,14 +703,14 @@ def kg_mentions_docs(spark, sf_dir):
 
 
 def kg_linked_docs(spark, sf_dir):
-    """REAL link_mentions (prereduced broadcast + NIL keep) over the
+    """REAL link_mentions (pre-reduced dictionary lookup + NIL keep) over the
     constructed corpus with an inline dictionary, oracle-checked — pins
     the disambiguation total order (max prior, ties -> min entity_id)."""
     from docprocai_service_spark.operators.linking import link_mentions
     from docprocai_service_spark.operators.triples import fused_triples_stage, mentions_stage
 
     m = mentions_stage(fused_triples_stage(_kg_pages_from_documents(spark, sf_dir)))
-    linked = link_mentions(m, _kg_alias_df(spark), strategy="prereduced")
+    linked = link_mentions(m, _kg_alias_df(spark))
     return linked.select(
         "mention_id", "surface", "entity_id", F.round("link_score", 6).alias("link_score")
     )

@@ -18,38 +18,22 @@ connected_components is for.
 
 Join strategy: every iterative operator here knows, driver-side, the exact
 size of the small side of its per-round join (node count, frontier count —
-free once the side is checkpointed). _small_side turns that count into the
-plan choice in ONE place, and logs it: at or below BROADCAST_ROWS the side
-is broadcast, so the O(m) edge side is only streamed; above it the side is
-hinted shuffle-hash, and pagerank/LPA pin their edge side to the join key
-(_pin_by_key) so only the O(n) side moves per round.
+free once the side is checkpointed). joins.small_side, the package's one
+chooser, turns that count into the plan choice and logs it: at or below
+joins.BROADCAST_ROWS the side is broadcast, so the O(m) edge side is only
+streamed; above it the side is hinted shuffle-hash, and pagerank/LPA pin
+their edge side to the join key (_pin_by_key) so only the O(n) side moves
+per round.
 """
 
 from __future__ import annotations
-
-import logging
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import joins
 from .canonicalize import _truncate_lineage
-
-_log = logging.getLogger(__name__)
-
-#: Row count at or below which a per-round join's small side (rank, label,
-#: contribution or frontier vector) is broadcast. ~50 MB of broadcast per 2M
-#: string-keyed rows.
-BROADCAST_ROWS = 2_000_000
-
-
-def _small_side(df: DataFrame, n: int, site: str) -> DataFrame:
-    """The small side of a join whose exact row count `n` the driver already
-    holds: broadcast at or below BROADCAST_ROWS, shuffle-hash above it. The
-    choice is logged with its site and count."""
-    broadcast = n <= BROADCAST_ROWS
-    _log.info("%s: n=%d -> %s", site, n, "broadcast" if broadcast else "shuffle_hash")
-    return F.broadcast(df) if broadcast else df.hint("shuffle_hash")
 
 
 def _fresh(df: DataFrame) -> DataFrame:
@@ -285,7 +269,7 @@ def pagerank_fixed(
     #     and only the O(n) rank vector shuffles per round — the GraphX
     #     partitioning strategy; shuffle_hash keeps the cached side
     #     sort-free.
-    small_n = n <= BROADCAST_ROWS
+    small_n = n <= joins.BROADCAST_ROWS
     # The per-edge contribution denominator (outdeg(u), or total out-weight
     # W_out(u) in weighted mode) is LOOP-INVARIANT — fold it into the edge
     # list ONCE (VERDICT r4 #1: re-deriving it inside every iteration's plan
@@ -306,7 +290,7 @@ def pagerank_fixed(
     else:
         deg_plan = pairs.groupBy(F.col("src")).agg(F.sum("w").alias("outw"))
         contrib_expr = f"((rank * {damping_pct}) DIV 100) * w DIV outw"
-    deg_pairs_plan = pairs.join(_small_side(deg_plan, n, "pagerank.degree"), "src")
+    deg_pairs_plan = pairs.join(joins.small_side(deg_plan, n, "pagerank.degree"), "src")
     if small_n:
         deg_pairs = _truncate_lineage(deg_pairs_plan, reliable_checkpoint)
     else:
@@ -330,7 +314,7 @@ def pagerank_fixed(
     # when an iteration fails mid-loop.
     try:
         for i in range(iters):
-            rank_side = _small_side(
+            rank_side = joins.small_side(
                 ranks.withColumnRenamed("id", "src"), n, "pagerank.rank"
             )
             contrib = (
@@ -343,7 +327,7 @@ def pagerank_fixed(
                 .agg(F.sum("c").cast("long").alias("c"))
             )
             ranks = (
-                nodes.join(_small_side(contrib, n, "pagerank.contrib"), "id", "left")
+                nodes.join(joins.small_side(contrib, n, "pagerank.contrib"), "id", "left")
                 .select(
                     "id",
                     (base_col + F.coalesce(F.col("c"), F.lit(0))).alias("rank"),
@@ -621,7 +605,7 @@ def bfs_distances(
     # the khop_reach regime).
     n_frontier = len(set(seeds))
     for i in range(1, max_hops + 1):
-        f = _small_side(frontier.alias("f"), n_frontier, "bfs_distances.frontier")
+        f = joins.small_side(frontier.alias("f"), n_frontier, "bfs_distances.frontier")
         nxt = _fresh(
             _truncate_lineage(
                 f.join(pairs.alias("e"), F.col("f.id") == F.col("e.src"))
@@ -727,7 +711,7 @@ def label_propagation(
         )
     )
     n = labels.count()
-    if n > BROADCAST_ROWS:
+    if n > joins.BROADCAST_ROWS:
         # re-read the checkpointed adjacency (no re-derivation), pinned
         pinned = _pin_by_key(adj, "nb", False)
         adj = _fresh(pinned)
@@ -740,7 +724,7 @@ def label_propagation(
             # the per-id argmax sees at most (distinct labels per id) rows —
             # the hub-safe shape. Collapsing agg+argmax onto one id-shuffle
             # would move every raw vote of a hub into one partition.
-            label_side = _small_side(
+            label_side = joins.small_side(
                 labels.select(F.col("id").alias("nb"), "label"), n, "label_propagation.label"
             )
             scores = (

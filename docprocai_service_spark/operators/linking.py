@@ -1,24 +1,26 @@
-"""Stage 3 — candidate entity linking + disambiguation (capability C6).
+"""Stage 3 — entity linking + disambiguation (capability C6).
 
 The reference's analog is a whitelist lookup followed by a Python argmax loop
 over similarity scores (reference: persistence/SegmentDbConnector.py:228-258,
-service/DocProcAiService.py:739-753). Here:
+service/DocProcAiService.py:739-753). Here disambiguation is context-free
+(score = prior), so the argmax commutes with the join:
 
-  candidate generation  = broadcast hash join against the alias dictionary
-                          (zero shuffle on the 100 TB side), or a salted
-                          shuffle join when the dictionary exceeds broadcast
-                          size — both paths produce identical rows.
-  disambiguation argmax = row_number() over Window.partitionBy(mention_id)
-                          with a total order (score desc, entity_id asc) so
-                          ties break deterministically — never `first()`
-                          (SURVEY.md §7 hard-parts list).
+  disambiguation argmax = reduce_alias_dict: row_number() over
+                          Window.partitionBy(alias) with a total order
+                          (prior desc, entity_id asc) so ties break
+                          deterministically — never `first()` (SURVEY.md §7
+                          hard-parts list). It runs on the dictionary side
+                          only (a shuffle of ~10⁴ rows).
+  candidate lookup      = one left equi-join of the mention stream on
+                          lower(surface) = alias against that one-row-per-
+                          alias map; unmatched mentions stay (NIL linking).
 
-Scale notes: the window shuffles on mention_id, which is a sha256 — uniform,
-unskewed. The *alias* key IS Zipf-skewed ("acme" maps to many entities and
-appears in a huge fraction of mentions); in the shuffle-join path that skew
-lands on the join itself, which is why `salted_join` salts on mention_id —
-spreading each hot alias across n_salts partitions while replicating only the
-dictionary.
+The reduced dictionary is pinned and broadcast (joins.pinned_broadcast), so
+the mention stream is never shuffled — the whole stage is narrow, and the
+Zipf skew of the alias key ("acme" appears in a huge fraction of mentions)
+never meets a shuffle. The broadcast is unconditional: the dictionary is the
+one build side that grows with the KG, and a size guard for it is open work
+(ROADMAP Direction 4).
 """
 
 from __future__ import annotations
@@ -26,86 +28,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .joins import salted_join, skew_aware_join
-
-
-def candidate_links(
-    mentions: DataFrame,
-    alias_dict: DataFrame,
-    strategy: str = "broadcast",
-    n_salts: int = 8,
-) -> DataFrame:
-    """mentions × alias_dict on lower(surface) = alias → candidate rows.
-
-    Unmatched mentions are kept (NIL linking) with null entity_id/prior.
-
-    strategy='skew_aware': the beyond-broadcast path with the published
-    ablation encoded — a bounded hot-key probe picks the plain shuffle join
-    at mild skew (salting there is a measured 0.69× LOSS) and the salted
-    join only when a hub alias dominates (2.32× win); see
-    joins.skew_aware_join. 'salted' remains the explicit always-salt form.
-    """
-    m = mentions.withColumn("alias", F.lower(F.col("surface")))
-    if strategy == "broadcast":
-        cand = m.join(F.broadcast(alias_dict), "alias", "left")
-    elif strategy == "salted":
-        cand = salted_join(m, alias_dict, key="alias", salt_on="mention_id", n_salts=n_salts)
-    elif strategy == "skew_aware":
-        cand = skew_aware_join(m, alias_dict, key="alias", salt_on="mention_id", n_salts=n_salts)
-    else:
-        raise ValueError(f"unknown strategy: {strategy}")
-    return cand.drop("alias")
-
-
-def disambiguate(candidates: DataFrame) -> DataFrame:
-    """Keep the best candidate per mention: max prior, ties → min entity_id."""
-    w = Window.partitionBy("mention_id").orderBy(
-        F.desc_nulls_last("prior"), F.asc_nulls_last("entity_id")
-    )
-    return (
-        candidates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .withColumnRenamed("prior", "link_score")
-    )
+from .joins import pinned_broadcast
 
 
 def reduce_alias_dict(alias_dict: DataFrame) -> DataFrame:
-    """Pre-reduce the dictionary to the single best entity per alias.
-
-    When disambiguation is context-free (score = prior), the argmax commutes
-    with the join: reduce the tiny dictionary side first (shuffle of ~10⁴
-    rows), then the broadcast join needs NO shuffle on the mention side at
-    all — the whole linking stage becomes narrow. This is the 100 TB default;
-    the window path above exists for context-dependent scoring.
-    """
+    """Pre-reduce the dictionary to the single best entity per alias: max
+    prior, ties → min entity_id."""
     w = Window.partitionBy("alias").orderBy(F.desc("prior"), F.asc("entity_id"))
     return alias_dict.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def link_mentions(
-    mentions: DataFrame,
-    alias_dict: DataFrame,
-    strategy: str = "prereduced",
-    n_salts: int = 8,
-) -> DataFrame:
-    """mentions → linked_mentions(…, entity_id, link_score); entity_id null = NIL.
-
-    strategy: 'prereduced' (default, narrow), 'broadcast' (window argmax),
-    'salted' (always-salted shuffle join + window argmax), 'skew_aware'
-    (beyond-broadcast-size path with the hot-key probe choosing plain vs
-    salted — the 100 TB default when the dictionary outgrows broadcast).
-    """
-    if strategy == "prereduced":
-        # Materialize the tiny reduced dictionary BEFORE broadcasting: a
-        # BroadcastExchange whose child is a window aggregation stalls for
-        # tens of seconds in AQE planning (observed 30-60s); with the 2-column
-        # dict pinned, the broadcast build is milliseconds.
-        best = reduce_alias_dict(alias_dict).localCheckpoint()
-        m = mentions.withColumn("alias", F.lower(F.col("surface")))
-        return (
-            m.join(F.broadcast(best), "alias", "left")
-            .drop("alias")
-            .withColumnRenamed("prior", "link_score")
-        )
-    return disambiguate(candidate_links(mentions, alias_dict, strategy, n_salts))
+def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """mentions → linked_mentions(…, entity_id, link_score); entity_id null = NIL."""
+    best = pinned_broadcast(reduce_alias_dict(alias_dict))
+    m = mentions.withColumn("alias", F.lower(F.col("surface")))
+    return (
+        m.join(best, "alias", "left")
+        .drop("alias")
+        .withColumnRenamed("prior", "link_score")
+    )

@@ -5,11 +5,11 @@ Replaces the reference's per-row INSERT loops and upserts
 from service/DocProcAiService.py:122-130) with batched, partitioned,
 idempotent DataFrame writes.
 
-Plan shape for edges: the subj/obj → entity resolution is TWO broadcast joins
-against the (pre-reduced, tiny) alias dictionary plus one broadcast join
-against the canon mapping — the 100 TB triple stream is never shuffled until
-the final groupBy(src, dst, pred), whose keys are entity ids (salting for the
-head-entity skew is inherited from AQE + the bucketed layout).
+Plan shape for edges: the subj/obj → entity resolution is TWO broadcast
+joins against one alias→resolved-id map (the pre-reduced dictionary composed
+with the canon mapping) — the 100 TB triple stream is never shuffled until
+the final groupBy(src, dst, pred), whose keys are entity ids (head-entity
+skew there is left to AQE + the bucketed layout).
 
 Output layout: `edges_table` and `entities_table` return exactly the F3
 schemas; the store writes the edges stage bucketed by src_entity
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..sources.manifest import scan_buckets, write_bucketed
 from .canonicalize import entity_names
+from .joins import pinned_broadcast
 from .linking import reduce_alias_dict
 
 #: Key of the edges table; the store buckets it by the first (src_entity).
@@ -48,24 +49,19 @@ def resolve_entities(triples: DataFrame, alias_dict: DataFrame, canon_map: DataF
     # shape probed two broadcast tables per side — four joins over the O(n)
     # triple stream; coalesce(canon, entity) is a pure function of the
     # dictionary rows, so composing it on the ~10⁴-row side is free and
-    # halves the per-row probes). localCheckpoint before broadcast for the
-    # same reason link_mentions pins its reduced dict: a BroadcastExchange
-    # whose child contains a window aggregation can stall in AQE planning.
-    best = reduce_alias_dict(alias_dict)
-    amap = (
-        best.join(
-            canon_map.select("entity_id", "canon_id"), "entity_id", "left"
-        )
+    # halves the per-row probes).
+    amap = pinned_broadcast(
+        reduce_alias_dict(alias_dict)
+        .join(canon_map.select("entity_id", "canon_id"), "entity_id", "left")
         .select(
             F.col("alias").alias("__alias"),
             F.coalesce("canon_id", "entity_id").alias("__rid"),
         )
-        .localCheckpoint()
     )
 
     def link_side(df: DataFrame, surface_col: str, out_col: str) -> DataFrame:
         df = df.withColumn("__alias", F.lower(F.col(surface_col)))
-        df = df.join(F.broadcast(amap), "__alias", "left")
+        df = df.join(amap, "__alias", "left")
         resolved = F.coalesce(
             F.col("__rid"),
             F.concat(F.lit("NIL:"), F.sha2(F.lower(F.col(surface_col)), 256)),

@@ -108,7 +108,6 @@ def run_pipeline(
     pages: DataFrame,
     alias_dict: DataFrame,
     out_dir: str | None = None,
-    link_strategy: str = "prereduced",
     canon_threshold: float = 0.7,
     resume: bool = True,
     collect_lineage: bool = True,
@@ -210,9 +209,7 @@ def run_pipeline(
 
     triples = run_stage("triples", make_triples, ["url", "warc_ts", "sent_no"])
     mentions = run_stage("mentions", lambda: mentions_stage(triples), ["mention_id"])
-    linked = run_stage(
-        "linked", lambda: link_mentions(mentions, alias_dict, strategy=link_strategy), ["mention_id"]
-    )
+    linked = run_stage("linked", lambda: link_mentions(mentions, alias_dict), ["mention_id"])
 
     canon_map = run_stage(
         "canon_map",

@@ -165,8 +165,8 @@ class StageStore:
 
     def annotate(self, stage: str, meta: dict) -> None:
         """Merge extra keys into a committed stage's manifest (atomic
-        rename) — e.g. stamping a legacy canon_map with the alias-dict
-        fingerprint it is assumed to derive from."""
+        rename) — e.g. stamping canon_map with the alias-dict fingerprint
+        once everything downstream of it has been refreshed."""
         doc = self.manifest(stage)
         doc.update(meta)
         tmp = self._manifest_path(stage) + ".tmp"

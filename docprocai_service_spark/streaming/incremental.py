@@ -185,28 +185,12 @@ def _sync_canonical_state(
     window the previous protocol had. Similarly, a `linked` stage without a
     manifest (torn write) is rebuilt from the full mentions stage, never
     append_new-ed with only the current batch (which would overwrite and
-    permanently drop prior links). Legacy stores whose canon_map carries
-    neither stamp (pre-fingerprint batch runs) are adopted by EVIDENCE, not
-    assumption (ADVICE r5): the map is recomputed from the dictionary this
-    batch carries and compared content-for-content with the stored map —
-    identical content stamps the store consistent; different content means
-    a DIFFERENT dictionary built it, and the store routes into the exact
-    refresh exactly as a detected dict change would.
+    permanently drop prior links). A canon_map that carries neither stamp
+    (a store from before the fingerprint protocol) matches no dictionary, so
+    it counts as stale and takes the exact refresh.
     """
     _, alias_fp = content_fingerprint(alias_dict, ["alias", "entity_id", "prior"])
     man = store.manifest("canon_map") if store.is_done("canon_map") else None
-    if man is not None and "alias_fp" not in man and "alias_fp_pending" not in man:
-        if _legacy_store_consistent_with(store, alias_dict, canon_threshold):
-            store.annotate("canon_map", {"alias_fp": alias_fp})
-        else:
-            # sentinel stamps: both differ from alias_fp, so map_stale below
-            # triggers invalidate + recompute + exact downstream refresh
-            store.annotate(
-                "canon_map",
-                {"alias_fp": "__legacy_dict_mismatch__",
-                 "alias_fp_pending": "__legacy_dict_mismatch__"},
-            )
-        man = store.manifest("canon_map")
     # The dictionary CONTENT changed vs what the map was built from → map and
     # everything downstream are stale (the reference re-derives groupings on
     # every ingest, service/DocProcAiService.py:186-189).
@@ -279,50 +263,6 @@ def _sync_canonical_state(
     # refresh-complete stamp: ONLY now may a replay treat downstream state as
     # consistent with this dictionary
     store.annotate("canon_map", {"alias_fp": alias_fp})
-
-
-def _legacy_store_consistent_with(
-    store: StageStore, alias_dict: DataFrame, canon_threshold: float
-) -> bool:
-    """Evidence for adopting a stamp-less legacy store under `alias_dict`
-    (ADVICE r5): the dictionary the legacy batch ran with is unrecorded, so
-    consistency must be PROVEN from content — and the canon_map alone is not
-    enough (two dictionaries can canonicalize identically yet link mentions
-    or name entities differently). Three read-only fingerprint comparisons,
-    each over the stage the dictionary feeds directly:
-
-      1. canon_map  == canonicalize(dictionary's names)         [dict-sized]
-      2. linked     == link_mentions(stored mentions, dict)     [O(mentions)]
-      3. entities   == entities_table(dict, stored canon_map)   [dict-sized]
-
-    Together these cover every dictionary-dependent output: edges derive
-    from the same alias→entity resolution that linking uses plus the map
-    (both verified), and entity names are verified directly. One-time cost
-    on adoption, all reads — cheaper than the blind exact refresh it avoids
-    when the store IS consistent, and exactly as safe when it is not."""
-    recomputed = canonicalize_entities(entity_names(alias_dict), threshold=canon_threshold)
-    _, want = content_fingerprint(recomputed, ["entity_id", "canon_id"])
-    _, have = content_fingerprint(
-        store.read("canon_map").select("entity_id", "canon_id"),
-        ["entity_id", "canon_id"],
-    )
-    if want != have:
-        return False
-    if store.is_done("linked") and store.is_done("mentions"):
-        relinked = link_mentions(store.read("mentions"), alias_dict)
-        cols = relinked.columns
-        _, want = content_fingerprint(relinked, cols)
-        _, have = content_fingerprint(store.read("linked").select(*cols), cols)
-        if want != have:
-            return False
-    if store.is_done("entities"):
-        ents = entities_table(alias_dict, store.read("canon_map"))
-        cols = ents.columns
-        _, want = content_fingerprint(ents, cols)
-        _, have = content_fingerprint(store.read("entities").select(*cols), cols)
-        if want != have:
-            return False
-    return True
 
 
 def _link_backlog(store: StageStore, alias_dict: DataFrame) -> None:

@@ -8,7 +8,7 @@ Cluster usage (zip the package so executors can import it):
         --input  <web-pages parquet/iceberg path> \
         --alias  <alias-dict parquet path | 'synthetic'> \
         --output <stage-store root> \
-        [--resume] [--link-strategy prereduced|broadcast|salted]
+        [--resume]
 
 Sandbox smoke (driver-generated corpus, local master):
 
@@ -37,8 +37,6 @@ def main() -> None:
                     help="generate N synthetic pages instead of --input (sandbox)")
     ap.add_argument("--resume", action="store_true", default=True)
     ap.add_argument("--no-resume", dest="resume", action="store_false")
-    ap.add_argument("--link-strategy", default="prereduced",
-                    choices=["prereduced", "broadcast", "salted"])
     args = ap.parse_args()
 
     # Under spark-submit the session is provided by the launcher; the factory
@@ -68,7 +66,6 @@ def main() -> None:
         pages,
         alias,
         out_dir=args.output,
-        link_strategy=args.link_strategy,
         resume=args.resume,
     )
     print(json.dumps(result.metrics))

@@ -203,42 +203,6 @@ def test_components_partitioning_invariance(spark):
     assert a == b
 
 
-def test_skew_aware_join_probe_picks_regime(spark):
-    """VERDICT r3 #6: the published ablation (salting wins 2.32x on a hub,
-    costs 0.69x at mild skew) encoded as a probe — plain join under mild
-    skew, salted under a 50%-hub key; identical rows either way."""
-    from pyspark.sql import functions as F
-
-    from docprocai_service_spark.operators.joins import salted_join, skew_aware_join
-
-    dim = spark.createDataFrame(
-        [(f"k{i}", i) for i in range(50)] + [("hub", 999)], "key string, val int"
-    )
-    mild = spark.range(4000).select(
-        F.col("id").alias("rid"), F.concat(F.lit("k"), (F.col("id") % 50).cast("string")).alias("key")
-    )
-    hub = spark.range(4000).select(
-        F.col("id").alias("rid"),
-        F.when(F.col("id") % 2 == 0, F.lit("hub"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 50).cast("string"))).alias("key"),
-    )
-
-    def plan_of(df):
-        return df._jdf.queryExecution().analyzed().toString()
-
-    j_mild = skew_aware_join(mild, dim, key="key", salt_on="rid")
-    j_hub = skew_aware_join(hub, dim, key="key", salt_on="rid")
-    assert "__salt" not in plan_of(j_mild)  # mild skew: salting would be a net cost
-    assert "__salt" in plan_of(j_hub)  # hub regime: salting pays
-
-    # row-identical to the explicit variants in BOTH regimes
-    def key_rows(df):
-        return sorted(map(tuple, df.select("rid", "key", "val").collect()))
-
-    assert key_rows(j_mild) == key_rows(mild.join(dim, "key", "left"))
-    assert key_rows(j_hub) == key_rows(salted_join(hub, dim, key="key", salt_on="rid"))
-
-
 def test_khop_reach_counts_exact_small_graph(spark):
     """BFS reach on a hand-built DAG with a diamond + chain: exact integer
     neighborhood sizes per k."""
@@ -328,67 +292,6 @@ def test_pagerank_empty_edge_set_returns_empty(spark):
     out = pagerank_fixed(spark.createDataFrame([], "src string, dst string"))
     assert out.columns == ["id", "rank"]
     assert out.count() == 0
-
-
-def test_skew_probe_unbiased_under_key_clustering(spark):
-    """VERDICT r4 #3: an input range-partitioned/sorted by the join key
-    clusters the hub into partitions a prefix probe (limit) never read. The
-    stratified per-partition probe reads a bounded prefix of EVERY
-    partition, so it still detects the hub — and still stays plain when
-    sorted mild skew puts a single key-run at every partition head."""
-    from pyspark.sql import functions as F
-
-    from docprocai_service_spark.operators.joins import skew_aware_join
-
-    dim = spark.createDataFrame(
-        [(f"k{i}", i) for i in range(50)] + [("zhub", 999)], "key string, val int"
-    )
-    # 50% hub key "zhub" sorts AFTER every cold key -> tail partitions only
-    hub = spark.range(4000).select(
-        F.col("id").alias("rid"),
-        F.when(F.col("id") % 2 == 0, F.lit("zhub"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 50).cast("string")))
-        .alias("key"),
-    ).repartitionByRange(8, "key").sortWithinPartitions("key")
-    mild = spark.range(4000).select(
-        F.col("id").alias("rid"),
-        F.concat(F.lit("k"), (F.col("id") % 50).cast("string")).alias("key"),
-    ).repartitionByRange(8, "key").sortWithinPartitions("key")
-
-    def plan_of(df):
-        return df._jdf.queryExecution().analyzed().toString()
-
-    j_hub = skew_aware_join(hub, dim, key="key", salt_on="rid", probe_rows=400)
-    assert "__salt" in plan_of(j_hub)  # hub seen despite tail clustering
-    j_mild = skew_aware_join(mild, dim, key="key", salt_on="rid", probe_rows=400)
-    assert "__salt" not in plan_of(j_mild)  # key-runs at partition heads: no false salt
-
-    def key_rows(df):
-        return sorted(map(tuple, df.select("rid", "key", "val").collect()))
-
-    assert key_rows(j_hub) == key_rows(hub.join(dim, "key", "left"))
-    assert key_rows(j_mild) == key_rows(mild.join(dim, "key", "left"))
-
-
-def test_skew_probe_no_false_salt_on_sorted_uniform_few_partitions(spark):
-    """Review r5 repro: 10 uniform keys range-sorted into TWO partitions —
-    each partition's prefix is one key run that scales to ~50% of the
-    table. Without corroboration the probe salted a mild-skew input (the
-    regime where the ablation measured salting as a 0.69x LOSS)."""
-    from pyspark.sql import functions as F
-
-    from docprocai_service_spark.operators.joins import skew_aware_join
-
-    dim = spark.createDataFrame([(f"k{i}", i) for i in range(10)], "key string, val int")
-    uniform = spark.range(4000).select(
-        F.col("id").alias("rid"),
-        F.concat(F.lit("k"), (F.col("id") % 10).cast("string")).alias("key"),
-    ).repartitionByRange(2, "key").sortWithinPartitions("key")
-    j = skew_aware_join(uniform, dim, key="key", salt_on="rid", probe_rows=400)
-    assert "__salt" not in j._jdf.queryExecution().analyzed().toString()
-    got = sorted(map(tuple, j.select("rid", "key", "val").collect()))
-    want = sorted(map(tuple, uniform.join(dim, "key", "left").select("rid", "key", "val").collect()))
-    assert got == want
 
 
 def test_graph_param_guards(spark):
@@ -757,7 +660,7 @@ def test_graph_scale_paths_match_default(spark, monkeypatch):
     pinned edge partitioning) must not change any result — integer/set
     semantics are partitioning-free by contract. Exercises the large-n
     branch of every size-aware iterative operator."""
-    from docprocai_service_spark.operators import graph
+    from docprocai_service_spark.operators import joins
     from docprocai_service_spark.operators.graph import (
         bfs_distances,
         label_propagation,
@@ -786,7 +689,7 @@ def test_graph_scale_paths_match_default(spark, monkeypatch):
         )
 
     small = run()
-    monkeypatch.setattr(graph, "BROADCAST_ROWS", 0)
+    monkeypatch.setattr(joins, "BROADCAST_ROWS", 0)
     assert run() == small
 
 
@@ -794,37 +697,13 @@ def test_graph_join_choice_is_logged(spark, caplog, monkeypatch):
     """Every size-driven plan choice is logged with its site and count."""
     import logging
 
-    from docprocai_service_spark.operators import graph
+    from docprocai_service_spark.operators import graph, joins
 
     edges = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
-    with caplog.at_level(logging.INFO, logger=graph.__name__):
+    with caplog.at_level(logging.INFO, logger=joins.__name__):
         graph.bfs_distances(edges, ["a"], 1)
-        monkeypatch.setattr(graph, "BROADCAST_ROWS", 0)
+        monkeypatch.setattr(joins, "BROADCAST_ROWS", 0)
         graph.label_propagation(edges, iters=1)
     msgs = [r.getMessage() for r in caplog.records]
     assert "bfs_distances.frontier: n=1 -> broadcast" in msgs
     assert "label_propagation.label: n=3 -> shuffle_hash" in msgs
-
-
-def test_skew_probe_size_gate_skips_probe(spark):
-    """ADVICE r5: the stratified probe is a full key-column scan; above
-    max_probe_bytes skew_aware_join must skip it entirely (plain join, AQE
-    backstop) while staying row-identical — forced here with a zero
-    threshold so even a hub input goes unprobed and unsalted."""
-    from pyspark.sql import functions as F
-
-    from docprocai_service_spark.operators.joins import skew_aware_join
-
-    dim = spark.createDataFrame(
-        [(f"k{i}", i) for i in range(50)] + [("hub", 999)], "key string, val int"
-    )
-    hub = spark.range(4000).select(
-        F.col("id").alias("rid"),
-        F.when(F.col("id") % 2 == 0, F.lit("hub"))
-        .otherwise(F.concat(F.lit("k"), (F.col("id") % 50).cast("string"))).alias("key"),
-    )
-    j = skew_aware_join(hub, dim, key="key", salt_on="rid", max_probe_bytes=0)
-    assert "__salt" not in j._jdf.queryExecution().analyzed().toString()
-    assert sorted(map(tuple, j.select("rid", "key", "val").collect())) == sorted(
-        map(tuple, hub.join(dim, "key", "left").select("rid", "key", "val").collect())
-    )

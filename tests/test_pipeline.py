@@ -735,11 +735,11 @@ def test_dict_change_detected_on_empty_batch(spark, spark_corpus, tmp_path):
 
 
 def test_legacy_store_adoption_verifies_dictionary(spark, spark_corpus, tmp_path):
-    """ADVICE r5: a legacy canon_map (neither alias_fp nor alias_fp_pending —
-    pre-fingerprint batch runs) must be adopted by EVIDENCE: touched with the
-    SAME dictionary its content derives from it stamps consistent and merges
-    normally; touched with a DIFFERENT dictionary it must route into the
-    exact refresh instead of silently merging stale links/edges."""
+    """A legacy canon_map (neither alias_fp nor alias_fp_pending —
+    pre-fingerprint batch runs) matches no dictionary: touched with the SAME
+    dictionary or a DIFFERENT one, it routes into the exact refresh, is
+    stamped, and converges to the lazy pipeline under that dictionary —
+    never a silent merge onto stale links/edges."""
     import json
     import os
 
@@ -754,13 +754,17 @@ def test_legacy_store_adoption_verifies_dictionary(spark, spark_corpus, tmp_path
         json.dump(man, open(tmp, "w"))
         os.replace(tmp, p)
 
-    # same dictionary: adoption stamps consistent, no rebuild
+    # same dictionary: no stamp counts as stale -> exact refresh, stamped
     s1 = StageStore(spark, str(tmp_path / "legacy_same"))
     incremental_ingest(spark, pages, s1, alias_dict=alias)
     strip_stamps(s1)
     m = incremental_ingest(spark, pages.limit(0), s1, alias_dict=alias)
-    assert not m.get("rebuilt_for_dict_change")
+    assert m.get("rebuilt_for_dict_change")
     assert "alias_fp" in s1.manifest("canon_map")
+    full1 = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
+    assert _edges_key(s1.read("edges")) == _edges_key(full1.edges)
+    full1.triples.unpersist()
+    full1.canon_map.unpersist()
 
     # different dictionary: content mismatch -> exact refresh, converging to
     # the full pipeline under the NEW dictionary

@@ -45,7 +45,7 @@ def test_linking_is_broadcast_join_no_bigside_shuffle(spark, spark_corpus):
 
     pages, alias = spark_corpus
     m = mentions_stage(triples_stage(extract_stage(pages)))
-    linked = link_mentions(m, alias, strategy="prereduced")
+    linked = link_mentions(m, alias)
     p = plan_str(linked)
     assert "BroadcastHashJoin" in p
     # the mention stream must NOT shuffle: the only Exchange is the broadcast
