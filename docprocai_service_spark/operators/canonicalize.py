@@ -15,8 +15,10 @@ Determinism: canonical id = MIN(member id) per component — an order-free
 reduction, never `first()`; signatures are pure functions of the name
 (functions/hashing.py); an entity's name is its longest alias, ties to the
 lexicographically smallest (entity_names). The distributed rounds
-localCheckpoint() every round to truncate lineage (the known plan-size
-hazard of iterative DataFrame jobs, SURVEY.md §4.2).
+truncate lineage every round (the known plan-size hazard of iterative
+DataFrame jobs, SURVEY.md §4.2) through _truncate_lineage, which the
+session drives for this module and graph.py alike: checkpoint() to the
+checkpoint dir when one is set, localCheckpoint() otherwise.
 
 Routing: both operators pick driver vs distributed from a probe count
 bounded by `driver_threshold` — the only selector — and log the route with
@@ -151,21 +153,19 @@ def similarity_edges(
     return scored.filter(F.col("sim") >= threshold).select("src", "dst", "sim")
 
 
-def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
-    """localCheckpoint is the local[N] fast path, but it stores blocks
-    non-replicated on executors — on a real cluster a lost executor kills the
-    job (lineage is gone, so no recompute). With reliable=True the blocks go
-    to the configured checkpoint dir (sc.setCheckpointDir — HDFS/S3 on a
-    cluster) and survive executor loss."""
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable checkpointing requested but no checkpoint dir set; "
-                "call spark.sparkContext.setCheckpointDir(...) first"
-            )
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
+def _truncate_lineage(df: DataFrame) -> DataFrame:
+    """Materialize `df` and cut its lineage, as the session decides: with a
+    checkpoint dir set (sc.setCheckpointDir — HDFS/S3 on a cluster),
+    checkpoint(eager=True) writes the blocks there and they survive executor
+    loss; without one, localCheckpoint() is the local[N] fast path. Its
+    blocks are not replicated and have no lineage to recompute from, so on a
+    cluster a lost executor kills the job."""
+    ckpt_dir = df.sparkSession.sparkContext.getCheckpointDir()
+    _log.info(
+        "truncate_lineage: checkpoint_dir=%s -> %s",
+        ckpt_dir, "checkpoint" if ckpt_dir else "localCheckpoint",
+    )
+    return df.checkpoint(eager=True) if ckpt_dir else df.localCheckpoint()
 
 
 def connected_components(
@@ -173,7 +173,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iter: int = 25,
     driver_threshold: int = 200_000,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Undirected connected components → (id, comp) with comp = MIN(id) in component.
 
@@ -200,16 +199,13 @@ def connected_components(
     )
     if driver:
         return _components_driver(edges, vertices)
-    return _components_two_phase(
-        edges, vertices, max_iter=max_iter, reliable_checkpoint=reliable_checkpoint
-    )
+    return _components_two_phase(edges, vertices, max_iter=max_iter)
 
 
 def _components_two_phase(
     edges: DataFrame,
     vertices: DataFrame | None,
     max_iter: int = 25,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond", Algorithm 2/3) — the
@@ -236,7 +232,7 @@ def _components_two_phase(
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
     )
-    pairs = _truncate_lineage(pairs, reliable_checkpoint)
+    pairs = _truncate_lineage(pairs)
     # Capture the FULL vertex set once, from the input plan, while upstream
     # caches (e.g. similarity_edges' signature persist) are still alive — the
     # isolated-vertex fill after the loop must not replay the raw `edges`
@@ -247,7 +243,7 @@ def _components_two_phase(
     )
     if vertices is not None:
         all_ids = all_ids.union(vertices.select("id"))
-    all_ids = _truncate_lineage(all_ids.distinct(), reliable_checkpoint)
+    all_ids = _truncate_lineage(all_ids.distinct())
     converged = False
     for _ in range(max_iter):
         # ---- large-star: center every node; attach larger neighbors to min
@@ -275,7 +271,7 @@ def _components_two_phase(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        new_pairs = _truncate_lineage(small, reliable_checkpoint)
+        new_pairs = _truncate_lineage(small)
         # fixed point: identical edge sets (both are distinct + normalized,
         # so equal counts + empty one-way difference ⇒ set equality)
         if (

@@ -16,6 +16,11 @@ sizes; for hub-heavy graphs cap k small (k=2..3 is what feature pipelines
 use) — an unbounded k is transitive closure, which is what
 connected_components is for.
 
+Lineage truncation: every operator here truncates through
+canonicalize._truncate_lineage, so the session decides how, not a per-call
+option: with a checkpoint dir set the rounds are checkpointed there and
+survive executor loss; without one they are localCheckpointed.
+
 Join strategy: every iterative operator here knows, driver-side, the exact
 size of the small side of its per-round join (node count, frontier count —
 free once the side is checkpointed). joins.small_side, the package's one
@@ -45,7 +50,7 @@ def _fresh(df: DataFrame) -> DataFrame:
     return df.select([F.col(c).alias(c) for c in df.columns])
 
 
-def _pin_by_key(df: DataFrame, key: str, reliable_checkpoint: bool) -> DataFrame:
+def _pin_by_key(df: DataFrame, key: str) -> DataFrame:
     """Materialize a LOOP-INVARIANT join input pinned to hashpartitioning on
     `key` — the GraphX partitioning strategy, expressed in DataFrames.
 
@@ -60,22 +65,16 @@ def _pin_by_key(df: DataFrame, key: str, reliable_checkpoint: bool) -> DataFrame
     every round's join streams the big side with ZERO exchange and ZERO
     sort (shuffle-hash) — only the small varying side (ranks/labels/
     frontier) shuffles, O(n) instead of O(m) per round. MEMORY_AND_DISK
-    spills instead of evicting; on block loss the lineage recomputes.
-    reliable_checkpoint=True additionally cuts the upstream lineage to the
-    checkpoint dir first (executor-loss contract, same as the rounds).
+    spills instead of evicting. Both callers pass a plan rooted at a
+    _truncate_lineage checkpoint, so a lost block replays from that
+    checkpoint — reliable whenever the session has a checkpoint dir.
     Callers unpersist() after the loop's last round is materialized."""
-    if reliable_checkpoint:
-        df = _truncate_lineage(df, True)
     pinned = df.repartition(F.col(key)).persist(StorageLevel.MEMORY_AND_DISK)
     pinned.count()
     return pinned
 
 
-def khop_reach(
-    edges: DataFrame,
-    k: int = 2,
-    reliable_checkpoint: bool = False,
-) -> DataFrame:
+def khop_reach(edges: DataFrame, k: int = 2) -> DataFrame:
     """Directed reach pairs: (src, dst) such that dst is reachable from src
     in 1..k hops. Self-pairs are ALWAYS excluded — the extension join filters
     src != dst too, so a cycle back to the start node does not produce
@@ -92,15 +91,15 @@ def khop_reach(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    # reliable_checkpoint=True writes round outputs to the configured
-    # checkpoint dir (HDFS/S3 on a cluster) so an executor loss mid-iteration
-    # cannot kill the job — same contract as connected_components.
+    # Round outputs go to the session's checkpoint dir when one is set
+    # (_truncate_lineage), so an executor loss mid-iteration cannot kill the
+    # job — same contract as connected_components.
     # The deduped edge set is checkpointed ONCE and reused every round;
     # _fresh re-aliases each checkpointed plan because localCheckpoint
     # preserves attribute ids, and joining/unioning two checkpoints that
     # share exprIds trips Catalyst's union constraint rewrite.
     base = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    pairs = _fresh(_truncate_lineage(base, reliable_checkpoint))
+    pairs = _fresh(_truncate_lineage(base))
     reach = pairs
     frontier = pairs
     for _ in range(1, k):
@@ -123,8 +122,7 @@ def khop_reach(
         )
         frontier = _fresh(
             _truncate_lineage(
-                ext.join(reach.hint("shuffle_hash"), ["src", "dst"], "left_anti"),
-                reliable_checkpoint,
+                ext.join(reach.hint("shuffle_hash"), ["src", "dst"], "left_anti")
             )
         )
         if frontier.isEmpty():
@@ -153,7 +151,6 @@ def pagerank_fixed(
     edges: DataFrame,
     iters: int = 10,
     damping_pct: int = 85,
-    reliable_checkpoint: bool = False,
     checkpoint_every: int = 1,
     seeds: list[str] | None = None,
     weight_col: str | None = None,
@@ -220,21 +217,17 @@ def pagerank_fixed(
     # end-to-end when the distinct was left lazy and the upstream re-ran
     # inside the deg_pairs job — exchange reuse does not cross jobs).
     if weight_col is None:
-        pairs = _truncate_lineage(
-            edges.select("src", "dst").distinct(), reliable_checkpoint
-        )
+        pairs = _truncate_lineage(edges.select("src", "dst").distinct())
     else:
         pairs = _truncate_lineage(
             edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
             .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w")),
-            reliable_checkpoint,
+            .agg(F.sum("w").alias("w"))
         )
     nodes = _truncate_lineage(
         pairs.select(F.col("src").alias("id"))
         .union(pairs.select(F.col("dst").alias("id")))
-        .distinct(),
-        reliable_checkpoint,
+        .distinct()
     )
     n = nodes.count()
     if n == 0:
@@ -292,9 +285,9 @@ def pagerank_fixed(
         contrib_expr = f"((rank * {damping_pct}) DIV 100) * w DIV outw"
     deg_pairs_plan = pairs.join(joins.small_side(deg_plan, n, "pagerank.degree"), "src")
     if small_n:
-        deg_pairs = _truncate_lineage(deg_pairs_plan, reliable_checkpoint)
+        deg_pairs = _truncate_lineage(deg_pairs_plan)
     else:
-        deg_pairs = _pin_by_key(deg_pairs_plan, "src", reliable_checkpoint)
+        deg_pairs = _pin_by_key(deg_pairs_plan, "src")
     if seeds is None:
         base_col = F.lit(((100 - damping_pct) * PR_SCALE // 100) // n).cast("long")
         init_col = F.lit(PR_SCALE // n).cast("long")
@@ -334,18 +327,14 @@ def pagerank_fixed(
                 )
             )
             if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-                ranks = _truncate_lineage(ranks, reliable_checkpoint)
+                ranks = _truncate_lineage(ranks)
         return ranks
     finally:
         if not small_n:
             deg_pairs.unpersist()
 
 
-def khop_reach_counts(
-    edges: DataFrame,
-    k: int = 2,
-    reliable_checkpoint: bool = False,
-) -> DataFrame:
+def khop_reach_counts(edges: DataFrame, k: int = 2) -> DataFrame:
     """(id, n_reach): number of DISTINCT nodes reachable from id in <= k
     hops — the neighborhood-size feature column. Exact (integer) semantics,
     so it carries a full SQL oracle (unlike sketch-based ops). Inherits
@@ -353,13 +342,13 @@ def khop_reach_counts(
     feature contract, O(n·avg_deg^k) on hub graphs beyond it; the
     bounded-memory scale path for counts is khop_reach_counts_approx."""
     return (
-        khop_reach(edges, k=k, reliable_checkpoint=reliable_checkpoint)
+        khop_reach(edges, k=k)
         .groupBy(F.col("src").alias("id"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_reach"))
     )
 
 
-def triangle_counts(edges: DataFrame, reliable_checkpoint: bool = False) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """(id, n_triangles): number of triangles each node participates in,
     over the UNDIRECTED simple graph induced by the edge set (direction and
     multiplicity dropped, self-loops removed) — the local-clustering feature
@@ -389,8 +378,7 @@ def triangle_counts(edges: DataFrame, reliable_checkpoint: bool = False) -> Data
                 F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
             )
             .filter(F.col("a") != F.col("b"))
-            .distinct(),
-            reliable_checkpoint,
+            .distinct()
         )
     )
     deg = (
@@ -411,8 +399,7 @@ def triangle_counts(edges: DataFrame, reliable_checkpoint: bool = False) -> Data
             withdeg.select(
                 F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("src"),
                 F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-            ),
-            reliable_checkpoint,
+            )
         )
     )
     # wedges at each apex: unordered pairs of out-neighbors (lexicographic
@@ -458,7 +445,6 @@ def common_neighbor_scores(
     edges: DataFrame,
     min_common: int = 1,
     max_apex_degree: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Link prediction over the undirected simple graph: for each NON-adjacent
     node pair (u, v) sharing at least `min_common` neighbors, emit
@@ -489,8 +475,7 @@ def common_neighbor_scores(
                 F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
             )
             .filter(F.col("a") != F.col("b"))
-            .distinct(),
-            reliable_checkpoint,
+            .distinct()
         )
     )
     # deg is consumed three times (cap filter, du join, dv join) — node-sized,
@@ -500,8 +485,7 @@ def common_neighbor_scores(
             und.select(F.col("a").alias("n"))
             .unionAll(und.select(F.col("b").alias("n")))
             .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d")),
-            reliable_checkpoint,
+            .agg(F.count(F.lit(1)).alias("d"))
         )
     )
     # Deliberately NOT broadcast: an interleaved best-of ablation at sf0.1
@@ -551,7 +535,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: list[str],
     max_hops: int = 3,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distances: (id, dist) for every node reachable
     from ANY seed in <= max_hops directed hops, dist = MINIMUM hop count
@@ -589,9 +572,7 @@ def bfs_distances(
     # factor off the per-round scan (guide §2.4: remove shuffles outright);
     # the checkpoint still materializes the projection once so rounds never
     # replay the caller's edge derivation.
-    pairs = _fresh(
-        _truncate_lineage(edges.select("src", "dst"), reliable_checkpoint)
-    )
+    pairs = _fresh(_truncate_lineage(edges.select("src", "dst")))
     visited = spark.createDataFrame(
         [(s, 0) for s in sorted(set(seeds))], "id string, dist int"
     )
@@ -617,8 +598,7 @@ def bfs_distances(
                 # nothing (same khop rationale; measured small-but-consistent
                 # on the scaled twin: 3.76 vs 3.88 s best, winner in the
                 # quiet paired rounds)
-                .join(visited.hint("shuffle_hash"), "id", "left_anti"),
-                reliable_checkpoint,
+                .join(visited.hint("shuffle_hash"), "id", "left_anti")
             )
         )
         n_frontier = nxt.count()
@@ -626,8 +606,7 @@ def bfs_distances(
             break
         visited = _fresh(
             _truncate_lineage(
-                visited.union(nxt.withColumn("dist", F.lit(i).cast("int"))),
-                reliable_checkpoint,
+                visited.union(nxt.withColumn("dist", F.lit(i).cast("int")))
             )
         )
         frontier = nxt
@@ -638,7 +617,6 @@ def label_propagation(
     edges: DataFrame,
     iters: int = 4,
     weight_col: str | None = None,
-    reliable_checkpoint: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Deterministic SYNCHRONOUS label propagation over the undirected
@@ -703,17 +681,16 @@ def label_propagation(
         und.select(F.col("b").alias("id"), F.col("a").alias("nb"), "w")
     )
     pinned = None
-    adj = _fresh(_truncate_lineage(adj_plan, reliable_checkpoint))
+    adj = _fresh(_truncate_lineage(adj_plan))
     labels = _fresh(
         _truncate_lineage(
-            adj.select("id").distinct().withColumn("label", F.col("id")),
-            reliable_checkpoint,
+            adj.select("id").distinct().withColumn("label", F.col("id"))
         )
     )
     n = labels.count()
     if n > joins.BROADCAST_ROWS:
         # re-read the checkpointed adjacency (no re-derivation), pinned
-        pinned = _pin_by_key(adj, "nb", False)
+        pinned = _pin_by_key(adj, "nb")
         adj = _fresh(pinned)
     # try/finally (ADVICE r5): release the pinned adjacency cache even when
     # an iteration raises.
@@ -750,7 +727,7 @@ def label_propagation(
                 .select("id", F.col("m.label").alias("label"))
             )
             if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-                labels = _fresh(_truncate_lineage(labels, reliable_checkpoint))
+                labels = _fresh(_truncate_lineage(labels))
         return labels
     finally:
         if pinned is not None:
@@ -761,7 +738,6 @@ def khop_reach_counts_approx(
     edges: DataFrame,
     k: int = 2,
     lg_config_k: int = 12,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """(id, n_reach_approx): HLL-sketch estimate of the <=k-hop reach size —
     the SCALE path for khop_reach_counts (VERDICT r4 #2).
@@ -788,14 +764,14 @@ def khop_reach_counts_approx(
     if k < 1:
         raise ValueError("k must be >= 1")
     base = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-    pairs = _truncate_lineage(base, reliable_checkpoint)
+    pairs = _truncate_lineage(base)
     lgk = F.lit(lg_config_k)
     s = (
         pairs.groupBy("src")
         .agg(F.hll_sketch_agg("dst", lgk).alias("sk"))
         .withColumnRenamed("src", "id")
     )
-    s = _truncate_lineage(s, reliable_checkpoint)
+    s = _truncate_lineage(s)
     for _ in range(1, k):
         s = _truncate_lineage(
             pairs.join(s.withColumnRenamed("id", "dst"), "dst", "left")
@@ -809,7 +785,6 @@ def khop_reach_counts_approx(
                 F.when(F.col("b").isNull(), F.col("a"))
                 .otherwise(F.hll_union("a", "b"))
                 .alias("sk"),
-            ),
-            reliable_checkpoint,
+            )
         )
     return s.select("id", F.hll_sketch_estimate("sk").cast("long").alias("n_reach_approx"))

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.manifest import scan_buckets, write_bucketed
-from .canonicalize import entity_names
+from .canonicalize import _truncate_lineage, entity_names
 from .joins import pinned_broadcast
 from .linking import reduce_alias_dict
 
@@ -174,10 +174,8 @@ def _bfs_neighborhood(
                 f"frontier of {len(frontier)} exceeds max_frontier={max_frontier}; "
                 "use khop_reach/graph ops for bulk neighborhoods"
             )
-        hop_edges = (
-            pruned_edge_scan(spark, path, frontier, key_col=key_col)
-            .withColumn("hop", F.lit(hop))
-            .localCheckpoint()
+        hop_edges = _truncate_lineage(
+            pruned_edge_scan(spark, path, frontier, key_col=key_col).withColumn("hop", F.lit(hop))
         )
         seen_edges = (
             hop_edges if seen_edges is None else seen_edges.unionByName(hop_edges)

@@ -18,6 +18,7 @@ of the reference's per-task progress reporting
 
 from __future__ import annotations
 
+import logging
 import time
 from dataclasses import dataclass, field
 
@@ -32,6 +33,8 @@ from ..operators.materialize import EDGE_KEYS, edges_table, entities_table, reso
 from ..operators.triples import fused_triples_stage, mentions_stage, triples_stage
 from ..session import fat_binary_scan
 from ..sources.manifest import StageStore, content_fingerprint
+
+_log = logging.getLogger(__name__)
 
 
 def lineage_rows(df: DataFrame, stage: str, key_cols: list[str], rows_in: int, wall_ms: int) -> DataFrame:
@@ -96,11 +99,14 @@ class PipelineResult:
         return n
 
     def _obs_fired(self) -> bool:
-        """Non-blocking: has the observe() node seen an action complete?"""
+        """Non-blocking: has the observe() node seen an action complete? A
+        probe that fails (Observation internals changed) is logged and read
+        as "not fired", so n_triples counts directly."""
         try:
             return bool(self.triples_obs._jo.getRowOrEmpty().isDefined())
         except Exception:
-            return False  # Observation internals unavailable → use count()
+            _log.warning("n_triples: observation probe failed -> count()", exc_info=True)
+            return False
 
 
 def run_pipeline(
@@ -108,7 +114,6 @@ def run_pipeline(
     pages: DataFrame,
     alias_dict: DataFrame,
     out_dir: str | None = None,
-    canon_threshold: float = 0.7,
     resume: bool = True,
     collect_lineage: bool = True,
 ) -> PipelineResult:
@@ -212,9 +217,7 @@ def run_pipeline(
     linked = run_stage("linked", lambda: link_mentions(mentions, alias_dict), ["mention_id"])
 
     canon_map = run_stage(
-        "canon_map",
-        lambda: canonicalize_entities(entity_names(alias_dict), threshold=canon_threshold),
-        ["entity_id"],
+        "canon_map", lambda: canonicalize_entities(entity_names(alias_dict)), ["entity_id"]
     )
     # resolved inside `make`: a resumed edges stage never builds the alias map
     edges = run_stage(

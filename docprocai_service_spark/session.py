@@ -160,6 +160,39 @@ def _driver_jit_options(master: str) -> str | None:
     return DRIVER_JIT_OPTIONS if max(slots, host) <= DRIVER_JIT_MAX_CPUS else None
 
 
+#: The session's runtime SQL settings. Every key is runtime-settable
+#: (spark.conf.isModifiable), so a session this module did not build — the
+#: one spark-submit hands jobs/run_kg_job.py — gets them with spark.conf.set.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # 1000, not 10000: with ~5KB html rows a 10k-row Arrow batch is ~50MB
+    # resident per task on BOTH sides of the Python boundary — measured 2×
+    # slower than 1k batches at 16 threads (cache locality + JVM/Python
+    # pipelining at batch granularity). 1k rows ≈ 5MB batches.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "1000",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Parquet scan batch stays at the 4096 default HERE: a global 256
+    # taxes every narrow-table scan ~15-30% (16× more per-batch overhead
+    # for rows of a few dozen bytes — measured q1 1.04s@256 vs 0.89s@4096
+    # at 16 cores). The 256 batch is the right size ONLY for fat binary
+    # columns (~5KB html rows), where 4096-row batches are ~20MB
+    # OnHeapColumnVector arrays — G1-humongous for 4-8MB regions, 15×
+    # scan-CPU inflation under small-heap executors. That case is scoped
+    # per-workload via fat_binary_scan() above (the conf is execution-
+    # time, and parquet exposes no per-read option for it — verified
+    # against ParquetFileFormat, which reads only the SQLConf).
+    # Spark 4's ICU case mappings trigger CollationAwareUTF8String.<clinit>
+    # on the first lower()/upper() inside a codegen'd stage — observed
+    # 25-45s with all executor threads serialized on the class-init lock.
+    # JVM case mapping is identical for the ASCII join keys used here.
+    "spark.sql.icu.caseMappings.enabled": "false",
+}
+
+
 def get_spark(
     app_name: str = "docprocai_service_spark",
     cores: int | str | None = None,
@@ -192,34 +225,9 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 1000, not 10000: with ~5KB html rows a 10k-row Arrow batch is ~50MB
-        # resident per task on BOTH sides of the Python boundary — measured 2×
-        # slower than 1k batches at 16 threads (cache locality + JVM/Python
-        # pipelining at batch granularity). 1k rows ≈ 5MB batches.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Parquet scan batch stays at the 4096 default HERE: a global 256
-        # taxes every narrow-table scan ~15-30% (16× more per-batch overhead
-        # for rows of a few dozen bytes — measured q1 1.04s@256 vs 0.89s@4096
-        # at 16 cores). The 256 batch is the right size ONLY for fat binary
-        # columns (~5KB html rows), where 4096-row batches are ~20MB
-        # OnHeapColumnVector arrays — G1-humongous for 4-8MB regions, 15×
-        # scan-CPU inflation under small-heap executors. That case is scoped
-        # per-workload via fat_binary_scan() below (the conf is execution-
-        # time, and parquet exposes no per-read option for it — verified
-        # against ParquetFileFormat, which reads only the SQLConf).
-        # Spark 4's ICU case mappings trigger CollationAwareUTF8String.<clinit>
-        # on the first lower()/upper() inside a codegen'd stage — observed
-        # 25-45s with all executor threads serialized on the class-init lock.
-        # JVM case mapping is identical for the ASCII join keys used here.
-        .config("spark.sql.icu.caseMappings.enabled", "false")
+        .config(map=SQL_CONF)
     )
     jit = _driver_jit_options(master)
     if jit:

@@ -50,7 +50,6 @@ def incremental_ingest(
     new_pages: DataFrame,
     store: StageStore,
     alias_dict: DataFrame | None = None,
-    canon_threshold: float = 0.7,
     features: bool = False,
 ) -> dict:
     """Process only not-yet-done (url, warc_ts) keys; append/merge per stage.
@@ -80,7 +79,7 @@ def incremental_ingest(
     no-op when this batch left the edge content unchanged, so the flag
     costs one agg per caught-up batch.
     """
-    out = _incremental_ingest(spark, new_pages, store, alias_dict, canon_threshold)
+    out = _incremental_ingest(spark, new_pages, store, alias_dict)
     if features:
         if alias_dict is None:
             raise ValueError("features=True requires alias_dict (full-DAG batches)")
@@ -93,7 +92,6 @@ def _incremental_ingest(
     new_pages: DataFrame,
     store: StageStore,
     alias_dict: DataFrame | None,
-    canon_threshold: float,
 ) -> dict:
     from ..session import fat_binary_scan
 
@@ -107,8 +105,7 @@ def _incremental_ingest(
             # stamp (one cheap agg on a dimension table) and repair if — and
             # only if — something is stale; a consistent store is untouched.
             _sync_canonical_state(
-                store, alias_dict, canon_threshold, batch_mentions=None, out=out,
-                only_if_stale=True,
+                store, alias_dict, batch_mentions=None, out=out, only_if_stale=True
             )
         return out
     if store.is_done("edges") and not store.is_done("edges_pages"):
@@ -148,9 +145,7 @@ def _incremental_ingest(
     store.append_new("mentions", mentions, keys=["mention_id"])
     out = {"new_pages": n_new, "new_triples": triples.count()}
     if alias_dict is not None:
-        _sync_canonical_state(
-            store, alias_dict, canon_threshold, batch_mentions=mentions, out=out
-        )
+        _sync_canonical_state(store, alias_dict, batch_mentions=mentions, out=out)
     with fat_binary_scan(spark):
         # normally served from the persisted cache; on eviction this re-runs
         # the html scan, so it gets the fat-scan batch size too
@@ -163,7 +158,6 @@ def _incremental_ingest(
 def _sync_canonical_state(
     store: StageStore,
     alias_dict: DataFrame,
-    canon_threshold: float,
     batch_mentions: DataFrame | None,
     out: dict,
     only_if_stale: bool = False,
@@ -225,9 +219,11 @@ def _sync_canonical_state(
         store.invalidate("canon_map")
     map_fresh = not store.is_done("canon_map")
     if map_fresh:
+        # canonicalize_entities' own threshold, as in run_pipeline: the
+        # manifest does not record it, so no store path may use another
         store.write(
             "canon_map",
-            canonicalize_entities(entity_names(alias_dict), threshold=canon_threshold),
+            canonicalize_entities(entity_names(alias_dict)),
             meta={"alias_fp_pending": alias_fp},
         )
     canon_map = store.read("canon_map")

@@ -4,11 +4,16 @@ Cluster usage (zip the package so executors can import it):
 
     cd /root/repo && zip -qr /tmp/docprocai_service_spark.zip docprocai_service_spark
     spark-submit --py-files /tmp/docprocai_service_spark.zip \
+        --conf spark.checkpoint.dir=<reliable dir, e.g. hdfs:///tmp/kg_ckpt> \
         jobs/run_kg_job.py \
         --input  <web-pages parquet/iceberg path> \
         --alias  <alias-dict parquet path | 'synthetic'> \
         --output <stage-store root> \
-        [--resume]
+        [--no-resume]
+
+With spark.checkpoint.dir set, the iterative operators (canonicalization's
+connected components) checkpoint their rounds there and survive executor
+loss; without it they localCheckpoint.
 
 Sandbox smoke (driver-generated corpus, local master):
 
@@ -16,8 +21,9 @@ Sandbox smoke (driver-generated corpus, local master):
         --synthetic-pages 5000 --output /tmp/kg_out
 
 Every stage is checkpoint-resumable keyed by (url, warc_ts): kill the job at
-any point and re-submitting with --resume converges to byte-identical output
-(tests/test_pipeline.py::test_kill_and_resume_reruns_only_missing_stage).
+any point and re-submitting the same command converges to byte-identical
+output (tests/test_pipeline.py::test_kill_and_resume_reruns_only_missing_stage).
+Resuming is the default; --no-resume recomputes every stage.
 """
 
 from __future__ import annotations
@@ -28,6 +34,19 @@ import json
 from pyspark.sql import SparkSession
 
 
+def session() -> SparkSession:
+    """The session spark-submit provides (its --master, --conf and resources
+    stand), with the package's runtime SQL settings applied on top.
+    session.get_spark is not used here: its .master() would override
+    spark-submit's --master."""
+    from docprocai_service_spark.session import SQL_CONF
+
+    spark = SparkSession.builder.appName("kg_construct").getOrCreate()
+    for k, v in SQL_CONF.items():
+        spark.conf.set(k, v)
+    return spark
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="web_pages table path (parquet)")
@@ -35,14 +54,11 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="StageStore root directory")
     ap.add_argument("--synthetic-pages", type=int, default=0,
                     help="generate N synthetic pages instead of --input (sandbox)")
-    ap.add_argument("--resume", action="store_true", default=True)
-    ap.add_argument("--no-resume", dest="resume", action="store_false")
+    ap.add_argument("--resume", action=argparse.BooleanOptionalAction, default=True,
+                    help="skip stages already committed in --output (default)")
     args = ap.parse_args()
 
-    # Under spark-submit the session is provided by the launcher; the factory
-    # config (AQE, Arrow, ICU off) is applied via getOrCreate-time defaults.
-    spark = SparkSession.builder.appName("kg_construct").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = session()
 
     from docprocai_service_spark import schemas
     from docprocai_service_spark.corpus import alias_dict_pdf, distributed_pages

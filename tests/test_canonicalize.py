@@ -126,24 +126,85 @@ def test_components_two_phase_matches_driver_random(spark):
     assert got == want
 
 
-def test_components_reliable_checkpoint(spark, tmp_path):
-    """Cluster-safe path: checkpoint() to a reliable dir instead of
-    localCheckpoint (which dies with a lost executor)."""
-    edges, expected = GRAPHS["two_cliques_bridged"]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    with pytest.raises(ValueError, match="checkpoint dir"):
-        connected_components(df, driver_threshold=0, reliable_checkpoint=True)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def _truncate_msgs(caplog) -> set[str]:
+    return {
+        m for m in (r.getMessage() for r in caplog.records)
+        if m.startswith("truncate_lineage:")
+    }
+
+
+@pytest.mark.parametrize("broadcast_rows", ["default", "zero"])
+@pytest.mark.parametrize(
+    "op", ["components", "pagerank", "label_propagation", "bfs_distances", "out_neighborhood"]
+)
+def test_iterative_ops_checkpoint_to_session_dir(
+    spark, tmp_path, caplog, monkeypatch, op, broadcast_rows
+):
+    """The session decides how every iterative loop truncates lineage: with
+    a checkpoint dir set the rounds are checkpointed there (executor-loss
+    safe), without one they are localCheckpointed and nothing is written.
+    The result is the same either way, and the choice is logged. At
+    BROADCAST_ROWS=0 pagerank and LPA take the _pin_by_key branch."""
+    import logging
+
+    from docprocai_service_spark.operators import canonicalize, joins
+    from docprocai_service_spark.operators.graph import (
+        bfs_distances,
+        label_propagation,
+        pagerank_fixed,
+    )
+    from docprocai_service_spark.operators.materialize import out_neighborhood
+    from docprocai_service_spark.sources.manifest import write_bucketed
+
+    if broadcast_rows == "zero":
+        monkeypatch.setattr(joins, "BROADCAST_ROWS", 0)
+    rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e"),
+            ("e", "b"), ("a", "d"), ("f", "g")]
+    edges = spark.createDataFrame(
+        [(s, d, i + 1) for i, (s, d) in enumerate(rows)], "src string, dst string, w long"
+    )
+    store_edges = str(tmp_path / "edges")
+
+    def neighborhood(e):
+        # the store's edges layout, bucketed by src_entity
+        write_bucketed(
+            e.select(
+                F.col("src").alias("src_entity"), F.col("dst").alias("dst_entity"),
+                F.lit("p").alias("pred"), F.col("w").alias("weight"),
+            ),
+            store_edges,
+            "src_entity",
+        )
+        return out_neighborhood(spark, store_edges, ["a"], hops=3)
+
+    run = {
+        "components": lambda e: connected_components(e, driver_threshold=0),
+        "pagerank": lambda e: pagerank_fixed(e, iters=3, weight_col="w"),
+        "label_propagation": lambda e: label_propagation(e, iters=2),
+        "bfs_distances": lambda e: bfs_distances(e, ["a"], 3),
+        "out_neighborhood": neighborhood,
+    }[op]
+    ckpt = tmp_path / "ckpt"
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(ckpt))
     try:
-        got = {
-            r["id"]: r["comp"]
-            for r in connected_components(
-                df, driver_threshold=0, reliable_checkpoint=True
-            ).collect()
-        }
+        session_dir = sc.getCheckpointDir()
+        with caplog.at_level(logging.INFO, logger=canonicalize.__name__):
+            with_dir = sorted(map(tuple, run(edges).collect()))
     finally:
-        spark.sparkContext.setCheckpointDir(None)
-    assert got == expected
+        sc.setCheckpointDir(None)
+    with_dir_msgs = _truncate_msgs(caplog)
+    written = sorted(p.name for p in ckpt.glob("*/rdd-*"))
+    assert written, "no checkpoint data under the session's checkpoint dir"
+    assert with_dir_msgs == {f"truncate_lineage: checkpoint_dir={session_dir} -> checkpoint"}
+
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger=canonicalize.__name__):
+        no_dir = sorted(map(tuple, run(edges).collect()))
+    no_dir_msgs = _truncate_msgs(caplog)
+    assert no_dir_msgs == {"truncate_lineage: checkpoint_dir=None -> localCheckpoint"}
+    assert sorted(p.name for p in ckpt.glob("*/rdd-*")) == written
+    assert with_dir == no_dir
 
 
 def test_lsh_recall_on_planted_pairs(spark, spark_corpus, corpus):

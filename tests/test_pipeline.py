@@ -112,6 +112,28 @@ def test_lineage_rows_cover_all_stages(first_run):
     assert first_run["lineage_bad"] == 0
 
 
+def test_failed_observation_probe_is_logged_and_counted(spark, caplog):
+    """A failing observe() probe falls back to count(), and says so once."""
+    import logging
+
+    from docprocai_service_spark.plans import pipeline
+
+    class BrokenObservation:
+        @property
+        def _jo(self):
+            raise RuntimeError("observation internals unavailable")
+
+    triples = spark.range(7)
+    r = pipeline.PipelineResult(
+        *([triples] * 7), lineage=None, triples_obs=BrokenObservation()
+    )
+    with caplog.at_level(logging.WARNING, logger=pipeline.__name__):
+        assert r.n_triples() == triples.count()
+    warnings = [x for x in caplog.records if x.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "observation probe failed" in warnings[0].getMessage()
+
+
 def test_out_neighborhood_matches_driver_bfs(spark, pipe_dir, first_run):
     """Point query over the materialized bucket-partitioned edges table must
     equal a driver-side BFS over the full edge list: same edge set, same

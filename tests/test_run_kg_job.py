@@ -24,3 +24,29 @@ def test_run_kg_job_synthetic_smoke(tmp_path):
     metrics = json.loads(proc.stdout.strip().splitlines()[-1])
     assert metrics["n_triples"] > 0
     assert os.path.exists(out / "edges" / "_SUCCESS")
+
+
+def _job_module():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "run_kg_job", os.path.join(ROOT, "jobs", "run_kg_job.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_run_kg_job_session_carries_sql_conf(spark):
+    """A session the job did not build (spark-submit's) reads back every
+    runtime SQL setting that get_spark applies."""
+    from docprocai_service_spark.session import SQL_CONF
+
+    for k in SQL_CONF:
+        spark.conf.unset(k)
+    try:
+        job_spark = _job_module().session()
+        assert {k: job_spark.conf.get(k, None) for k in SQL_CONF} == SQL_CONF
+    finally:
+        for k, v in SQL_CONF.items():
+            spark.conf.set(k, v)
