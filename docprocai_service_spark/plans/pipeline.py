@@ -1,5 +1,5 @@
 """The full KG-construction pipeline: extract → triples → link → canonicalize
-→ materialize, with per-stage checkpoints, lineage rows and metrics (C13).
+→ materialize, with lineage rows and metrics (C13).
 
 The reference runs these as priority-ordered queue tasks (ingest=0, linking=1,
 assessment=2 — reference: service/DocProcAiService.py:199,293,376-383) on one
@@ -8,12 +8,22 @@ parallelism is the cluster. The reference's global BERTopic recompute per
 ingest (service/DocProcAiService.py:186-189) becomes the per-batch
 canonicalization stage.
 
+Two modes, one semantic:
+  * no store (`out_dir=None`): the DAG as one lazy plan, extract fused into
+    the parse so html crosses Arrow once;
+  * store (`out_dir=X`): `incremental_ingest` onto `StageStore(X)` — a build
+    is the first micro-batch, a re-run over committed pages is a replay. So
+    the store has one commit protocol (page ledger, key-disjoint appends,
+    intent-bracketed edge merge), and every call is idempotent. A call
+    whose pages differ from the store's ADDS its new pages and never drops
+    committed ones; to recompute from scratch, use a new `out_dir`.
+
 Lineage (FIXTURES.md F3): one row per (stage, partition) with an
 order-insensitive key hash and row counts, computed as a grouped aggregation
-over spark_partition_id() — distributed, no driver collect. Triple-count
-metrics additionally flow through df.observe() accumulators, the Spark analog
-of the reference's per-task progress reporting
-(reference: service/DocProcAiService.py:511-557).
+over spark_partition_id() — distributed, no driver collect. `rows_in` and
+`wall_ms` are -1 (not measured). Triple-count metrics additionally flow
+through df.observe() accumulators, the Spark analog of the reference's
+per-task progress reporting (reference: service/DocProcAiService.py:511-557).
 """
 
 from __future__ import annotations
@@ -21,6 +31,7 @@ from __future__ import annotations
 import logging
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -30,19 +41,40 @@ from ..operators.canonicalize import canonicalize_entities, entity_names
 from ..operators.extract import extract_stage
 from ..operators.linking import link_mentions
 from ..operators.materialize import EDGE_KEYS, edges_table, entities_table, resolve_entities
-from ..operators.triples import fused_triples_stage, mentions_stage, triples_stage
-from ..session import fat_binary_scan
-from ..sources.manifest import StageStore, content_fingerprint
+from ..operators.triples import fused_triples_stage, mentions_stage
+from ..sources.manifest import KEYS, StageStore
+from ..streaming import incremental
 
 _log = logging.getLogger(__name__)
 
+#: Each stage's lineage key columns, in DAG order.
+LINEAGE_KEYS = {
+    "extracted": KEYS,
+    "triples": [*KEYS, "sent_no"],
+    "mentions": ["mention_id"],
+    "linked": ["mention_id"],
+    "canon_map": ["entity_id"],
+    "edges": EDGE_KEYS,
+    "entities": ["entity_id"],
+}
 
-def lineage_rows(df: DataFrame, stage: str, key_cols: list[str], rows_in: int, wall_ms: int) -> DataFrame:
-    """Per-partition lineage: order-insensitive key hash + row count (no collect)."""
-    key = F.xxhash64(*[F.col(c).cast("string") for c in key_cols])
+
+def lineage_rows(stages: dict[str, DataFrame]) -> DataFrame:
+    """Per-(stage, partition) lineage: order-insensitive key hash + row
+    count (no collect). Each stage's partition ids and key hashes are taken
+    before the union, so one aggregation — one shuffle — serves every
+    stage."""
+    keyed = [
+        df.select(
+            F.lit(name).alias("stage"),
+            F.spark_partition_id().alias("partition_id"),
+            F.xxhash64(*[F.col(c).cast("string") for c in LINEAGE_KEYS[name]]).alias("__key"),
+        )
+        for name, df in stages.items()
+    ]
     return (
-        df.withColumn("__key", key)
-        .groupBy(F.spark_partition_id().alias("partition_id"))
+        reduce(DataFrame.unionByName, keyed)
+        .groupBy("stage", "partition_id")
         .agg(
             # bit_xor: order-insensitive and overflow-free (ANSI mode is on in
             # Spark 4, where a long SUM over hashes would raise on overflow)
@@ -50,12 +82,12 @@ def lineage_rows(df: DataFrame, stage: str, key_cols: list[str], rows_in: int, w
             F.count("*").alias("rows_out"),
         )
         .select(
-            F.lit(stage).alias("stage"),
+            "stage",
             "partition_id",
             "input_keys_hash",
-            F.lit(rows_in).cast("long").alias("rows_in"),
+            F.lit(-1).cast("long").alias("rows_in"),
             "rows_out",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
+            F.lit(-1).cast("long").alias("wall_ms"),
         )
     )
 
@@ -74,9 +106,10 @@ class PipelineResult:
     triples_obs: Observation | None = None
 
     def n_triples(self) -> int:
-        """Triple count. In store mode it is in metrics (counted at write);
-        in the lazy no-store mode it comes from the observe() accumulator
-        when one has fired, else falls back to a direct count().
+        """Triple count. In store mode it is in metrics (the triples
+        manifest's count); in the lazy no-store mode it comes from the
+        observe() accumulator when one has fired, else falls back to a
+        direct count().
 
         Observation caveat (not fixable at this layer): the observe node
         records only the FIRST action that touches it, and `triples` is
@@ -114,136 +147,61 @@ def run_pipeline(
     pages: DataFrame,
     alias_dict: DataFrame,
     out_dir: str | None = None,
-    resume: bool = True,
     collect_lineage: bool = True,
 ) -> PipelineResult:
-    """Run (or resume) the five-stage DAG; persist per-stage when out_dir given.
-
-    With out_dir + resume, each materialized stage is skipped when its
-    _SUCCESS + manifest are present and its input keys are all covered —
-    kill the job anywhere and re-running converges to identical bytes.
-    """
-    store = StageStore(spark, out_dir) if out_dir else None
-    metrics: dict = {}
-    lineages: list[DataFrame] = []
-    triples_obs: Observation | None = None
+    """Run the five-stage DAG over `pages`: lazily, or onto the stage store
+    at `out_dir` (see the module docstring). Store mode sets
+    `{stage}_resumed` for each stage whose committed manifest the call left
+    as it found it, and writes the lineage rows to `<out_dir>/lineage`."""
     t_start = time.time()
+    triples_obs, metrics = None, {}
+    if out_dir is None:
+        stages, triples_obs = _lazy_stages(pages, alias_dict)
+    else:
+        store = StageStore(spark, out_dir)
+        before = {name: store.version(name) for name in LINEAGE_KEYS}
+        # module attribute, not a from-import: a tracer that wraps
+        # incremental.incremental_ingest sees the store build too
+        incremental.incremental_ingest(spark, pages, store, alias_dict)
+        stages = {name: store.read(name) for name in LINEAGE_KEYS}
+        metrics = {f"{n}_resumed": v is not None and store.version(n) == v for n, v in before.items()}
+        # the triples manifest holds the count its commits observed — no job
+        metrics["n_triples"] = store.manifest("triples")["rows"]
 
-    # Resume ledger: the "extracted" stage holds exactly one row per input
-    # page, so it is the key coverage record for the whole DAG (pages with no
-    # triples still appear there — checking coverage against sparse downstream
-    # outputs would spuriously re-run stages).
-    _covered: list[bool] = []
-
-    def pages_covered() -> bool:
-        if not _covered:
-            _covered.append(
-                store.is_done("extracted") and store.todo_keys("extracted", pages).isEmpty()
-            )
-        return _covered[0]
-
-    # DAG order; a stage that is recomputed invalidates everything downstream
-    # so a crash between stage overwrites cannot resume a stale later stage
-    # (its _SUCCESS+manifest from the previous run would otherwise look done).
-    _STAGE_ORDER = ["extracted", "triples", "mentions", "linked", "canon_map", "edges", "entities"]
-
-    def run_stage(name: str, make, key_cols: list[str], rows_in: int = -1) -> DataFrame:
-        t0 = time.time()
-        if store is not None:
-            if resume and store.is_done(name) and pages_covered():
-                df = store.read(name)
-                metrics[f"{name}_resumed"] = True
-            else:
-                for downstream in _STAGE_ORDER[_STAGE_ORDER.index(name) + 1:]:
-                    if store.is_done(downstream):
-                        store.invalidate(downstream)
-                # stamp canon_map with the alias-dict fingerprint it derives
-                # from, so incremental ingest can auto-detect dictionary
-                # changes (streaming/incremental.py) — one tiny agg job on a
-                # dimension-sized table, store mode only
-                meta = (
-                    {"alias_fp": content_fingerprint(alias_dict, ["alias", "entity_id", "prior"])[1]}
-                    if name == "canon_map"
-                    else None
-                )
-                if name in ("extracted", "triples"):
-                    # These two stage writes are the only actions that scan
-                    # the fat ~5KB html / extracted-text columns — scope the
-                    # 256-row parquet batch to them so every narrow stage
-                    # readback downstream keeps the 4096 default (ADVICE r4:
-                    # a job-wide scope taxed narrow scans 15-30%).
-                    with fat_binary_scan(spark):
-                        df = store.write(name, make(), meta=meta)
-                else:
-                    # edges go into the store's bucketed layout — the one
-                    # incremental_ingest's upsert merges into and the point
-                    # queries prune (sources/manifest.py)
-                    bucket_by = EDGE_KEYS[0] if name == "edges" else None
-                    df = store.write(name, make(), bucket_by=bucket_by, meta=meta)
-        else:
-            # No store: cache ONLY the multi-consumer stages (triples feeds
-            # mentions + edge resolution; canon_map feeds resolution +
-            # entities). Single-consumer stages stay lazy so e.g. extract
-            # fuses into the triples pass — one scan over the html bytes
-            # instead of a materialize-then-rescan. persist() is LAZY — no
-            # eager materialization job/barrier here (an eager localCheckpoint
-            # measured 2-7s of anti-scaling block-store overhead); the first
-            # consuming action fills the cache, later consumers reuse it.
-            df = make()
-            if name == "triples":
-                nonlocal triples_obs
-                triples_obs = Observation("triples_pipeline")
-                df = df.observe(triples_obs, F.count(F.lit(1)).alias("n_triples"))
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            elif name == "canon_map":
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        wall = int((time.time() - t0) * 1000)
-        metrics[f"{name}_wall_ms"] = wall
-        if collect_lineage:
-            lineages.append(lineage_rows(df, name, key_cols, rows_in, wall))
-        return df
-
-    extracted = run_stage("extracted", lambda: extract_stage(pages), ["url", "warc_ts"])
-    # Store mode parses the MATERIALIZED extracted stage (resume ledger reuse);
-    # no-store mode fuses extract into the parse so html crosses Arrow once.
-    # Both run the same parse kernel (operators/triples.py).
-    def make_triples() -> DataFrame:
-        if store is not None:
-            return triples_stage(extracted)
-        return fused_triples_stage(pages)
-
-    triples = run_stage("triples", make_triples, ["url", "warc_ts", "sent_no"])
-    mentions = run_stage("mentions", lambda: mentions_stage(triples), ["mention_id"])
-    linked = run_stage("linked", lambda: link_mentions(mentions, alias_dict), ["mention_id"])
-
-    canon_map = run_stage(
-        "canon_map", lambda: canonicalize_entities(entity_names(alias_dict)), ["entity_id"]
-    )
-    # resolved inside `make`: a resumed edges stage never builds the alias map
-    edges = run_stage(
-        "edges", lambda: edges_table(resolve_entities(triples, alias_dict, canon_map)), EDGE_KEYS
-    )
-    entities = run_stage("entities", lambda: entities_table(alias_dict, canon_map), ["entity_id"])
-
-    lineage = None
-    if collect_lineage:
-        lineage = lineages[0]
-        for extra in lineages[1:]:
-            lineage = lineage.unionByName(extra)
-        if store is not None:
+    lineage = lineage_rows(stages) if collect_lineage else None
+    if out_dir is not None:
+        if lineage is not None:
             lineage.write.mode("overwrite").parquet(store.path("lineage"))
-
-    if store is not None:
-        # the triples manifest holds the count its write observed — no job.
-        # In no-store mode the count flows through the observe() accumulator
-        # on the one cache-filling action instead (PipelineResult.n_triples):
-        # a separate count() action here was a measured serial term that
-        # capped N→4N scaling.
-        n_triples = store.manifest("triples")["rows"]
-        metrics["n_triples"] = n_triples
-        metrics["triples_per_sec"] = n_triples / max(time.time() - t_start, 1e-9)
+        metrics["triples_per_sec"] = metrics["n_triples"] / max(time.time() - t_start, 1e-9)
     metrics["total_wall_s"] = time.time() - t_start
-    return PipelineResult(
-        extracted, triples, mentions, linked, canon_map, entities, edges, lineage, metrics,
-        triples_obs=triples_obs,
+    return PipelineResult(**stages, lineage=lineage, metrics=metrics, triples_obs=triples_obs)
+
+
+def _lazy_stages(pages: DataFrame, alias_dict: DataFrame) -> tuple[dict, Observation]:
+    # Cache ONLY the multi-consumer stages (triples feeds mentions + edge
+    # resolution; canon_map feeds resolution + entities). Single-consumer
+    # stages stay lazy so e.g. extract fuses into the triples pass — one scan
+    # over the html bytes instead of a materialize-then-rescan. persist() is
+    # LAZY — no eager materialization job/barrier here (an eager
+    # localCheckpoint measured 2-7s of anti-scaling block-store overhead);
+    # the first consuming action fills the cache, later consumers reuse it.
+    # The triple count flows through the observe() accumulator on that one
+    # cache-filling action (PipelineResult.n_triples): a separate count()
+    # action here was a measured serial term that capped N→4N scaling.
+    extracted = extract_stage(pages)
+    triples_obs = Observation("triples_pipeline")
+    triples = (
+        fused_triples_stage(pages)
+        .observe(triples_obs, F.count(F.lit(1)).alias("n_triples"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    mentions = mentions_stage(triples)
+    linked = link_mentions(mentions, alias_dict)
+    canon_map = canonicalize_entities(entity_names(alias_dict)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    edges = edges_table(resolve_entities(triples, alias_dict, canon_map))
+    entities = entities_table(alias_dict, canon_map)
+    stages = dict(extracted=extracted, triples=triples, mentions=mentions, linked=linked,
+                  canon_map=canon_map, edges=edges, entities=entities)
+    return stages, triples_obs

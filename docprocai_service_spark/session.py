@@ -227,6 +227,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
+        # delete a superseded round's rdd-* dir in the checkpoint dir; a core
+        # conf, read when the context starts, so not in SQL_CONF
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config(map=SQL_CONF)
     )
     jit = _driver_jit_options(master)

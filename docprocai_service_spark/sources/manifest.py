@@ -18,6 +18,8 @@ service/DocProcAiService.py:639-668) — without per-row state:
     for the reference's delete-then-reinsert per record
     (service/DocProcAiService.py:102-103) and ON CONFLICT upserts
     (persistence/SegmentDbConnector.py:101-124).
+  * one writer of the KG stages: streaming/incremental.py's protocol, which
+    a store-mode run_pipeline calls too.
   * one bucketed layout: 16 `__bucket=` dirs of pmod(xxhash64(key), 16),
     owned here alone (`bucket_of`, `write_bucketed`, `scan_buckets`) and
     recorded as `n_buckets` in the manifest; a committed stage in any other
@@ -159,6 +161,13 @@ class StageStore:
             self._manifest_path(stage)
         )
 
+    def version(self, stage: str) -> tuple[int, int] | None:
+        """(inode, mtime ns) of the committed manifest, None when not done.
+        Every commit replaces the manifest by rename, so an unchanged version
+        means no commit since. No Spark job."""
+        st = os.stat(self._manifest_path(stage)) if self.is_done(stage) else None
+        return st and (st.st_ino, st.st_mtime_ns)
+
     def manifest(self, stage: str) -> dict:
         with open(self._manifest_path(stage)) as f:
             return json.load(f)
@@ -182,20 +191,12 @@ class StageStore:
         exactly — upsert's own recount only fixes the manifest row count."""
         return bool(glob.glob(os.path.join(self.path(stage), ".spark-staging*")))
 
-    def write(
-        self,
-        stage: str,
-        df: DataFrame,
-        bucket_by: str | None = None,
-        meta: dict | None = None,
-    ) -> DataFrame:
+    def write(self, stage: str, df: DataFrame, meta: dict | None = None) -> DataFrame:
         """Overwrite the stage output; manifest committed only after _SUCCESS.
         Row count comes from an observe() on the write job — metadata-only
-        commit, no rescan. `bucket_by` writes the bucketed layout keyed by
-        that column (a later `upsert` must lead its keys with it). `meta`
-        entries are recorded in the manifest (e.g. the alias-dict
-        fingerprint a canon_map was derived from)."""
-        self._overwrite(stage, df, bucket_by, meta)
+        commit, no rescan. `meta` entries are recorded in the manifest (e.g.
+        the alias-dict fingerprint a canon_map was derived from)."""
+        self._overwrite(stage, df, None, meta)
         return self.read(stage)
 
     def _overwrite(
@@ -389,10 +390,11 @@ class StageStore:
 
     def invalidate(self, stage: str) -> None:
         """Drop a stage's manifest and _SUCCESS marker, so it reads as not
-        done and its next write or upsert replaces it whole. run_pipeline
-        invalidates the stages downstream of a recomputed one;
-        rebuild_edges and refresh_graph_features invalidate before a full
-        replace (tests also use it to simulate a torn write)."""
+        done and its next write or upsert replaces it whole. rebuild_edges
+        and refresh_graph_features invalidate before a full replace, and
+        _sync_canonical_state before rewriting a stale canon_map; tests use
+        it to simulate a torn write (a lost manifest), which
+        incremental_ingest repairs or refuses stage by stage."""
         p = self._manifest_path(stage)
         if os.path.exists(p):
             os.remove(p)

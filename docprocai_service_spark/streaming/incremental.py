@@ -5,9 +5,10 @@ messages carry only ids; work is queued and processed one-at-a-time with
 at-least-once crash recovery (reference: controller/dapr_controller.py:14-44,
 service/DocProcAiService.py:639-668), and every ingest re-runs linking and
 tagging over the new content (service/DocProcAiService.py:186-189,307-374).
-The correctness-bearing mechanism here is the same one the batch pipeline
-uses — StageStore manifests + anti-join on done keys — so incremental ingest
-is "run the DAG over the keys that aren't done yet, append/merge".
+This is the stage store's one commit protocol — StageStore manifests +
+anti-join on done keys, "run the DAG over the keys that aren't done yet,
+append/merge" — and store-mode run_pipeline calls it, so a build is the
+first micro-batch and a re-run a replay.
 
 Full-DAG incrementality (round 3): a micro-batch now flows through ALL
 stages — extract → triples → mentions → linked → (canon_map if absent) →
@@ -70,8 +71,11 @@ def incremental_ingest(
     map, so a crash anywhere inside the refresh window routes the next batch
     back into the exact refresh instead of merging deltas onto stale edges
     (see _sync_canonical_state). Without `alias_dict`, the batch stops after
-    mentions (ingest-only callers; the edge ledger still bootstraps so a
-    later full-DAG batch merges these pages).
+    mentions (ingest-only callers; a later full-DAG batch merges these pages
+    through the edges_pages ledger anti-join). A lost stage manifest is
+    re-derived or rebuilt exactly; a store with committed `edges` but no
+    `edges_pages` ledger was not written by this protocol and is refused
+    with ValueError before anything is touched.
 
     features=True (round 6, VERDICT r5 #5) adds the analytics arm: after
     the batch's edge state settles, refresh_graph_features brings the
@@ -95,6 +99,14 @@ def _incremental_ingest(
 ) -> dict:
     from ..session import fat_binary_scan
 
+    if store.is_done("edges") and not store.is_done("edges_pages") and _read_intent(store) is None:
+        # this protocol commits edges and ledger under one intent record, so
+        # edges with neither were written elsewhere, over unknown pages
+        raise ValueError(
+            f"store {store.root!r} has a committed 'edges' stage but no 'edges_pages' "
+            "ledger; it was not written by incremental_ingest. Build a new store."
+        )
+    _rederive_lost_stages(spark, store)
     todo = store.todo_keys("extracted", new_pages) if store.is_done("extracted") else new_pages
     n_new = todo.count()
     if n_new == 0:
@@ -108,20 +120,6 @@ def _incremental_ingest(
                 store, alias_dict, batch_mentions=None, out=out, only_if_stale=True
             )
         return out
-    if store.is_done("edges") and not store.is_done("edges_pages"):
-        # Store built by a batch run_pipeline: its edges cover exactly the
-        # pages in the committed triples stage (the pipeline invalidates
-        # downstream on any upstream recompute). Bootstrap the merge ledger
-        # from them BEFORE this batch appends ANYTHING — running it first and
-        # unconditionally (not just on full-DAG batches) closes two holes:
-        # (a) a crash after this batch's triples append can never leak the
-        #     batch's pages into a later bootstrap (the triples stage read
-        #     here predates every append of this batch; ADVICE r3 #1);
-        # (b) an ingest-only batch (alias_dict=None) records the ledger
-        #     before appending triples whose edges aren't merged yet, so a
-        #     later full-DAG batch merges those pages via the anti-join
-        #     instead of silently treating them as already-merged.
-        store.write("edges_pages", store.read("triples").select(*KEYS).distinct())
     # Lazy persists (NOT eager localCheckpoint): no barrier job, blocks can
     # re-derive from lineage on executor loss, and the first consuming action
     # fills the cache for the later ones.
@@ -153,6 +151,19 @@ def _incremental_ingest(
     extracted.unpersist()
     triples.unpersist()
     return out
+
+
+def _rederive_lost_stages(spark: SparkSession, store: StageStore) -> None:
+    """Re-derive a lost `triples` / `mentions` manifest's stage from its
+    committed parent (both are row-wise functions of it): appending a batch
+    onto the not-done stage would overwrite it with the batch alone."""
+    from ..session import fat_binary_scan
+
+    if store.is_done("extracted") and not store.is_done("triples"):
+        with fat_binary_scan(spark):
+            store.write("triples", triples_stage(store.read("extracted")))
+    if store.is_done("triples") and not store.is_done("mentions"):
+        store.write("mentions", mentions_stage(store.read("triples")))
 
 
 def _sync_canonical_state(
@@ -200,7 +211,9 @@ def _sync_canonical_state(
         and man.get("alias_fp") != alias_fp
         and man.get("alias_fp_pending") == alias_fp
     )
-    if only_if_stale and man is not None and not (map_stale or refresh_pending) and store.is_done("linked"):
+    consistent = man is not None and not (map_stale or refresh_pending)
+    # a lost linked or entities manifest takes the general path, which rewrites it
+    if only_if_stale and consistent and store.is_done("linked") and store.is_done("entities"):
         # Consistent stamps do NOT imply an empty work backlog: earlier
         # INGEST-ONLY batches may have appended triples/mentions whose edge
         # weights and links were never derived, and an empty or
@@ -311,8 +324,9 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
     touched buckets of `edges` (bucket-PRUNED on the __bucket partition
     column, ≤ 16 dirs) and the delta go through one sum-by-key aggregation,
     and only those buckets are rewritten — one scan plus one write job,
-    O(touched buckets). On a store without `edges` the same call writes the
-    delta as the stage. Returns the number of pages merged.
+    O(touched buckets). A first merge writes the delta as the stage; a
+    ledger without committed `edges` takes rebuild_edges. Returns the number
+    of pages merged.
 
     Crash contract — EXACT, no double-count window (closes VERDICT r3 #2):
     the merge is bracketed by an atomically-renamed intent record
@@ -362,6 +376,10 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
                 return 0
             rebuild_edges(store, alias_dict, canon_map)
             _clear_intent(store)
+            return n_pages
+        if store.is_done("edges_pages") and not store.is_done("edges"):
+            # lost edges manifest: no weights to add the delta to
+            rebuild_edges(store, alias_dict, canon_map)
             return n_pages
         if n_pages == 0:
             return 0

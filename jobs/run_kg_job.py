@@ -5,25 +5,30 @@ Cluster usage (zip the package so executors can import it):
     cd /root/repo && zip -qr /tmp/docprocai_service_spark.zip docprocai_service_spark
     spark-submit --py-files /tmp/docprocai_service_spark.zip \
         --conf spark.checkpoint.dir=<reliable dir, e.g. hdfs:///tmp/kg_ckpt> \
+        --conf spark.cleaner.referenceTracking.cleanCheckpoints=true \
         jobs/run_kg_job.py \
         --input  <web-pages parquet/iceberg path> \
         --alias  <alias-dict parquet path | 'synthetic'> \
-        --output <stage-store root> \
-        [--no-resume]
+        --output <stage-store root>
 
 With spark.checkpoint.dir set, the iterative operators (canonicalization's
 connected components) checkpoint their rounds there and survive executor
-loss; without it they localCheckpoint.
+loss; without it they localCheckpoint. cleanCheckpoints lets Spark delete a
+round's checkpoint files once nothing references them (session.get_spark
+sets it too; spark-submit's session does not go through get_spark).
 
 Sandbox smoke (driver-generated corpus, local master):
 
     spark-submit --master local[8] jobs/run_kg_job.py \
         --synthetic-pages 5000 --output /tmp/kg_out
 
-Every stage is checkpoint-resumable keyed by (url, warc_ts): kill the job at
-any point and re-submitting the same command converges to byte-identical
-output (tests/test_pipeline.py::test_kill_and_resume_reruns_only_missing_stage).
-Resuming is the default; --no-resume recomputes every stage.
+The job is incremental_ingest onto the --output store (plans/pipeline.py),
+keyed by (url, warc_ts): kill it at any point and re-submitting the same
+command converges to the same stage contents
+(tests/test_pipeline.py::test_every_crash_point_converges). Every run is
+idempotent: committed pages are skipped, and input pages not yet in the
+store are added — never dropped. To recompute from scratch, pass a new
+--output.
 """
 
 from __future__ import annotations
@@ -54,8 +59,6 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="StageStore root directory")
     ap.add_argument("--synthetic-pages", type=int, default=0,
                     help="generate N synthetic pages instead of --input (sandbox)")
-    ap.add_argument("--resume", action=argparse.BooleanOptionalAction, default=True,
-                    help="skip stages already committed in --output (default)")
     args = ap.parse_args()
 
     spark = session()
@@ -74,16 +77,10 @@ def main() -> None:
     else:
         alias = spark.read.parquet(args.alias)
 
-    # run_pipeline scopes the 256-row fat-scan parquet batch to the two
-    # stage writes that actually scan html/extracted text; narrow stage
-    # readbacks keep the 4096 default (see session.fat_binary_scan).
-    result = run_pipeline(
-        spark,
-        pages,
-        alias,
-        out_dir=args.output,
-        resume=args.resume,
-    )
+    # the ingest scopes the 256-row fat-scan parquet batch to the actions
+    # that scan html/extracted text; narrow stage readbacks keep the 4096
+    # default (see session.fat_binary_scan).
+    result = run_pipeline(spark, pages, alias, out_dir=args.output)
     print(json.dumps(result.metrics))
     spark.stop()
 

@@ -95,15 +95,20 @@ def test_resume_is_byte_identical_and_skips_stages(spark, spark_corpus, pipe_dir
 
 
 def test_kill_and_resume_reruns_only_missing_stage(spark, spark_corpus, pipe_dir, first_run):
-    """FIXTURES.md F6: delete one stage manifest → only that stage (and its
-    dependents) recompute; outputs converge to identical rows."""
+    """FIXTURES.md F6: delete one stage manifest → only that stage and its
+    dependents are recommitted; outputs converge to identical rows. A stage
+    counts as resumed when the call left its committed manifest alone."""
     pages, alias = spark_corpus
     store = StageStore(spark, pipe_dir)
     store.invalidate("canon_map")  # simulates torn write (no _SUCCESS)
     assert not store.is_done("canon_map")
     r3 = run_pipeline(spark, pages, alias, out_dir=pipe_dir)
-    assert r3.metrics.get("extracted_resumed")  # upstream untouched
-    assert "canon_map_resumed" not in r3.metrics  # recomputed
+    # upstream of the map untouched
+    assert all(r3.metrics[f"{s}_resumed"] for s in ["extracted", "triples", "mentions"])
+    # the map, and everything keyed by it, recommitted
+    assert not any(
+        r3.metrics[f"{s}_resumed"] for s in ["canon_map", "linked", "edges", "entities"]
+    )
     assert first_run["edges_key"] == _edges_key(r3.edges)
 
 
@@ -340,22 +345,55 @@ def test_incremental_crash_between_stages_recovers(spark, spark_corpus, tmp_path
     assert incremental_ingest(spark, batch, store)["new_pages"] == 0
 
 
-def test_recompute_invalidates_downstream_stages(spark, spark_corpus, tmp_path):
-    """ADVICE: a stage overwrite must invalidate downstream manifests so a
-    crash between stage overwrites cannot resume stale later stages."""
+@pytest.fixture(scope="module")
+def lost_manifest_base(spark, spark_corpus, tmp_path_factory):
+    """A store after one 200-page batch, and the lazy pipeline's stages over
+    every page."""
     pages, alias = spark_corpus
-    d = str(tmp_path / "inval")
-    r1 = run_pipeline(spark, pages, alias, out_dir=d)
-    key1 = _edges_key(r1.edges)  # collect eagerly: r2 overwrites the files
+    base = str(tmp_path_factory.mktemp("lost_manifest") / "base")
+    incremental_ingest(spark, pages.limit(200).localCheckpoint(), StageStore(spark, base), alias)
+    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
+    want = {
+        "edges": _edges_key(full.edges),
+        "linked": sorted(map(tuple, full.linked.collect())),
+        "linked_cols": full.linked.columns,
+        **{s: getattr(full, s).count() for s in ["extracted", "triples", "mentions"]},
+    }
+    full.triples.unpersist()
+    full.canon_map.unpersist()
+    yield base, want
+    shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize("stage", [*_STORE_STAGES, "edges_pages"])
+def test_lost_manifest_repairs_or_refuses(spark, spark_corpus, tmp_path, lost_manifest_base, stage):
+    """A stage whose manifest is lost (a torn write) under a committed page
+    ledger: the next batch either converges to the lazy pipeline — every
+    stage committed, page stages holding every page's rows — or refuses
+    with ValueError and leaves the store untouched. Appending the batch
+    onto a not-done triples/mentions stage would overwrite it with the
+    batch alone, and upserting onto a not-done edges stage would write the
+    batch's delta as the whole stage."""
+    pages, alias = spark_corpus
+    base, want = lost_manifest_base
+    d = str(tmp_path / "store")
+    shutil.copytree(base, d)
     store = StageStore(spark, d)
-    # torn write upstream: triples missing, downstream manifests still present
-    store.invalidate("triples")
-    r2 = run_pipeline(spark, pages, alias, out_dir=d)
-    # triples recomputed — and NOTHING downstream of it resumed stale output
-    for s in ["triples", "mentions", "linked", "canon_map", "edges", "entities"]:
-        assert f"{s}_resumed" not in r2.metrics, s
-    assert r2.metrics.get("extracted_resumed")
-    assert key1 == _edges_key(r2.edges)
+    store.invalidate(stage)
+    if stage == "edges_pages":
+        # committed edges without a ledger: not this protocol's state
+        before = _files(d)
+        with pytest.raises(ValueError, match="edges_pages"):
+            incremental_ingest(spark, pages, store, alias)
+        assert _files(d) == before
+        return
+    incremental_ingest(spark, pages, store, alias)
+    assert all(store.is_done(s) for s in [*_STORE_STAGES, "edges_pages"])
+    for s in ["extracted", "triples", "mentions"]:
+        assert store.read(s).count() == store.manifest(s)["rows"] == want[s], s
+    assert _edges_key(store.read("edges")) == want["edges"]
+    got_linked = sorted(map(tuple, store.read("linked").select(*want["linked_cols"]).collect()))
+    assert got_linked == want["linked"]
 
 
 def test_streaming_ingest_available_now(spark, spark_corpus, tmp_path):
@@ -413,29 +451,28 @@ def test_streaming_features_arm_matches_batch_twin(spark, spark_corpus, tmp_path
     full.canon_map.unpersist()
 
 
-def test_incremental_onto_batch_store_bootstraps_ledger(spark, spark_corpus, tmp_path):
-    """Incremental ingest onto a store built by a BATCH run must not re-merge
-    the batch pages' edge weights (the ledger bootstraps from the committed
-    triples stage before the first micro-batch appends), and both paths
-    leave the store in one layout: the micro-batch merges bucket-scoped into
-    the batch-written edges instead of re-laying them out, so point queries
-    stay pruned."""
-    from docprocai_service_spark.operators.extract import extract_stage
-    from docprocai_service_spark.operators.triples import triples_stage
+def test_store_with_edges_but_no_ledger_is_refused(spark, spark_corpus, tmp_path):
+    """A store whose `edges` stage is committed without the `edges_pages`
+    ledger was not written by incremental_ingest: which pages its weights
+    cover is unknown, so a batch refuses it before touching anything —
+    ingest-only batches too. A store run_pipeline built carries the ledger
+    and leaves the one bucketed layout behind."""
+    import os
 
     pages, alias = spark_corpus
-    d = str(tmp_path / "handoff")
+    d = str(tmp_path / "foreign")
     b1 = pages.limit(200).localCheckpoint()
-    run_pipeline(spark, b1, alias, out_dir=d)  # batch run writes edges, no ledger
+    run_pipeline(spark, b1, alias, out_dir=d, collect_lineage=False)
     store = StageStore(spark, d)
+    assert store.is_done("edges_pages")
     _assert_one_store_layout(spark, store)
-    b2 = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    incremental_ingest(spark, b2, store, alias_dict=alias)
-    _assert_one_store_layout(spark, store)
-    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
-    assert _edges_key(store.read("edges")) == _edges_key(full.edges)
-    full.triples.unpersist()
-    full.canon_map.unpersist()
+    shutil.rmtree(store.path("edges_pages"))
+    os.remove(os.path.join(d, "edges_pages.manifest.json"))
+    before = _files(d)
+    for a in (alias, None):
+        with pytest.raises(ValueError, match="no 'edges_pages' ledger"):
+            incremental_ingest(spark, pages, store, alias_dict=a)
+    assert _files(d) == before
 
 
 def test_execution_paths_equal_oracle_on_adversarial_pages(spark, spark_corpus, tmp_path):
@@ -470,13 +507,14 @@ def test_execution_paths_equal_oracle_on_adversarial_pages(spark, spark_corpus, 
 
 def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
     """The store path is bound by fixed per-job cost, so its Spark job
-    counts are pinned: a resume on a complete store, and a steady-state
-    micro-batch (the second onto a batch-built store). The bounds are the
-    counts measured on this corpus with the additive bucket upsert,
-    barrier-free appends and schema-carrying reads (without them: 24 and
-    78), so a change that adds jobs to either path fails here. Every
-    stage's schema-carrying read must equal what parquet inference
-    returns."""
+    counts are pinned: a build onto an empty store, a resume on the
+    complete store (both through run_pipeline, lineage write included), and
+    a steady-state micro-batch (the second after the build). The bounds are
+    the counts measured on this corpus with the additive bucket upsert,
+    barrier-free appends, schema-carrying reads and the one-shuffle lineage
+    (without the first three: 24 and 78 for resume and batch), so a change
+    that adds jobs to any of them fails here. Every stage's schema-carrying
+    read must equal what parquet inference returns."""
     pages, alias = spark_corpus
     sc = spark.sparkContext
     d = str(tmp_path / "jobs")
@@ -484,7 +522,6 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
     rest = pages.join(b0.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
     b1 = rest.limit(50).localCheckpoint()
     b2 = rest.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    run_pipeline(spark, b0, alias, out_dir=d)
 
     def jobs(group, fn):
         sc.setJobGroup(group, group)
@@ -495,6 +532,7 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
             sc.setJobDescription(None)
         return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
+    n_build, _ = jobs("pin.build", lambda: run_pipeline(spark, b0, alias, out_dir=d))
     n_resume, r = jobs("pin.resume", lambda: run_pipeline(spark, b0, alias, out_dir=d))
     assert all(r.metrics.get(f"{s}_resumed") for s in _STORE_STAGES)
     incremental_ingest(spark, b1, StageStore(spark, d), alias_dict=alias)
@@ -502,7 +540,7 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
         "pin.batch", lambda: incremental_ingest(spark, b2, StageStore(spark, d), alias_dict=alias)
     )
     assert m["new_pages"] == b2.count() and m["merged_edge_pages"] > 0
-    assert n_resume <= 11 and n_batch <= 46, (n_resume, n_batch)
+    assert n_build <= 34 and n_resume <= 10 and n_batch <= 46, (n_build, n_resume, n_batch)
 
     store = StageStore(spark, d)
     for stage in [*_STORE_STAGES, "edges_pages"]:
@@ -593,16 +631,16 @@ def test_edge_merge_crash_during_upsert_repairs_exactly(spark, spark_corpus, tmp
 
 def test_ingest_only_batches_then_full_dag_merges_their_pages(spark, spark_corpus, tmp_path):
     """ADVICE r3 #1 (generalized): an ingest-only micro-batch (alias_dict
-    absent) appending triples to a store with committed edges must bootstrap
-    the ledger FIRST, so a later full-DAG batch merges those pages instead
-    of treating them as already-merged."""
+    absent) appending triples to a store with committed edges leaves the
+    edges_pages ledger alone, so a later full-DAG batch merges those pages
+    instead of treating them as already-merged."""
     pages, alias = spark_corpus
     d = str(tmp_path / "mixed")
     b1 = pages.limit(150).localCheckpoint()
     rest = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
     b2 = rest.limit(100).localCheckpoint()
     b3 = rest.join(b2.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    run_pipeline(spark, b1, alias, out_dir=d)  # batch store: edges, no ledger
+    run_pipeline(spark, b1, alias, out_dir=d)  # store with edges + ledger
     store = StageStore(spark, d)
     incremental_ingest(spark, b2, store)  # ingest-only: no linking/merge
     incremental_ingest(spark, b3, store, alias_dict=alias)  # full DAG
@@ -690,11 +728,11 @@ def test_dict_change_crash_mid_refresh_repairs_exactly(spark, spark_corpus, tmp_
     real_write = StageStore.write
     crashed = {"n": 0}
 
-    def crashing_write(self, stage, df, bucket_by=None, meta=None):
+    def crashing_write(self, stage, df, meta=None):
         if stage == "linked" and crashed["n"] == 0:
             crashed["n"] += 1
             raise RuntimeError("simulated crash between canon_map commit and refresh")
-        return real_write(self, stage, df, bucket_by=bucket_by, meta=meta)
+        return real_write(self, stage, df, meta=meta)
 
     StageStore.write = crashing_write
     try:
@@ -827,22 +865,36 @@ def _restore(originals):
         setattr(StageStore, name, real)
 
 
-@pytest.mark.parametrize("dict_change", [False, True])
-def test_every_crash_point_converges(spark, spark_corpus, tmp_path, dict_change):
+# ids False/True: the second micro-batch without/with a dictionary change
+@pytest.mark.parametrize(
+    "case",
+    [pytest.param("batch", id="False"), pytest.param("dict_change", id="True"), "build"],
+)
+def test_every_crash_point_converges(spark, spark_corpus, tmp_path, case):
     """Mechanical proof of the 'exact under every crash schedule' claim:
     for EVERY store-mutation index n of a full-DAG second micro-batch
-    (including the dictionary-change refresh schedule), crash at n, retry
-    to completion, and require edges + linked to equal a fresh batch run.
-    Targeted tests pin the interesting windows; this sweep guarantees no
-    window was missed."""
+    (including the dictionary-change refresh schedule), or of a
+    run_pipeline(out_dir=…) build onto an empty directory, crash at n,
+    retry to completion, and require edges + linked to equal a fresh batch
+    run. Targeted tests pin the interesting windows; this sweep guarantees
+    no window was missed."""
     import shutil as _sh
 
     pages, alias = spark_corpus
-    b1 = pages.limit(150).localCheckpoint()
-    b2 = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    alias2 = alias.filter(F.length("alias") > 6).localCheckpoint() if dict_change else alias
+    alias2 = alias.filter(F.length("alias") > 6).localCheckpoint() if case == "dict_change" else alias
     base = str(tmp_path / "base")
-    incremental_ingest(spark, b1, StageStore(spark, base), alias_dict=alias)
+    if case == "build":
+        StageStore(spark, base)  # an empty directory
+
+        def call(store):
+            run_pipeline(spark, pages, alias, out_dir=store.root, collect_lineage=False)
+    else:
+        b1 = pages.limit(150).localCheckpoint()
+        b2 = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
+        incremental_ingest(spark, b1, StageStore(spark, base), alias_dict=alias)
+
+        def call(store):
+            incremental_ingest(spark, b2, store, alias_dict=alias2)
 
     # expected end state: one fresh batch over everything with the final dict
     full = run_pipeline(spark, pages, alias2, out_dir=None, collect_lineage=False)
@@ -852,13 +904,13 @@ def test_every_crash_point_converges(spark, spark_corpus, tmp_path, dict_change)
     full.triples.unpersist()
     full.canon_map.unpersist()
 
-    # count the mutations of an un-crashed batch-2 (n=0 never fires)
+    # count the mutations of an un-crashed call (n=0 never fires)
     probe_dir = str(tmp_path / "probe")
     _sh.copytree(base, probe_dir)
     plan = {"n": 0, "count": 0}
     originals = _install_crash(plan)
     try:
-        incremental_ingest(spark, b2, StageStore(spark, probe_dir), alias_dict=alias2)
+        call(StageStore(spark, probe_dir))
     finally:
         _restore(originals)
     total = plan["count"]
@@ -872,11 +924,11 @@ def test_every_crash_point_converges(spark, spark_corpus, tmp_path, dict_change)
         originals = _install_crash(plan)
         try:
             with pytest.raises(RuntimeError):
-                incremental_ingest(spark, b2, store, alias_dict=alias2)
+                call(store)
         finally:
             _restore(originals)
         # retry (at-least-once redelivery) — must fully converge
-        incremental_ingest(spark, b2, store, alias_dict=alias2)
+        call(store)
         assert _edges_key(store.read("edges")) == want_edges, f"edges diverged, crash point {n}"
         got_linked = sorted(map(tuple, store.read("linked").select(*linked_cols).collect()))
         assert got_linked == want_linked, f"linked diverged, crash point {n}"
