@@ -966,6 +966,19 @@ def _lpa_oracle_sql(iters: int) -> str:
     """ + _lpa_blocks_sql(iters)
 
 
+def _kg_edges(spark, sf_dir):
+    """The weighted KG edges over the SQL-constructed corpus: the chain every
+    kg_*_docs graph entry starts from (see kg_edges_docs)."""
+    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
+    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
+    from docprocai_service_spark.operators.triples import fused_triples_stage
+
+    alias = _kg_alias_df(spark)
+    canon = canonicalize_entities(entity_names(alias))
+    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
+    return edges_table(resolve_entities(t, alias, canon))
+
+
 def kg_edges_docs(spark, sf_dir):
     """The COMPLETE KG DAG — extract → triples → link → canonicalize →
     resolve → weighted edges — over the SQL-constructed corpus, end-to-end
@@ -975,15 +988,7 @@ def kg_edges_docs(spark, sf_dir):
     is what lets the oracle mirror it as min(entity_id) per name — the LSH
     mechanics themselves are oracle-checked separately
     (minhash_near_dup_docs / near_dup_groups_docs)."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
-    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
-    from docprocai_service_spark.operators.triples import fused_triples_stage
-
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    return edges_table(resolve_entities(t, alias, canon))
+    return _kg_edges(spark, sf_dir)
 
 
 def kg_pagerank_docs(spark, sf_dir):
@@ -994,16 +999,9 @@ def kg_pagerank_docs(spark, sf_dir):
     with the unrolled weighted-PR CTEs via _pagerank_blocks_sql). Edge
     weight = number of triples asserting the edge, so rank follows
     corroboration."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import pagerank_fixed
-    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
-    from docprocai_service_spark.operators.triples import fused_triples_stage
 
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    edges = edges_table(resolve_entities(t, alias, canon))
+    edges = _kg_edges(spark, sf_dir)
     e = edges.select(
         F.col("src_entity").alias("src"), F.col("dst_entity").alias("dst"), "weight"
     )
@@ -1018,16 +1016,9 @@ def kg_communities_docs(spark, sf_dir):
     composed DuckDB oracle (the kg_edges_docs chain + _lpa_blocks_sql).
     Corroboration-weighted: a pair's vote weight is the number of triples
     asserting it in either direction."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import label_propagation
-    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
-    from docprocai_service_spark.operators.triples import fused_triples_stage
 
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    edges = edges_table(resolve_entities(t, alias, canon))
+    edges = _kg_edges(spark, sf_dir)
     e = edges.select(
         F.col("src_entity").alias("src"), F.col("dst_entity").alias("dst"), "weight"
     )
@@ -1043,16 +1034,9 @@ def kg_features_docs(spark, sf_dir):
     deliverable's oracle-checked twin, streaming/incremental.py). Entities
     whose only edges are self-loops carry their own id as community (LPA's
     simple graph drops self-loops)."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import label_propagation, pagerank_fixed
-    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
-    from docprocai_service_spark.operators.triples import fused_triples_stage
 
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    edges = edges_table(resolve_entities(t, alias, canon)).localCheckpoint()
+    edges = _kg_edges(spark, sf_dir).localCheckpoint()
     e = edges.select(
         F.col("src_entity").alias("src"), F.col("dst_entity").alias("dst"), "weight"
     )
@@ -1074,16 +1058,9 @@ def kg_bfs_docs(spark, sf_dir):
     that entry pins the partition-pruned point-query READ over the
     materialized table; this one pins the in-memory BFS operator's
     distances on the same graph."""
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
     from docprocai_service_spark.operators.graph import bfs_distances
-    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
-    from docprocai_service_spark.operators.triples import fused_triples_stage
 
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    edges = edges_table(resolve_entities(t, alias, canon))
+    edges = _kg_edges(spark, sf_dir)
     e = edges.select(
         F.col("src_entity").alias("src"), F.col("dst_entity").alias("dst")
     )
@@ -1101,19 +1078,9 @@ def kg_components_docs(spark, sf_dir):
     union-find the small corpus would get by default — the scale engine is
     the one under oracle here; the two routes are equality-tested in
     pytest."""
-    from docprocai_service_spark.operators.canonicalize import (
-        canonicalize_entities,
-        connected_components,
-        entity_names,
-    )
-    from docprocai_service_spark.operators.materialize import edges_table, resolve_entities
-    from docprocai_service_spark.operators.triples import fused_triples_stage
+    from docprocai_service_spark.operators.canonicalize import connected_components
 
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    edges = edges_table(resolve_entities(t, alias, canon))
+    edges = _kg_edges(spark, sf_dir)
     e = edges.select(
         F.col("src_entity").alias("src"), F.col("dst_entity").alias("dst")
     )
@@ -1132,20 +1099,10 @@ def kg_neighborhood_docs(spark, sf_dir):
     import os
     import tempfile
 
-    from docprocai_service_spark.operators.canonicalize import canonicalize_entities, entity_names
-    from docprocai_service_spark.operators.materialize import (
-        edges_table,
-        out_neighborhood,
-        resolve_entities,
-    )
-    from docprocai_service_spark.operators.triples import fused_triples_stage
+    from docprocai_service_spark.operators.materialize import out_neighborhood
     from docprocai_service_spark.sources.manifest import write_bucketed
 
-    t = fused_triples_stage(_kg_pages_from_documents(spark, sf_dir))
-    alias = _kg_alias_df(spark)
-    names = entity_names(alias)
-    canon = canonicalize_entities(names, threshold=0.7)
-    edges = edges_table(resolve_entities(t, alias, canon))
+    edges = _kg_edges(spark, sf_dir)
     # per-invocation dir (ADVICE r5: a fixed shared path races concurrent
     # drivers and leaks between runs); the result must be collected before
     # the cleanup, so materialize it eagerly and return the local copy.

@@ -152,7 +152,8 @@ def run_pipeline(
     """Run the five-stage DAG over `pages`: lazily, or onto the stage store
     at `out_dir` (see the module docstring). Store mode sets
     `{stage}_resumed` for each stage whose committed manifest the call left
-    as it found it, and writes the lineage rows to `<out_dir>/lineage`."""
+    as it found it, and writes the lineage rows to `<out_dir>/lineage`; it
+    raises ValueError when no pages reach an empty store."""
     t_start = time.time()
     triples_obs, metrics = None, {}
     if out_dir is None:
@@ -163,6 +164,9 @@ def run_pipeline(
         # module attribute, not a from-import: a tracer that wraps
         # incremental.incremental_ingest sees the store build too
         incremental.incremental_ingest(spark, pages, store, alias_dict)
+        if not store.is_done("extracted"):
+            # `extracted` commits last: nothing is committed
+            raise ValueError(f"store {out_dir!r} has no committed pages; pass at least one")
         stages = {name: store.read(name) for name in LINEAGE_KEYS}
         metrics = {f"{n}_resumed": v is not None and store.version(n) == v for n, v in before.items()}
         # the triples manifest holds the count its commits observed — no job

@@ -257,9 +257,10 @@ class StageStore:
         dynamic partition overwrite — untouched buckets are never read or
         written, so merge cost is O(touched buckets), not O(table).
 
-        A committed stage in any other layout (no `__bucket=` dirs, or a
-        manifest recording another bucket count) raises ValueError and is
-        left untouched.
+        A committed stage with no rows is overwritten by `df`. A committed
+        stage in any other layout (no `__bucket=` dirs, or a manifest
+        recording another bucket count) raises ValueError and is left
+        untouched.
 
         Crash contract (no committed row is ever lost):
           * mid-write crash: new files live in a hidden .spark-staging dir;
@@ -278,7 +279,7 @@ class StageStore:
             raise ValueError(f"add={add!r} needs exactly the columns {[*keys, add]}, got {df.columns}")
         target = self.path(stage)
         self._recover(stage)
-        if not self.is_done(stage):
+        if not self.is_done(stage) or self.manifest(stage)["rows"] == 0:
             self._overwrite(stage, df, keys[0])
             return self.read(stage)
         self._check_bucketed(stage)

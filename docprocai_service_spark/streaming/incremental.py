@@ -10,9 +10,10 @@ anti-join on done keys, "run the DAG over the keys that aren't done yet,
 append/merge" — and store-mode run_pipeline calls it, so a build is the
 first micro-batch and a re-run a replay.
 
-Full-DAG incrementality (round 3): a micro-batch now flows through ALL
-stages — extract → triples → mentions → linked → (canon_map if absent) →
-additive edge merge → entities — not just the first three. The edge merge is
+Full-DAG incrementality: every micro-batch flows through ALL stages —
+extract → triples → mentions → linked → (canon_map if absent) → additive
+edge merge → entities — and links and merges its own pages before the page
+ledger commits, so no batch leaves work for a later one. The edge merge is
 bucket-scoped (StageStore.upsert dynamic partition overwrite) and ledgered
 per page so replays don't double-count; since round 4 it is EXACT under
 every crash schedule via a fingerprinted intent record (see
@@ -50,7 +51,7 @@ def incremental_ingest(
     spark: SparkSession,
     new_pages: DataFrame,
     store: StageStore,
-    alias_dict: DataFrame | None = None,
+    alias_dict: DataFrame,
     features: bool = False,
 ) -> dict:
     """Process only not-yet-done (url, warc_ts) keys; append/merge per stage.
@@ -59,8 +60,8 @@ def incremental_ingest(
     between stages re-runs from the last committed manifest (the reference's
     re-enqueue-PROCESSING sweep, without per-row state).
 
-    With `alias_dict` the batch runs the FULL DAG: new mentions are linked
-    (append by mention_id), the canonical map is computed once, and a CHANGED
+    Every batch runs the FULL DAG: new mentions are linked (append by
+    mention_id), the canonical map is computed once, and a CHANGED
     dictionary on a later batch — even an EMPTY one — is detected via content
     fingerprint and triggers an exact relink + edge rebuild; edge weights are
     merged additively and bucket-scoped (merge_edge_deltas, exact under
@@ -70,9 +71,8 @@ def incremental_ingest(
     the canon_map manifest only after linked/edges/entities agree with that
     map, so a crash anywhere inside the refresh window routes the next batch
     back into the exact refresh instead of merging deltas onto stale edges
-    (see _sync_canonical_state). Without `alias_dict`, the batch stops after
-    mentions (ingest-only callers; a later full-DAG batch merges these pages
-    through the edges_pages ledger anti-join). A lost stage manifest is
+    (see _sync_canonical_state). A batch with no new pages onto a consistent
+    store returns after that stamp check. A lost stage manifest is
     re-derived or rebuilt exactly; a store with committed `edges` but no
     `edges_pages` ledger was not written by this protocol and is refused
     with ValueError before anything is touched.
@@ -85,8 +85,6 @@ def incremental_ingest(
     """
     out = _incremental_ingest(spark, new_pages, store, alias_dict)
     if features:
-        if alias_dict is None:
-            raise ValueError("features=True requires alias_dict (full-DAG batches)")
         out["features"] = refresh_graph_features(store)
     return out
 
@@ -95,7 +93,7 @@ def _incremental_ingest(
     spark: SparkSession,
     new_pages: DataFrame,
     store: StageStore,
-    alias_dict: DataFrame | None,
+    alias_dict: DataFrame,
 ) -> dict:
     from ..session import fat_binary_scan
 
@@ -111,14 +109,12 @@ def _incremental_ingest(
     n_new = todo.count()
     if n_new == 0:
         out = {"new_pages": 0}
-        if alias_dict is not None and store.is_done("mentions"):
+        if store.is_done("mentions"):
             # No new pages, but the caller may be handing us a CHANGED
             # dictionary, or replaying after a crash mid-refresh. Verify the
             # stamp (one cheap agg on a dimension table) and repair if — and
             # only if — something is stale; a consistent store is untouched.
-            _sync_canonical_state(
-                store, alias_dict, batch_mentions=None, out=out, only_if_stale=True
-            )
+            _sync_canonical_state(store, alias_dict, batch_mentions=None, out=out)
         return out
     # Lazy persists (NOT eager localCheckpoint): no barrier job, blocks can
     # re-derive from lineage on executor loss, and the first consuming action
@@ -142,8 +138,7 @@ def _incremental_ingest(
     mentions = mentions_stage(triples)
     store.append_new("mentions", mentions, keys=["mention_id"])
     out = {"new_pages": n_new, "new_triples": triples.count()}
-    if alias_dict is not None:
-        _sync_canonical_state(store, alias_dict, batch_mentions=mentions, out=out)
+    _sync_canonical_state(store, alias_dict, batch_mentions=mentions, out=out)
     with fat_binary_scan(spark):
         # normally served from the persisted cache; on eviction this re-runs
         # the html scan, so it gets the fat-scan batch size too
@@ -171,7 +166,6 @@ def _sync_canonical_state(
     alias_dict: DataFrame,
     batch_mentions: DataFrame | None,
     out: dict,
-    only_if_stale: bool = False,
 ) -> None:
     """Bring canon_map / linked / edges / entities into exact agreement with
     `alias_dict` — crash-safe (ADVICE r4 high).
@@ -184,7 +178,7 @@ def _sync_canonical_state(
         been refreshed against that map: the downstream-consistent marker.
 
     A crash anywhere between the two leaves ``alias_fp != fp`` with
-    ``alias_fp_pending == fp``, and the next full-DAG batch routes into the
+    ``alias_fp_pending == fp``, and the next batch routes into the
     exact refresh (relink ALL committed mentions + rebuild_edges) instead of
     merging deltas onto edges keyed by the OLD map — the silent-staleness
     window the previous protocol had. Similarly, a `linked` stage without a
@@ -212,21 +206,16 @@ def _sync_canonical_state(
         and man.get("alias_fp_pending") == alias_fp
     )
     consistent = man is not None and not (map_stale or refresh_pending)
-    # a lost linked or entities manifest takes the general path, which rewrites it
-    if only_if_stale and consistent and store.is_done("linked") and store.is_done("entities"):
-        # Consistent stamps do NOT imply an empty work backlog: earlier
-        # INGEST-ONLY batches may have appended triples/mentions whose edge
-        # weights and links were never derived, and an empty or
-        # fully-redelivered full-DAG batch must still pick them up (review
-        # r5 — the unconditional early return here left such pages unmerged
-        # until a genuinely new page arrived). Both catch-ups are
-        # cheap-gated: linking by manifest row counts, the merge by the
-        # ledger anti-join inside merge_edge_deltas (a no-op job when
-        # caught up).
-        _link_backlog(store, alias_dict)
-        merged = merge_edge_deltas(store, alias_dict, store.read("canon_map"))
-        if merged:
-            out["merged_edge_pages"] = merged
+    if (
+        batch_mentions is None
+        and consistent
+        and all(store.is_done(s) for s in ("linked", "edges", "entities"))
+        and _read_intent(store) is None
+    ):
+        # Caught up: every batch links and merges its own pages before the
+        # page ledger (`extracted`) commits, so with no new pages there is
+        # nothing to link or merge. A lost manifest or a leftover merge
+        # intent takes the general path below, which repairs it.
         return
     if map_stale:
         store.invalidate("canon_map")
@@ -248,18 +237,12 @@ def _sync_canonical_state(
     )
     if needs_refresh or not store.is_done("linked"):
         # exact relink of EVERY committed mention: also the first-write path
-        # (mentions from earlier ingest-only batches get linked too) and the
-        # torn-write repair path.
+        # and the torn-write repair path.
         store.write("linked", link_mentions(store.read("mentions"), alias_dict))
-    else:
-        if batch_mentions is not None:
-            store.append_new(
-                "linked", link_mentions(batch_mentions, alias_dict), keys=["mention_id"]
-            )
-        # any remaining mentions/linked row-count gap is linking debt from
-        # ingest-only batches — settle it now (O(table) anti-join, but only
-        # when the cheap manifest-count gate says debt exists)
-        _link_backlog(store, alias_dict)
+    elif batch_mentions is not None:
+        store.append_new(
+            "linked", link_mentions(batch_mentions, alias_dict), keys=["mention_id"]
+        )
     if needs_refresh:
         rebuild_edges(store, alias_dict, canon_map)
         out["rebuilt_for_dict_change"] = True
@@ -272,21 +255,6 @@ def _sync_canonical_state(
     # refresh-complete stamp: ONLY now may a replay treat downstream state as
     # consistent with this dictionary
     store.annotate("canon_map", {"alias_fp": alias_fp})
-
-
-def _link_backlog(store: StageStore, alias_dict: DataFrame) -> None:
-    """Link mentions that were committed (e.g. by ingest-only batches) but
-    never linked. Gated on the manifests' row counts so the common
-    no-debt case costs zero jobs; with debt, the not-yet-linked mentions
-    are anti-joined out and appended (idempotent by mention_id)."""
-    if not (store.is_done("mentions") and store.is_done("linked")):
-        return
-    if store.manifest("mentions")["rows"] <= store.manifest("linked")["rows"]:
-        return
-    todo = store.read("mentions").join(
-        store.read("linked").select("mention_id"), "mention_id", "left_anti"
-    )
-    store.append_new("linked", link_mentions(todo, alias_dict), keys=["mention_id"])
 
 
 def _intent_path(store: StageStore) -> str:
@@ -324,9 +292,9 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
     touched buckets of `edges` (bucket-PRUNED on the __bucket partition
     column, ≤ 16 dirs) and the delta go through one sum-by-key aggregation,
     and only those buckets are rewritten — one scan plus one write job,
-    O(touched buckets). A first merge writes the delta as the stage; a
-    ledger without committed `edges` takes rebuild_edges. Returns the number
-    of pages merged.
+    O(touched buckets). With no merge intent and no committed `edges` (a
+    first merge, or a lost edges manifest) there are no weights to add to,
+    so the merge is rebuild_edges. Returns the number of pages merged.
 
     Crash contract — EXACT, no double-count window (closes VERDICT r3 #2):
     the merge is bracketed by an atomically-renamed intent record
@@ -351,6 +319,10 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
     the genuinely ambiguous ones. An Iceberg writer would commit steps 2+4
     in one snapshot and make the repair path unreachable.
     """
+    intent = _read_intent(store)
+    if intent is None and not store.is_done("edges"):
+        rebuild_edges(store, alias_dict, canon_map)
+        return store.manifest("edges_pages")["rows"]
     all_triples = store.read("triples")
     contrib = (
         all_triples.join(store.read("edges_pages"), KEYS, "left_anti")
@@ -361,7 +333,6 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
     try:
         pages = contrib.select(*KEYS).distinct()
         n_pages, fp = content_fingerprint(pages, KEYS)
-        intent = _read_intent(store)
         if intent is not None:
             if intent.get("state") == "done" and intent.get("fp") == fp:
                 # upsert committed for exactly this delta; only the ledger
@@ -376,10 +347,6 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
                 return 0
             rebuild_edges(store, alias_dict, canon_map)
             _clear_intent(store)
-            return n_pages
-        if store.is_done("edges_pages") and not store.is_done("edges"):
-            # lost edges manifest: no weights to add the delta to
-            rebuild_edges(store, alias_dict, canon_map)
             return n_pages
         if n_pages == 0:
             return 0
@@ -486,7 +453,7 @@ def streaming_ingest(
     input_dir: str,
     store: StageStore,
     checkpoint_dir: str,
-    alias_dict: DataFrame | None = None,
+    alias_dict: DataFrame,
     features: bool = False,
 ) -> None:
     """Structured Streaming surface: watch a directory of web-page parquet,

@@ -237,12 +237,12 @@ def test_incremental_ingest_appends_only_new_keys(spark, spark_corpus, tmp_path)
     pages, alias = spark_corpus
     store = StageStore(spark, str(tmp_path / "inc"))
     first = pages.limit(120).localCheckpoint()
-    m1 = incremental_ingest(spark, first, store)
+    m1 = incremental_ingest(spark, first, store, alias)
     assert m1["new_pages"] == 120
     # redelivery: at-least-once duplicates are no-ops
-    m2 = incremental_ingest(spark, first, store)
+    m2 = incremental_ingest(spark, first, store, alias)
     assert m2["new_pages"] == 0
-    m3 = incremental_ingest(spark, pages, store)
+    m3 = incremental_ingest(spark, pages, store, alias)
     assert m3["new_pages"] == pages.count() - 120
     # final state equals a fresh batch run over everything
     from docprocai_service_spark.operators.extract import extract_stage
@@ -323,14 +323,14 @@ def test_incremental_crash_between_stages_recovers(spark, spark_corpus, tmp_path
     StageStore.append_new = crashing_append
     try:
         with pytest.raises(RuntimeError):
-            incremental_ingest(spark, batch, store)
+            incremental_ingest(spark, batch, store, alias)
     finally:
         StageStore.append_new = real_append
 
     # triples committed, but the ledger did not — retry must re-process
     assert store.is_done("triples")
     assert not store.is_done("extracted")
-    m = incremental_ingest(spark, batch, store)
+    m = incremental_ingest(spark, batch, store, alias)
     assert m["new_pages"] == 60  # NOT silently skipped
     # no duplicate triples, and every downstream stage completed
     from docprocai_service_spark.operators.extract import extract_stage
@@ -342,7 +342,7 @@ def test_incremental_crash_between_stages_recovers(spark, spark_corpus, tmp_path
     assert got == want
     assert store.is_done("mentions") and store.is_done("extracted")
     # re-delivery after full recovery is a no-op
-    assert incremental_ingest(spark, batch, store)["new_pages"] == 0
+    assert incremental_ingest(spark, batch, store, alias)["new_pages"] == 0
 
 
 @pytest.fixture(scope="module")
@@ -399,15 +399,15 @@ def test_lost_manifest_repairs_or_refuses(spark, spark_corpus, tmp_path, lost_ma
 def test_streaming_ingest_available_now(spark, spark_corpus, tmp_path):
     from docprocai_service_spark.streaming.incremental import streaming_ingest
 
-    pages, _ = spark_corpus
+    pages, alias = spark_corpus
     in_dir = str(tmp_path / "in")
     pages.limit(50).write.mode("overwrite").parquet(in_dir)
     store = StageStore(spark, str(tmp_path / "stream_out"))
-    streaming_ingest(spark, in_dir, store, str(tmp_path / "ckpt"))
+    streaming_ingest(spark, in_dir, store, str(tmp_path / "ckpt"), alias)
     assert store.read("extracted").count() == 50
     # drop more files; a second availableNow run picks up only the new ones
     pages.limit(80).write.mode("append").parquet(in_dir)
-    streaming_ingest(spark, in_dir, store, str(tmp_path / "ckpt"))
+    streaming_ingest(spark, in_dir, store, str(tmp_path / "ckpt"), alias)
     assert store.read("extracted").select("url", "warc_ts").distinct().count() == 80
 
 
@@ -454,9 +454,9 @@ def test_streaming_features_arm_matches_batch_twin(spark, spark_corpus, tmp_path
 def test_store_with_edges_but_no_ledger_is_refused(spark, spark_corpus, tmp_path):
     """A store whose `edges` stage is committed without the `edges_pages`
     ledger was not written by incremental_ingest: which pages its weights
-    cover is unknown, so a batch refuses it before touching anything —
-    ingest-only batches too. A store run_pipeline built carries the ledger
-    and leaves the one bucketed layout behind."""
+    cover is unknown, so a batch refuses it before touching anything. A
+    store run_pipeline built carries the ledger and leaves the one bucketed
+    layout behind."""
     import os
 
     pages, alias = spark_corpus
@@ -469,10 +469,85 @@ def test_store_with_edges_but_no_ledger_is_refused(spark, spark_corpus, tmp_path
     shutil.rmtree(store.path("edges_pages"))
     os.remove(os.path.join(d, "edges_pages.manifest.json"))
     before = _files(d)
-    for a in (alias, None):
-        with pytest.raises(ValueError, match="no 'edges_pages' ledger"):
-            incremental_ingest(spark, pages, store, alias_dict=a)
+    with pytest.raises(ValueError, match="no 'edges_pages' ledger"):
+        incremental_ingest(spark, pages, store, alias)
     assert _files(d) == before
+
+
+def test_caught_up_replay_runs_no_merge_unless_an_intent_is_left(
+    spark, spark_corpus, tmp_path, monkeypatch
+):
+    """Every batch links and merges its own pages before the page ledger
+    commits, so a replay with no new pages onto a committed store touches
+    nothing: no edge merge, no commit, no file written. A leftover merge
+    intent record is the exception: the replay runs the merge, which
+    settles the intent and leaves the edges equal to the lazy pipeline's."""
+    import json
+    import os
+
+    from docprocai_service_spark.streaming import incremental
+
+    pages, alias = spark_corpus
+    d = str(tmp_path / "caught_up")
+    store = StageStore(spark, d)
+    incremental_ingest(spark, pages, store, alias)
+    merges = []
+    real_merge = incremental.merge_edge_deltas
+
+    def counting_merge(*a, **k):
+        merges.append(1)
+        return real_merge(*a, **k)
+
+    monkeypatch.setattr(incremental, "merge_edge_deltas", counting_merge)
+    stages = [*_STORE_STAGES, "edges_pages"]
+    versions, files = {s: store.version(s) for s in stages}, _files(d)
+    assert incremental_ingest(spark, pages, store, alias) == {"new_pages": 0}
+    assert merges == []
+    assert {s: store.version(s) for s in stages} == versions
+    assert _files(d) == files
+
+    intent = os.path.join(d, "edges.merge.json")
+    with open(intent, "w") as f:
+        json.dump({"fp": "planted", "state": "done"}, f)
+    incremental_ingest(spark, pages, store, alias)
+    assert merges == [1]
+    assert not os.path.exists(intent)
+    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
+    assert _edges_key(store.read("edges")) == _edges_key(full.edges)
+    full.triples.unpersist()
+    full.canon_map.unpersist()
+
+
+def test_store_build_over_no_pages_is_refused(spark, spark_corpus, tmp_path):
+    """No pages onto an empty store commit nothing, so there is no stage to
+    return: run_pipeline raises a ValueError naming the store."""
+    pages, alias = spark_corpus
+    d = str(tmp_path / "empty")
+    with pytest.raises(ValueError, match="no committed pages") as e:
+        run_pipeline(spark, pages.limit(0), alias, out_dir=d)
+    assert d in str(e.value)
+    assert not any(StageStore(spark, d).is_done(s) for s in _STORE_STAGES)
+
+
+def test_first_batch_without_triples_then_merge(spark, spark_corpus, tmp_path):
+    """A first batch whose pages emit no triples commits an empty `edges`
+    stage (no bucket dirs); the next batch's merge writes into it and
+    converges to the lazy pipeline."""
+    pages, alias = spark_corpus
+    empty = (
+        pages.limit(5)
+        .withColumn("url", F.concat(F.lit("empty:"), "url"))
+        .withColumn("html", F.encode(F.lit("<html><body><main></main></body></html>"), "UTF-8"))
+    )
+    store = StageStore(spark, str(tmp_path / "no_triples"))
+    assert incremental_ingest(spark, empty, store, alias)["merged_edge_pages"] == 0
+    assert store.is_done("edges") and store.manifest("edges")["rows"] == 0
+    incremental_ingest(spark, pages, store, alias)
+    _assert_one_store_layout(spark, store)
+    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
+    assert _edges_key(store.read("edges")) == _edges_key(full.edges)
+    full.triples.unpersist()
+    full.canon_map.unpersist()
 
 
 def test_execution_paths_equal_oracle_on_adversarial_pages(spark, spark_corpus, tmp_path):
@@ -495,8 +570,8 @@ def test_execution_paths_equal_oracle_on_adversarial_pages(spark, spark_corpus, 
 
     store = StageStore(spark, str(tmp_path / "inc"))
     even = F.expr("int(substring(url, 2)) % 2 = 0")
-    incremental_ingest(spark, pages.filter(even), store)
-    incremental_ingest(spark, pages.filter(~even), store)
+    incremental_ingest(spark, pages.filter(even), store, alias)
+    incremental_ingest(spark, pages.filter(~even), store, alias)
     assert key(store.read("triples")) == want, "incremental_ingest"
 
     lazy = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
@@ -511,8 +586,10 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
     complete store (both through run_pipeline, lineage write included), and
     a steady-state micro-batch (the second after the build). The bounds are
     the counts measured on this corpus with the additive bucket upsert,
-    barrier-free appends, schema-carrying reads and the one-shuffle lineage
-    (without the first three: 24 and 78 for resume and batch), so a change
+    barrier-free appends, schema-carrying reads, the one-shuffle lineage,
+    a first merge that is the edge rebuild and a caught-up replay that runs
+    no merge (without the first three: 24 and 78 for resume and batch;
+    without the last two: 34 and 10 for build and resume), so a change
     that adds jobs to any of them fails here. Every stage's schema-carrying
     read must equal what parquet inference returns."""
     pages, alias = spark_corpus
@@ -540,7 +617,7 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
         "pin.batch", lambda: incremental_ingest(spark, b2, StageStore(spark, d), alias_dict=alias)
     )
     assert m["new_pages"] == b2.count() and m["merged_edge_pages"] > 0
-    assert n_build <= 34 and n_resume <= 10 and n_batch <= 46, (n_build, n_resume, n_batch)
+    assert n_build <= 29 and n_resume <= 7 and n_batch <= 46, (n_build, n_resume, n_batch)
 
     store = StageStore(spark, d)
     for stage in [*_STORE_STAGES, "edges_pages"]:
@@ -623,27 +700,6 @@ def test_edge_merge_crash_during_upsert_repairs_exactly(spark, spark_corpus, tmp
         assert json.load(f)["state"] == "begin"  # ambiguous state recorded
     incremental_ingest(spark, b2, store, alias_dict=alias)
     assert not os.path.exists(os.path.join(store.root, "edges.merge.json"))
-    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
-    assert _edges_key(store.read("edges")) == _edges_key(full.edges)
-    full.triples.unpersist()
-    full.canon_map.unpersist()
-
-
-def test_ingest_only_batches_then_full_dag_merges_their_pages(spark, spark_corpus, tmp_path):
-    """ADVICE r3 #1 (generalized): an ingest-only micro-batch (alias_dict
-    absent) appending triples to a store with committed edges leaves the
-    edges_pages ledger alone, so a later full-DAG batch merges those pages
-    instead of treating them as already-merged."""
-    pages, alias = spark_corpus
-    d = str(tmp_path / "mixed")
-    b1 = pages.limit(150).localCheckpoint()
-    rest = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    b2 = rest.limit(100).localCheckpoint()
-    b3 = rest.join(b2.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    run_pipeline(spark, b1, alias, out_dir=d)  # store with edges + ledger
-    store = StageStore(spark, d)
-    incremental_ingest(spark, b2, store)  # ingest-only: no linking/merge
-    incremental_ingest(spark, b3, store, alias_dict=alias)  # full DAG
     full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
     assert _edges_key(store.read("edges")) == _edges_key(full.edges)
     full.triples.unpersist()
@@ -933,50 +989,6 @@ def test_every_crash_point_converges(spark, spark_corpus, tmp_path, case):
         got_linked = sorted(map(tuple, store.read("linked").select(*linked_cols).collect()))
         assert got_linked == want_linked, f"linked diverged, crash point {n}"
         _sh.rmtree(d, ignore_errors=True)
-
-
-def test_empty_batch_settles_ingest_only_backlog(spark, spark_corpus, tmp_path):
-    """Review r5: an ingest-only batch leaves edge-merge AND linking debt;
-    a later full-DAG batch that happens to be empty (or fully redelivered)
-    must still settle both — the consistent dict stamp alone is not 'no
-    work to do'."""
-    pages, alias = spark_corpus
-    store = StageStore(spark, str(tmp_path / "backlog"))
-    b1 = pages.limit(150).localCheckpoint()
-    b2 = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    incremental_ingest(spark, b1, store, alias_dict=alias)  # full DAG, stamped
-    incremental_ingest(spark, b2, store)  # ingest-only: debt
-    m = incremental_ingest(spark, pages.limit(0), store, alias_dict=alias)  # empty full-DAG
-    assert m["new_pages"] == 0 and m.get("merged_edge_pages", 0) > 0
-    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
-    assert _edges_key(store.read("edges")) == _edges_key(full.edges)
-    want_linked = sorted(map(tuple, full.linked.collect()))
-    got_linked = sorted(map(tuple, store.read("linked").select(*full.linked.columns).collect()))
-    assert got_linked == want_linked
-    full.triples.unpersist()
-    full.canon_map.unpersist()
-
-
-def test_full_dag_batch_settles_prior_ingest_only_links(spark, spark_corpus, tmp_path):
-    """Same debt settled by a normal (non-empty) full-DAG batch: its linked
-    stage must cover the ingest-only batch's mentions too, not just its
-    own (append-only linking previously skipped them forever)."""
-    pages, alias = spark_corpus
-    store = StageStore(spark, str(tmp_path / "backlog2"))
-    b1 = pages.limit(100).localCheckpoint()
-    rest = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    b2 = rest.limit(100).localCheckpoint()
-    b3 = rest.join(b2.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
-    incremental_ingest(spark, b1, store, alias_dict=alias)
-    incremental_ingest(spark, b2, store)  # ingest-only
-    incremental_ingest(spark, b3, store, alias_dict=alias)  # full DAG settles b2's debt
-    full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
-    want_linked = sorted(map(tuple, full.linked.collect()))
-    got_linked = sorted(map(tuple, store.read("linked").select(*full.linked.columns).collect()))
-    assert got_linked == want_linked
-    assert _edges_key(store.read("edges")) == _edges_key(full.edges)
-    full.triples.unpersist()
-    full.canon_map.unpersist()
 
 
 def _direct_features(spark, store, pr_iters, lpa_iters):
