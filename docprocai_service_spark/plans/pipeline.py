@@ -13,10 +13,11 @@ Two modes, one semantic:
     the parse so html crosses Arrow once;
   * store (`out_dir=X`): `incremental_ingest` onto `StageStore(X)` — a build
     is the first micro-batch, a re-run over committed pages is a replay. So
-    the store has one commit protocol (page ledger, key-disjoint appends,
-    intent-bracketed edge merge), and every call is idempotent. A call
-    whose pages differ from the store's ADDS its new pages and never drops
-    committed ones; to recompute from scratch, use a new `out_dir`.
+    the store has one commit protocol (batch-numbered appends committed by
+    the batch log, intent-bracketed edge merge), and every call is
+    idempotent. A call whose pages differ from the store's ADDS its new
+    pages and never drops committed ones; to recompute from scratch, use a
+    new `out_dir`.
 
 Lineage (FIXTURES.md F3): one row per (stage, partition) with an
 order-insensitive key hash and row counts, computed as a grouped aggregation

@@ -10,11 +10,20 @@ service/DocProcAiService.py:639-668) — without per-row state:
                manifest.json with row counts. A torn write has no _SUCCESS
                and is treated as absent — exactly the reference's
                "re-enqueue PROCESSING rows after crash" semantics.
-  * resume   = anti-join the input's (url, warc_ts) keys against the keys
-               already present in the stage output (`todo_keys`), mirroring
-               the reference's re-materialization of missing ENQUEUED rows.
+  * batches  = the page stages commit per micro-batch: each batch's rows land
+               under a hidden `__batch=<id>` partition (`append_new`), and a
+               batch id counts as committed once the `LOG_STAGE` manifest —
+               the batch log, written last — records it with its page-set
+               fingerprint. `read()` prunes every stage to committed ids, and
+               `rollback` deletes the dirs of any id above them, so a batch
+               that crashed halfway is invisible and its retry overwrites it.
+               Idempotence is a fact of the commit, not of the rows: no
+               append anti-joins against what its stage already holds.
+  * resume   = `todo_keys`: the input pages whose (url, warc_ts) keys the
+               stage does not hold, found without shuffling the stage — the
+               reference's re-materialization of missing ENQUEUED rows.
   * idempotent re-runs: stage writes are whole-directory overwrites,
-    key-disjoint appends or bucket-scoped upserts — the Spark replacement
+    batch-numbered appends or bucket-scoped upserts — the Spark replacement
     for the reference's delete-then-reinsert per record
     (service/DocProcAiService.py:102-103) and ON CONFLICT upserts
     (persistence/SegmentDbConnector.py:101-124).
@@ -29,9 +38,10 @@ service/DocProcAiService.py:639-668) — without per-row state:
     over equal keys (the additive edge-weight merge) — each one scan of the
     touched buckets plus one write job.
   * schema-carrying reads: every manifest records the stage's data schema
-    (bucket column excluded, every field nullable — exactly what a parquet
-    read returns), and `read()` hands it to the reader, so no read pays
-    Spark's footer-inference job. A manifest without one reads by inference.
+    (partition columns excluded, every field nullable — exactly what a
+    parquet read returns), and `read()` hands it to the reader, so no read
+    pays Spark's footer-inference job. A manifest without one reads by
+    inference.
 
 This is the parquet-with-manifest fallback chosen at milestone M0 (no Iceberg
 runtime jar in the sandbox — SURVEY.md §7); the writer surface is one class so
@@ -42,14 +52,31 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, DataFrameReader, Observation, SparkSession
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    DataFrameReader,
+    DataFrameWriter,
+    Observation,
+    SparkSession,
+)
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
+_log = logging.getLogger(__name__)
+
 KEYS = ["url", "warc_ts"]
+
+#: Partition column of the batch layout (hidden by `read()`): a micro-batch's
+#: rows of a page stage live under `__batch=<id>`.
+BATCH_COL = "__batch"
+#: The stage whose manifest is the batch log: an id is committed once this
+#: stage's manifest records it, and every stage's reads stop at that id.
+LOG_STAGE = "extracted"
 
 #: Partition column of the bucketed stage layout (hidden by `read()`).
 #: Upserts rewrite only the buckets an incoming batch touches (dynamic
@@ -92,6 +119,12 @@ def _hot_buckets(on: DataFrame, key: str) -> list[int]:
     return [r[0] for r in on.select(bucket_of(key)).distinct().collect()]
 
 
+def _batch_writer(df: DataFrame, batch: int, mode: str) -> DataFrameWriter:
+    """A writer of `df`'s rows at batch id `batch` (`__batch=<batch>` dirs).
+    The partition value is a literal, so the write plans no sort."""
+    return df.withColumn(BATCH_COL, F.lit(batch)).write.mode(mode).partitionBy(BATCH_COL)
+
+
 def _in_buckets(df: DataFrame, hot: list[int]) -> DataFrame:
     return df.where(F.col(BUCKET_COL).isin(hot)).drop(BUCKET_COL)
 
@@ -111,25 +144,36 @@ def _nullable(dt: DataType) -> DataType:
 
 
 def _data_schema(df: DataFrame) -> StructType:
-    """The schema a parquet read of `df`'s written files returns, bucket
-    column excluded."""
-    return _nullable(StructType([f for f in df.schema.fields if f.name != BUCKET_COL]))
+    """The schema a parquet read of `df`'s written files returns, partition
+    columns excluded."""
+    hidden = (BUCKET_COL, BATCH_COL)
+    return _nullable(StructType([f for f in df.schema.fields if f.name not in hidden]))
 
 
 def content_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, str]:
     """Order-free content fingerprint of `df` over `cols`: (row count,
-    "count:bit_xor-of-row-xxhash64"). One cheap agg job; the commutative
-    xor makes it independent of partitioning/ordering AND overflow-free
-    under Spark 4's ANSI mode (a long SUM over hashes raises — same reason
+    "count:bit_xor-of-row-xxhash64"). One job and no shuffle — the
+    aggregates ride as an observation on a noop write; the commutative xor
+    makes it independent of partitioning/ordering AND overflow-free under
+    Spark 4's ANSI mode (a long SUM over hashes raises — same reason
     plans/pipeline.lineage_rows uses bit_xor). Used as the alias-dict
-    staleness detector (canon_map manifests) and the merge-intent delta id
-    (streaming/incremental.py)."""
-    row = (
-        df.select(F.xxhash64(*[F.col(c).cast("string") for c in cols]).alias("__h"))
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(__h)").alias("h"))
-        .first()
-    )
-    return int(row["n"]), f"{row['n']}:{row['h']}"
+    staleness detector (canon_map manifests), the graph-features stamp
+    (streaming/incremental.py) and the shard export's input id
+    (operators/materialize.export_shards)."""
+    observed, fingerprint = observed_fingerprint(df.select(*cols), cols)
+    observed.write.format("noop").mode("overwrite").save()
+    return fingerprint()
+
+
+def observed_fingerprint(df: DataFrame, cols: list[str]) -> tuple[DataFrame, callable]:
+    """`df` with content_fingerprint's aggregates attached as an observation,
+    and a function returning (row count, fingerprint) once an action over
+    the returned frame has run — the fingerprint rides on a job that runs
+    anyway."""
+    obs = Observation()
+    h = F.xxhash64(*[F.col(c).cast("string") for c in cols])
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n"), F.bit_xor(h).alias("h"))
+    return observed, lambda: (int(obs.get["n"]), f"{obs.get['n']}:{obs.get['h']}")
 
 
 def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -178,10 +222,7 @@ class StageStore:
         once everything downstream of it has been refreshed."""
         doc = self.manifest(stage)
         doc.update(meta)
-        tmp = self._manifest_path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._manifest_path(stage))
+        self._replace_manifest(stage, doc)
 
     # ---------------------------------------------------------------- IO
     def has_staging_leak(self, stage: str) -> bool:
@@ -191,20 +232,29 @@ class StageStore:
         exactly — upsert's own recount only fixes the manifest row count."""
         return bool(glob.glob(os.path.join(self.path(stage), ".spark-staging*")))
 
-    def write(self, stage: str, df: DataFrame, meta: dict | None = None) -> DataFrame:
+    def write(
+        self, stage: str, df: DataFrame, meta: dict | None = None, batch: int | None = None
+    ) -> DataFrame:
         """Overwrite the stage output; manifest committed only after _SUCCESS.
         Row count comes from an observe() on the write job — metadata-only
         commit, no rescan. `meta` entries are recorded in the manifest (e.g.
-        the alias-dict fingerprint a canon_map was derived from)."""
-        self._overwrite(stage, df, None, meta)
+        the alias-dict fingerprint a canon_map was derived from). With
+        `batch`, the stage is rewritten in the batch layout with every row at
+        that id: a full rewrite of a page stage passes a committed id, so a
+        later retry of an uncommitted batch can never overwrite these rows."""
+        self._overwrite(stage, df, None, meta, batch)
         return self.read(stage)
 
     def _overwrite(
-        self, stage: str, df: DataFrame, bucket_by: str | None, meta: dict | None = None
+        self, stage: str, df: DataFrame, bucket_by: str | None, meta: dict | None = None,
+        batch: int | None = None,
     ) -> None:
         obs_df, obs = _observed(df)
         if bucket_by:
             write_bucketed(obs_df, self.path(stage), bucket_by)
+        elif batch is not None:
+            _batch_writer(obs_df, batch, "overwrite").parquet(self.path(stage))
+            meta = {**(meta or {}), "batch": batch}
         else:
             obs_df.write.mode("overwrite").parquet(self.path(stage))
         self._commit_manifest(
@@ -212,29 +262,72 @@ class StageStore:
             schema=_data_schema(df), meta=meta,
         )
 
-    def append_new(self, stage: str, df: DataFrame, keys: list[str] = KEYS) -> DataFrame:
-        """Append only rows whose key tuple is not already present (idempotent).
+    def append_new(self, stage: str, df: DataFrame, batch: int, log: dict | None = None) -> int:
+        """Commit `df` as batch `batch` of the stage and return its row count.
 
-        The anti-join replaces the reference's existence-check-before-insert
-        (service/DocProcAiService.py:360-366).
-        """
-        if self.is_done(stage):
-            # The anti-join runs lazily against the frame read() returned
-            # before the write: Spark lists that frame's files when read()
-            # returns, and an append commits only at job end, so the write
-            # cannot see its own files.
-            done = self.read(stage).select(*keys).distinct()
-            # select: the join would move the keys first, and every file of
-            # the stage keeps the column order its schema records
-            obs_df, obs = _observed(df.join(done, keys, "left_anti").select(*df.columns))
-            obs_df.write.mode("append").parquet(self.path(stage))
-            rows = self.manifest(stage)["rows"] + int(obs.get["rows"])
-        else:
-            obs_df, obs = _observed(df)
-            obs_df.write.mode("overwrite").parquet(self.path(stage))
-            rows = int(obs.get["rows"])
-        self._commit_manifest(stage, rows=rows, bucketed=False, schema=_data_schema(df))
-        return self.read(stage)
+        One write job: the rows land under `__batch=<batch>` (the whole
+        stage, when it is not done), and the manifest adds the count the
+        write observed. Nothing is read — whether these rows are new is
+        settled by the batch id, not by an anti-join against the stage: a
+        retry first drops every id ≥ `batch` (`rollback`), so it overwrites
+        its own id, and `read()` hides the id until the batch log commits
+        it. The reference checks existence before each insert
+        (service/DocProcAiService.py:360-366); here the page-level check is
+        `todo_keys` and the row-level one is the batch id.
+
+        `log` (the batch-log stage's append only) is recorded with the id as
+        the batch's log entry — e.g. its page-set fingerprint — and the
+        commit is logged at INFO."""
+        done = self.is_done(stage)
+        if done:
+            self.rollback(stage, batch - 1)
+        obs_df, obs = _observed(df)
+        _batch_writer(obs_df, batch, "append" if done else "overwrite").parquet(self.path(stage))
+        n = int(obs.get["rows"])
+        prior = self.manifest(stage) if done else {"rows": 0}
+        meta = {"batch": batch}
+        if log is not None:
+            entry = {"id": batch, **log, "rows": {**log.get("rows", {}), stage: n}}
+            meta["log"] = [*prior.get("log", []), entry]
+        self._commit_manifest(
+            stage, rows=prior["rows"] + n, bucketed=False, schema=_data_schema(df), meta=meta
+        )
+        if log is not None:
+            _log.info(
+                "batch %d committed: %s pages, rows %s", batch, log.get("pages"), entry["rows"]
+            )
+        return n
+
+    def committed_batch(self) -> int:
+        """Id of the last batch the batch log committed; 0 before the first."""
+        return self.manifest(LOG_STAGE).get("batch", 0) if self.is_done(LOG_STAGE) else 0
+
+    def batch_log(self) -> list[dict]:
+        """The batch log's entries, oldest first: one per committed id."""
+        return self.manifest(LOG_STAGE).get("log", []) if self.is_done(LOG_STAGE) else []
+
+    def rollback(self, stage: str, upto: int) -> None:
+        """Drop every batch of `stage` above id `upto`: its `__batch=` dirs are
+        deleted (each drop logged with stage and id) and a manifest that
+        counted one of them is recounted — or, with nothing left at or below
+        `upto`, removed. A no-op, with no Spark job, when the stage holds no
+        id above `upto`."""
+        root = self.path(stage)
+        for name in os.listdir(root) if os.path.isdir(root) else []:
+            col, _, batch = name.partition("=")
+            if col == BATCH_COL and int(batch) > upto:
+                shutil.rmtree(os.path.join(root, name))
+                _log.info("%s: dropped uncommitted batch %s", stage, batch)
+        if not self.is_done(stage) or self.manifest(stage).get("batch", 0) <= upto:
+            return
+        if upto == 0:
+            self.invalidate(stage)
+            return
+        doc = self.manifest(stage)
+        doc.update(rows=self._scan(stage, upto).count(), batch=upto)
+        if "log" in doc:
+            doc["log"] = [e for e in doc["log"] if e["id"] <= upto]
+        self._replace_manifest(stage, doc)
 
     def upsert(
         self, stage: str, df: DataFrame, keys: list[str] = KEYS, add: str | None = None
@@ -363,9 +456,19 @@ class StageStore:
         reader = self.spark.read
         return reader.schema(StructType.fromJson(schema)) if schema else reader
 
-    def read(self, stage: str) -> DataFrame:
+    def _scan(self, stage: str, upto: int | None = None) -> DataFrame:
+        """The stage's rows, pruned to batch ids ≤ `upto` (default: the
+        committed id) by a partition filter; the hidden columns dropped."""
         df = self._reader(stage).parquet(self.path(stage))
+        if BATCH_COL in df.columns:
+            upto = self.committed_batch() if upto is None else upto
+            df = df.where(F.col(BATCH_COL) <= upto).drop(BATCH_COL)
         return df.drop(BUCKET_COL) if BUCKET_COL in df.columns else df
+
+    def read(self, stage: str) -> DataFrame:
+        """The stage's committed rows: a batch the log has not committed is
+        never visible."""
+        return self._scan(stage)
 
     def _commit_manifest(
         self, stage: str, rows: int, bucketed: bool, schema: StructType,
@@ -376,6 +479,9 @@ class StageStore:
             doc["n_buckets"] = N_BUCKETS
         if meta:
             doc.update(meta)
+        self._replace_manifest(stage, doc)
+
+    def _replace_manifest(self, stage: str, doc: dict) -> None:
         tmp = self._manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(doc, f)
@@ -383,11 +489,18 @@ class StageStore:
 
     # ------------------------------------------------------------ resume
     def todo_keys(self, stage: str, inputs: DataFrame, keys: list[str] = KEYS) -> DataFrame:
-        """Input rows whose keys are NOT yet in the stage output (crash resume)."""
+        """Input rows whose keys are NOT yet in the stage output (crash resume).
+
+        The stage is never shuffled: its key scan is semi-joined against the
+        broadcast input keys, and the inputs anti-join that result — the
+        stage's rows of this batch's keys, no larger than the batch — as a
+        second broadcast."""
         if not self.is_done(stage):
             return inputs
-        done = self.read(stage).select(*keys).distinct()
-        return inputs.join(done, keys, "left_anti")
+        done = self._scan(stage).select(*keys).join(
+            F.broadcast(inputs.select(*keys)), keys, "left_semi"
+        )
+        return inputs.join(F.broadcast(done), keys, "left_anti")
 
     def invalidate(self, stage: str) -> None:
         """Drop a stage's manifest and _SUCCESS marker, so it reads as not

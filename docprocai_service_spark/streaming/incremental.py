@@ -5,25 +5,31 @@ messages carry only ids; work is queued and processed one-at-a-time with
 at-least-once crash recovery (reference: controller/dapr_controller.py:14-44,
 service/DocProcAiService.py:639-668), and every ingest re-runs linking and
 tagging over the new content (service/DocProcAiService.py:186-189,307-374).
-This is the stage store's one commit protocol — StageStore manifests +
-anti-join on done keys, "run the DAG over the keys that aren't done yet,
-append/merge" — and store-mode run_pipeline calls it, so a build is the
-first micro-batch and a re-run a replay.
+This is the stage store's one commit protocol, and store-mode run_pipeline
+calls it, so a build is the first micro-batch and a re-run a replay.
 
-Full-DAG incrementality: every micro-batch flows through ALL stages —
-extract → triples → mentions → linked → (canon_map if absent) → additive
-edge merge → entities — and links and merges its own pages before the page
-ledger commits, so no batch leaves work for a later one. The edge merge is
-bucket-scoped (StageStore.upsert dynamic partition overwrite) and ledgered
-per page so replays don't double-count; since round 4 it is EXACT under
-every crash schedule via a fingerprinted intent record (see
+A micro-batch commits as one unit. It takes the next batch id — 1 + the last
+id in the batch log, which is the `extracted` manifest (StageStore.LOG_STAGE)
+— and its pages are the delivered pages `todo_keys` does not find in
+`extracted`. It then flows through ALL stages — extract → triples → mentions
+→ linked → (canon_map if absent) → additive edge merge → entities — writing
+each page stage's rows under its batch id, and commits `extracted` LAST with
+the id and the page set's fingerprint in the log. Until that commit no read
+sees the batch's rows, and the next batch's first step drops them, so a
+retry — with the same pages or others — re-runs the batch from scratch. The
+committed `extracted` batches are exactly the pages merged into `edges`; no
+row-level anti-join and no page ledger remains.
+
+The edge merge is bucket-scoped (StageStore.upsert dynamic partition
+overwrite) and EXACT under every crash schedule via a fingerprinted intent
+record that brackets the upsert until the batch commits (see
 merge_edge_deltas), and a changed alias dictionary is auto-detected via a
 content fingerprint in the canon_map manifest, triggering an exact
-relink + edge rebuild (the reference re-derives groupings per ingest).
-Round 5 made the dictionary-refresh window itself crash-exact: the
-fingerprint is split into a pending stamp (map content) and a final stamp
-(downstream refreshed), so a crash mid-refresh can never replay into a
-silent merge onto stale edges (see _sync_canonical_state).
+relink + edge rebuild (the reference re-derives groupings per ingest). The
+dictionary-refresh window is crash-exact too: the fingerprint is split into
+a pending stamp (map content) and a final stamp (downstream refreshed), so a
+crash mid-refresh can never replay into a silent merge onto stale edges (see
+_sync_canonical_state).
 
 Priority ordering (ingest < linking in the reference,
 service/DocProcAiService.py:199,293) is the literal statement order below.
@@ -33,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +51,30 @@ from ..operators.extract import extract_stage
 from ..operators.linking import link_mentions
 from ..operators.materialize import EDGE_KEYS, edges_table, entities_table, resolve_entities
 from ..operators.triples import mentions_stage, triples_stage
-from ..sources.manifest import KEYS, StageStore, content_fingerprint
+from ..sources.manifest import (
+    KEYS,
+    LOG_STAGE,
+    StageStore,
+    content_fingerprint,
+    observed_fingerprint,
+)
+
+#: The stages written per batch id, in commit order (the log stage last).
+BATCH_STAGES = ["triples", "mentions", "linked", LOG_STAGE]
+
+
+@dataclass
+class _Batch:
+    """The micro-batch in flight: its id, page count, page-set fingerprint,
+    its persisted triples and lazy mentions, and the rows each stage
+    committed for it."""
+
+    id: int
+    pages: int
+    fp: str
+    triples: DataFrame
+    mentions: DataFrame
+    rows: dict = field(default_factory=dict)
 
 
 def incremental_ingest(
@@ -54,19 +84,20 @@ def incremental_ingest(
     alias_dict: DataFrame,
     features: bool = False,
 ) -> dict:
-    """Process only not-yet-done (url, warc_ts) keys; append/merge per stage.
+    """Process only not-yet-done (url, warc_ts) keys as one micro-batch.
 
-    At-least-once + idempotent: re-delivered pages anti-join away; a crash
-    between stages re-runs from the last committed manifest (the reference's
-    re-enqueue-PROCESSING sweep, without per-row state).
+    At-least-once + idempotent: re-delivered pages drop out in `todo_keys`;
+    a crash anywhere before the batch log commits leaves rows only at an
+    uncommitted batch id, which the next call drops before it runs (the
+    reference's re-enqueue-PROCESSING sweep, without per-row state).
 
-    Every batch runs the FULL DAG: new mentions are linked (append by
-    mention_id), the canonical map is computed once, and a CHANGED
-    dictionary on a later batch — even an EMPTY one — is detected via content
-    fingerprint and triggers an exact relink + edge rebuild; edge weights are
-    merged additively and bucket-scoped (merge_edge_deltas, exact under
-    every crash schedule), and the entity registry is refreshed (idempotent
-    overwrite of a dimension-sized table). The dictionary fingerprint is a
+    Every batch runs the FULL DAG: new mentions are linked, the canonical map
+    is computed once, and a CHANGED dictionary on a later batch — even an
+    EMPTY one — is detected via content fingerprint and triggers an exact
+    relink + edge rebuild; edge weights are merged additively and
+    bucket-scoped (merge_edge_deltas, exact under every crash schedule), and
+    the entity registry is refreshed (idempotent overwrite of a
+    dimension-sized table). The dictionary fingerprint is a
     REFRESH-COMPLETE stamp, not a map-content stamp: it is annotated onto
     the canon_map manifest only after linked/edges/entities agree with that
     map, so a crash anywhere inside the refresh window routes the next batch
@@ -74,8 +105,8 @@ def incremental_ingest(
     (see _sync_canonical_state). A batch with no new pages onto a consistent
     store returns after that stamp check. A lost stage manifest is
     re-derived or rebuilt exactly; a store with committed `edges` but no
-    `edges_pages` ledger was not written by this protocol and is refused
-    with ValueError before anything is touched.
+    batch log (and no merge intent) was not written by this protocol and is
+    refused with ValueError before anything is touched.
 
     features=True (round 6, VERDICT r5 #5) adds the analytics arm: after
     the batch's edge state settles, refresh_graph_features brings the
@@ -97,52 +128,63 @@ def _incremental_ingest(
 ) -> dict:
     from ..session import fat_binary_scan
 
-    if store.is_done("edges") and not store.is_done("edges_pages") and _read_intent(store) is None:
-        # this protocol commits edges and ledger under one intent record, so
-        # edges with neither were written elsewhere, over unknown pages
+    if store.is_done(LOG_STAGE):
+        foreign = "batch" not in store.manifest(LOG_STAGE)
+    else:
+        # this protocol commits the batch log last and keeps a merge intent
+        # until it does, so edges with neither were written elsewhere, over
+        # unknown pages
+        foreign = store.is_done("edges") and _read_intent(store) is None
+    if foreign:
         raise ValueError(
-            f"store {store.root!r} has a committed 'edges' stage but no 'edges_pages' "
-            "ledger; it was not written by incremental_ingest. Build a new store."
+            f"store {store.root!r} has committed stages but no batch log in its "
+            f"{LOG_STAGE!r} manifest; it was not written by incremental_ingest. "
+            "Build a new store."
         )
+    committed = store.committed_batch()
+    for stage in BATCH_STAGES:
+        store.rollback(stage, committed)
     _rederive_lost_stages(spark, store)
-    todo = store.todo_keys("extracted", new_pages) if store.is_done("extracted") else new_pages
-    n_new = todo.count()
+    todo, fingerprint = observed_fingerprint(store.todo_keys(LOG_STAGE, new_pages), KEYS)
+    # Lazy persists (NOT eager localCheckpoint): no barrier job, blocks can
+    # re-derive from lineage on executor loss, and the first consuming action
+    # fills the cache for the later ones.
+    extracted = extract_stage(todo).persist(StorageLevel.MEMORY_AND_DISK)
+    with fat_binary_scan(spark):
+        # This first action over the chain runs the todo joins and the fat
+        # html scan once, fills the extracted cache and observes the page
+        # count and fingerprint — no count job. It is the ONLY place the
+        # 256-row parquet batch earns its keep. Every later action in the
+        # batch reads narrow stage tables, which the 4096 default serves
+        # 15-30% faster (ADVICE r4: the previous whole-ingest scope taxed
+        # the merge/link readbacks).
+        extracted.write.format("noop").mode("overwrite").save()
+    n_new, fp = fingerprint()
     if n_new == 0:
+        extracted.unpersist()
         out = {"new_pages": 0}
         if store.is_done("mentions"):
             # No new pages, but the caller may be handing us a CHANGED
             # dictionary, or replaying after a crash mid-refresh. Verify the
             # stamp (one cheap agg on a dimension table) and repair if — and
             # only if — something is stale; a consistent store is untouched.
-            _sync_canonical_state(store, alias_dict, batch_mentions=None, out=out)
+            _sync_canonical_state(store, alias_dict, batch=None, out=out)
         return out
-    # Lazy persists (NOT eager localCheckpoint): no barrier job, blocks can
-    # re-derive from lineage on executor loss, and the first consuming action
-    # fills the cache for the later ones.
-    extracted = extract_stage(todo).persist(StorageLevel.MEMORY_AND_DISK)
-    # The 'extracted' stage is the re-delivery ledger (todo_keys above), so it
-    # must commit LAST: a crash after committing it but before the downstream
-    # appends would make retries see n_new==0 and silently never write those
-    # pages' triples/mentions. Committing downstream first keeps at-least-once:
-    # a crash anywhere re-runs the page, and each append_new anti-joins away
-    # rows already present (page keys for triples, mention_id for mentions).
     triples = triples_stage(extracted).persist(StorageLevel.MEMORY_AND_DISK)
+    batch = _Batch(committed + 1, n_new, fp, triples, mentions_stage(triples))
+    batch.rows["triples"] = store.append_new("triples", triples, batch.id)
+    batch.rows["mentions"] = store.append_new("mentions", batch.mentions, batch.id)
+    out = {"new_pages": n_new, "new_triples": batch.rows["triples"]}
+    _sync_canonical_state(store, alias_dict, batch=batch, out=out)
     with fat_binary_scan(spark):
-        # This first action over the chain executes the fat html scan (and
-        # fills the extracted + triples caches as a side effect) — the ONLY
-        # place the 256-row parquet batch earns its keep. Every later action
-        # in the batch reads narrow stage tables, which the 4096 default
-        # serves 15-30% faster (ADVICE r4: the previous whole-ingest scope
-        # taxed the merge/link readbacks).
-        store.append_new("triples", triples, keys=KEYS)
-    mentions = mentions_stage(triples)
-    store.append_new("mentions", mentions, keys=["mention_id"])
-    out = {"new_pages": n_new, "new_triples": triples.count()}
-    _sync_canonical_state(store, alias_dict, batch_mentions=mentions, out=out)
-    with fat_binary_scan(spark):
-        # normally served from the persisted cache; on eviction this re-runs
-        # the html scan, so it gets the fat-scan batch size too
-        store.append_new("extracted", extracted, keys=KEYS)
+        # the batch log commits LAST: this append commits the batch. Normally
+        # served from the persisted cache; on eviction this re-runs the html
+        # scan, so it gets the fat-scan batch size too
+        store.append_new(
+            LOG_STAGE, extracted, batch.id,
+            log={"fp": batch.fp, "pages": n_new, "rows": batch.rows},
+        )
+    _clear_intent(store)
     extracted.unpersist()
     triples.unpersist()
     return out
@@ -150,25 +192,28 @@ def _incremental_ingest(
 
 def _rederive_lost_stages(spark: SparkSession, store: StageStore) -> None:
     """Re-derive a lost `triples` / `mentions` manifest's stage from its
-    committed parent (both are row-wise functions of it): appending a batch
-    onto the not-done stage would overwrite it with the batch alone."""
+    committed parent (both are row-wise functions of it), at the committed
+    batch id: appending a batch onto the not-done stage would overwrite it
+    with the batch alone."""
     from ..session import fat_binary_scan
 
-    if store.is_done("extracted") and not store.is_done("triples"):
+    committed = store.committed_batch()
+    if store.is_done(LOG_STAGE) and not store.is_done("triples"):
         with fat_binary_scan(spark):
-            store.write("triples", triples_stage(store.read("extracted")))
+            store.write("triples", triples_stage(store.read(LOG_STAGE)), batch=committed)
     if store.is_done("triples") and not store.is_done("mentions"):
-        store.write("mentions", mentions_stage(store.read("triples")))
+        store.write("mentions", mentions_stage(store.read("triples")), batch=committed)
 
 
 def _sync_canonical_state(
     store: StageStore,
     alias_dict: DataFrame,
-    batch_mentions: DataFrame | None,
+    batch: _Batch | None,
     out: dict,
 ) -> None:
     """Bring canon_map / linked / edges / entities into exact agreement with
-    `alias_dict` — crash-safe (ADVICE r4 high).
+    `alias_dict` — crash-safe (ADVICE r4 high) — and link and merge the
+    in-flight `batch`, if any.
 
     The canon_map manifest carries TWO stamps:
 
@@ -183,7 +228,7 @@ def _sync_canonical_state(
     merging deltas onto edges keyed by the OLD map — the silent-staleness
     window the previous protocol had. Similarly, a `linked` stage without a
     manifest (torn write) is rebuilt from the full mentions stage, never
-    append_new-ed with only the current batch (which would overwrite and
+    appended to with only the current batch (which would overwrite and
     permanently drop prior links). A canon_map that carries neither stamp
     (a store from before the fingerprint protocol) matches no dictionary, so
     it counts as stale and takes the exact refresh.
@@ -207,15 +252,15 @@ def _sync_canonical_state(
     )
     consistent = man is not None and not (map_stale or refresh_pending)
     if (
-        batch_mentions is None
+        batch is None
         and consistent
         and all(store.is_done(s) for s in ("linked", "edges", "entities"))
         and _read_intent(store) is None
     ):
         # Caught up: every batch links and merges its own pages before the
-        # page ledger (`extracted`) commits, so with no new pages there is
-        # nothing to link or merge. A lost manifest or a leftover merge
-        # intent takes the general path below, which repairs it.
+        # batch log commits, so with no new pages there is nothing to link
+        # or merge. A lost manifest or a leftover merge intent takes the
+        # general path below, which repairs it.
         return
     if map_stale:
         store.invalidate("canon_map")
@@ -235,19 +280,22 @@ def _sync_canonical_state(
     needs_refresh = map_stale or refresh_pending or (
         map_fresh and (store.is_done("linked") or store.is_done("edges"))
     )
-    if needs_refresh or not store.is_done("linked"):
-        # exact relink of EVERY committed mention: also the first-write path
-        # and the torn-write repair path.
-        store.write("linked", link_mentions(store.read("mentions"), alias_dict))
-    elif batch_mentions is not None:
-        store.append_new(
-            "linked", link_mentions(batch_mentions, alias_dict), keys=["mention_id"]
+    committed = store.committed_batch()
+    if (needs_refresh or not store.is_done("linked")) and committed:
+        # exact relink of EVERY committed mention, kept at a committed id:
+        # also the torn-write repair path.
+        store.write(
+            "linked", link_mentions(store.read("mentions"), alias_dict), batch=committed
+        )
+    if batch is not None:
+        batch.rows["linked"] = store.append_new(
+            "linked", link_mentions(batch.mentions, alias_dict), batch.id
         )
     if needs_refresh:
-        rebuild_edges(store, alias_dict, canon_map)
+        rebuild_edges(store, alias_dict, canon_map, batch)
         out["rebuilt_for_dict_change"] = True
     else:
-        out["merged_edge_pages"] = merge_edge_deltas(store, alias_dict, canon_map)
+        out["merged_edge_pages"] = merge_edge_deltas(store, alias_dict, canon_map, batch)
     if needs_refresh or map_fresh or not store.is_done("entities"):
         # entities is a pure function of (alias_dict, canon_map); outside a
         # refresh both are proven unchanged by the alias_fp stamp
@@ -283,35 +331,35 @@ def _clear_intent(store: StageStore) -> None:
         pass
 
 
-def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataFrame) -> int:
-    """Additively merge edge-weight contributions of not-yet-merged pages.
+def merge_edge_deltas(
+    store: StageStore, alias_dict: DataFrame, canon_map: DataFrame, batch: _Batch | None = None
+) -> int:
+    """Additively merge the in-flight batch's edge weights into `edges`.
 
-    Reads the committed `triples` stage for pages absent from the
-    `edges_pages` ledger, resolves them to entities, aggregates delta
-    weights, and merges them with StageStore.upsert(add="weight"): the
-    touched buckets of `edges` (bucket-PRUNED on the __bucket partition
-    column, ≤ 16 dirs) and the delta go through one sum-by-key aggregation,
-    and only those buckets are rewritten — one scan plus one write job,
-    O(touched buckets). With no merge intent and no committed `edges` (a
-    first merge, or a lost edges manifest) there are no weights to add to,
-    so the merge is rebuild_edges. Returns the number of pages merged.
+    The delta is the batch's own persisted triples, resolved to entities and
+    aggregated; StageStore.upsert(add="weight") sums it into the touched
+    buckets of `edges` (bucket-PRUNED on the __bucket partition column, ≤ 16
+    dirs) — one scan plus one write job, O(touched buckets); nothing of the
+    stored triples is read. With no merge intent and no committed `edges`
+    (a first merge, or a lost edges manifest) there are no weights to add
+    to, so the merge is rebuild_edges. Returns the number of the batch's
+    pages (0 without a batch).
 
-    Crash contract — EXACT, no double-count window (closes VERDICT r3 #2):
-    the merge is bracketed by an atomically-renamed intent record
-    (edges.merge.json) carrying an order-free fingerprint of the delta's
-    page set:
+    Crash contract — EXACT, no double-count window: the merge is bracketed
+    by an atomically-renamed intent record (edges.merge.json) carrying the
+    batch's page-set fingerprint, which stays until the batch log commits:
 
       1. intent {fp, begin}  →  2. edge upsert  →  3. intent {fp, done}
-      →  4. ledger append    →  5. intent cleared
+      →  4. batch log commit (`extracted`, with fp)  →  5. intent cleared
 
-    Replay re-derives the same page set (the ledger is unchanged until 4)
-    and hence the same fp, then dispatches on the intent: `done` + matching
-    fp ⇒ the upsert committed and only the ledger commit was lost — finish
-    step 4 without re-adding; any OTHER surviving intent (begin, or done
-    with a foreign fp — e.g. a retry that picked up additional pages) ⇒ how
-    much of that delta reached the table is ambiguous, so repair with
-    rebuild_edges(), the O(triples-table) exact recompute, which also
-    rewrites the ledger. A pre-intent torn dynamic-partition-overwrite
+    A replay dispatches on a surviving intent: `done` with the fp the batch
+    log committed last ⇒ only step 5 was lost — clear it; `done` with the
+    retry's own fp ⇒ the retry carries exactly the pages whose upsert
+    committed — skip the upsert; any OTHER intent (begin, or done with a
+    foreign fp — e.g. a retry with another page set, or no batch at all) ⇒
+    how much of which delta reached the table is ambiguous, so repair with
+    rebuild_edges(), the exact recompute from the committed triples plus
+    the in-flight batch. A pre-intent torn dynamic-partition-overwrite
     (leaked .spark-staging dir from a legacy store) takes the same repair
     path. The reference's ON CONFLICT is atomic per statement
     (persistence/SegmentDbConnector.py:101-124); this protocol reaches the
@@ -320,73 +368,62 @@ def merge_edge_deltas(store: StageStore, alias_dict: DataFrame, canon_map: DataF
     in one snapshot and make the repair path unreachable.
     """
     intent = _read_intent(store)
-    if intent is None and not store.is_done("edges"):
-        rebuild_edges(store, alias_dict, canon_map)
-        return store.manifest("edges_pages")["rows"]
-    all_triples = store.read("triples")
-    contrib = (
-        all_triples.join(store.read("edges_pages"), KEYS, "left_anti")
-        if store.is_done("edges_pages")
-        else all_triples
-    )
-    contrib = contrib.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        pages = contrib.select(*KEYS).distinct()
-        n_pages, fp = content_fingerprint(pages, KEYS)
-        if intent is not None:
-            if intent.get("state") == "done" and intent.get("fp") == fp:
-                # upsert committed for exactly this delta; only the ledger
-                # commit was lost — finish it (idempotent anti-join append)
-                store.append_new("edges_pages", pages, keys=KEYS)
-                _clear_intent(store)
-                return n_pages
-            if intent.get("state") == "done" and n_pages == 0:
-                # upsert AND ledger both committed; only the intent cleanup
-                # was lost — nothing to merge, don't pay a rebuild
-                _clear_intent(store)
-                return 0
-            rebuild_edges(store, alias_dict, canon_map)
-            _clear_intent(store)
-            return n_pages
-        if n_pages == 0:
-            return 0
-        if store.is_done("edges") and store.has_staging_leak("edges"):
-            rebuild_edges(store, alias_dict, canon_map)
-            return n_pages
-        delta = edges_table(resolve_entities(contrib, alias_dict, canon_map)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            _write_intent(store, fp, "begin")
-            store.upsert("edges", delta, EDGE_KEYS, add="weight")
-            _write_intent(store, fp, "done")
-        finally:
-            delta.unpersist()
-        store.append_new("edges_pages", pages, keys=KEYS)
+    log = store.batch_log()
+    if intent and intent.get("state") == "done" and log and log[-1]["fp"] == intent.get("fp"):
+        # the batch this intent brackets committed; only the cleanup was lost
         _clear_intent(store)
-        return n_pages
+        intent = None
+    pages = batch.pages if batch is not None else 0
+    if intent is None and not store.is_done("edges"):
+        rebuild_edges(store, alias_dict, canon_map, batch)
+        return pages
+    if intent is not None:
+        if batch is None or intent.get("state") != "done" or intent.get("fp") != batch.fp:
+            rebuild_edges(store, alias_dict, canon_map, batch)
+        return pages
+    if batch is None:
+        return 0
+    if store.has_staging_leak("edges"):
+        rebuild_edges(store, alias_dict, canon_map, batch)
+        return pages
+    delta = edges_table(resolve_entities(batch.triples, alias_dict, canon_map)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    try:
+        _write_intent(store, batch.fp, "begin")
+        store.upsert("edges", delta, EDGE_KEYS, add="weight")
+        _write_intent(store, batch.fp, "done")
     finally:
-        contrib.unpersist()
+        delta.unpersist()
+    return pages
 
 
-def rebuild_edges(store: StageStore, alias_dict: DataFrame, canon_map: DataFrame) -> DataFrame:
-    """Exact edge recompute from the committed triples stage — the repair arm
-    of merge_edge_deltas' crash protocol and the refresh path when the alias
-    dictionary changes.
+def rebuild_edges(
+    store: StageStore, alias_dict: DataFrame, canon_map: DataFrame, batch: _Batch | None = None
+) -> DataFrame:
+    """Exact edge recompute from the committed triples plus the in-flight
+    `batch`'s — the repair arm of merge_edge_deltas' crash protocol and the
+    refresh path when the alias dictionary changes.
 
     FULL replace, not merge: the edges stage is invalidated before the
     bucketed rewrite so rows keyed by an older canon map cannot survive
     upsert's replace-by-key semantics. The whole operation runs under the
     same intent record merge_edge_deltas uses — a crash at ANY point leaves
     a `begin` intent, which routes the next merge straight back here, so
-    partial rebuilds are never mistaken for merged state."""
+    partial rebuilds are never mistaken for merged state. It ends with the
+    batch's `done` intent, which the batch log's commit clears, or with no
+    intent when no batch is in flight."""
     _write_intent(store, "rebuild", "begin")
     triples = store.read("triples")
+    if batch is not None:
+        triples = triples.unionByName(batch.triples)
     edges = edges_table(resolve_entities(triples, alias_dict, canon_map))
     store.invalidate("edges")
     out = store.upsert("edges", edges, keys=EDGE_KEYS)
-    store.write("edges_pages", triples.select(*KEYS).distinct())
-    _clear_intent(store)
+    if batch is not None:
+        _write_intent(store, batch.fp, "done")
+    else:
+        _clear_intent(store)
     return out
 
 

@@ -269,9 +269,9 @@ def test_incremental_full_dag_matches_batch(spark, spark_corpus, tmp_path):
     # so the second batch leaves its files alone (still equal to a fresh run,
     # asserted below)
     assert _files(store.path("entities")) == ents_before
-    # only pages that actually emit triples enter the edge ledger — empty
-    # pages have nothing to contribute (and nothing to replay)
-    assert 0 < m1["merged_edge_pages"] <= 120
+    # every page of the batch is merged, the ones without triples included:
+    # the batch log, not a page ledger, records what was merged
+    assert m1["merged_edge_pages"] == 120
     assert m1["new_pages"] + m2["new_pages"] == pages.count()
     # redelivery of the whole corpus after completion: full no-op
     m3 = incremental_ingest(spark, pages, store, alias_dict=alias)
@@ -291,8 +291,9 @@ def test_incremental_full_dag_matches_batch(spark, spark_corpus, tmp_path):
 
 
 def test_incremental_edge_merge_is_additive_and_ledgered(spark, spark_corpus, tmp_path):
-    """A page whose triples were already merged must not contribute twice —
-    the edges_pages ledger anti-joins it away on redelivery."""
+    """A page whose triples were already merged must not contribute twice:
+    a merge outside a batch has no delta, and a redelivered page never
+    reaches a batch (the batch log holds it)."""
     from docprocai_service_spark.streaming.incremental import merge_edge_deltas
 
     pages, alias = spark_corpus
@@ -302,6 +303,8 @@ def test_incremental_edge_merge_is_additive_and_ledgered(spark, spark_corpus, tm
     key1 = _edges_key(store.read("edges"))
     # calling the merge again with nothing new: zero pages, identical edges
     assert merge_edge_deltas(store, alias, store.read("canon_map")) == 0
+    assert _edges_key(store.read("edges")) == key1
+    assert incremental_ingest(spark, b1, store, alias_dict=alias) == {"new_pages": 0}
     assert _edges_key(store.read("edges")) == key1
 
 
@@ -315,10 +318,10 @@ def test_incremental_crash_between_stages_recovers(spark, spark_corpus, tmp_path
 
     real_append = StageStore.append_new
 
-    def crashing_append(self, stage, df, keys):
+    def crashing_append(self, stage, *a, **k):
         if stage == "mentions":
             raise RuntimeError("simulated crash between stage commits")
-        return real_append(self, stage, df, keys=keys)
+        return real_append(self, stage, *a, **k)
 
     StageStore.append_new = crashing_append
     try:
@@ -365,30 +368,31 @@ def lost_manifest_base(spark, spark_corpus, tmp_path_factory):
     shutil.rmtree(base, ignore_errors=True)
 
 
-@pytest.mark.parametrize("stage", [*_STORE_STAGES, "edges_pages"])
+@pytest.mark.parametrize("stage", _STORE_STAGES)
 def test_lost_manifest_repairs_or_refuses(spark, spark_corpus, tmp_path, lost_manifest_base, stage):
-    """A stage whose manifest is lost (a torn write) under a committed page
-    ledger: the next batch either converges to the lazy pipeline — every
-    stage committed, page stages holding every page's rows — or refuses
-    with ValueError and leaves the store untouched. Appending the batch
-    onto a not-done triples/mentions stage would overwrite it with the
-    batch alone, and upserting onto a not-done edges stage would write the
-    batch's delta as the whole stage."""
+    """A stage whose manifest is lost (a torn write): the next batch either
+    converges to the lazy pipeline — every stage committed, page stages
+    holding every page's rows — or refuses with ValueError and leaves the
+    store untouched. Appending the batch onto a not-done triples/mentions
+    stage would overwrite it with the batch alone, and upserting onto a
+    not-done edges stage would write the batch's delta as the whole stage.
+    The `extracted` manifest is the batch log, so losing it leaves committed
+    edges over unknown pages: refused."""
     pages, alias = spark_corpus
     base, want = lost_manifest_base
     d = str(tmp_path / "store")
     shutil.copytree(base, d)
     store = StageStore(spark, d)
     store.invalidate(stage)
-    if stage == "edges_pages":
-        # committed edges without a ledger: not this protocol's state
+    if stage == "extracted":
+        # committed edges without a batch log: not this protocol's state
         before = _files(d)
-        with pytest.raises(ValueError, match="edges_pages"):
+        with pytest.raises(ValueError, match="no batch log"):
             incremental_ingest(spark, pages, store, alias)
         assert _files(d) == before
         return
     incremental_ingest(spark, pages, store, alias)
-    assert all(store.is_done(s) for s in [*_STORE_STAGES, "edges_pages"])
+    assert all(store.is_done(s) for s in _STORE_STAGES)
     for s in ["extracted", "triples", "mentions"]:
         assert store.read(s).count() == store.manifest(s)["rows"] == want[s], s
     assert _edges_key(store.read("edges")) == want["edges"]
@@ -452,11 +456,13 @@ def test_streaming_features_arm_matches_batch_twin(spark, spark_corpus, tmp_path
 
 
 def test_store_with_edges_but_no_ledger_is_refused(spark, spark_corpus, tmp_path):
-    """A store whose `edges` stage is committed without the `edges_pages`
-    ledger was not written by incremental_ingest: which pages its weights
-    cover is unknown, so a batch refuses it before touching anything. A
-    store run_pipeline built carries the ledger and leaves the one bucketed
-    layout behind."""
+    """A store whose `edges` stage is committed without a batch log — no
+    `extracted` stage, or an `extracted` manifest that records no batch
+    (the layout before batch ids) — was not written by incremental_ingest:
+    which pages its weights cover is unknown, so a batch refuses it before
+    touching anything. A store run_pipeline built carries the log and leaves
+    the one bucketed layout behind."""
+    import json
     import os
 
     pages, alias = spark_corpus
@@ -464,14 +470,24 @@ def test_store_with_edges_but_no_ledger_is_refused(spark, spark_corpus, tmp_path
     b1 = pages.limit(200).localCheckpoint()
     run_pipeline(spark, b1, alias, out_dir=d, collect_lineage=False)
     store = StageStore(spark, d)
-    assert store.is_done("edges_pages")
+    assert [e["id"] for e in store.batch_log()] == [1]
     _assert_one_store_layout(spark, store)
-    shutil.rmtree(store.path("edges_pages"))
-    os.remove(os.path.join(d, "edges_pages.manifest.json"))
-    before = _files(d)
-    with pytest.raises(ValueError, match="no 'edges_pages' ledger"):
-        incremental_ingest(spark, pages, store, alias)
-    assert _files(d) == before
+
+    def assert_refused():
+        before = _files(d)
+        with pytest.raises(ValueError, match="no batch log"):
+            incremental_ingest(spark, pages, store, alias)
+        assert _files(d) == before
+
+    manifest = os.path.join(d, "extracted.manifest.json")
+    with open(manifest) as f:
+        doc = json.load(f)
+    with open(manifest, "w") as f:
+        json.dump({k: v for k, v in doc.items() if k not in ("batch", "log")}, f)
+    assert_refused()
+    shutil.rmtree(store.path("extracted"))
+    os.remove(manifest)
+    assert_refused()
 
 
 def test_caught_up_replay_runs_no_merge_unless_an_intent_is_left(
@@ -499,7 +515,7 @@ def test_caught_up_replay_runs_no_merge_unless_an_intent_is_left(
         return real_merge(*a, **k)
 
     monkeypatch.setattr(incremental, "merge_edge_deltas", counting_merge)
-    stages = [*_STORE_STAGES, "edges_pages"]
+    stages = _STORE_STAGES
     versions, files = {s: store.version(s) for s in stages}, _files(d)
     assert incremental_ingest(spark, pages, store, alias) == {"new_pages": 0}
     assert merges == []
@@ -540,7 +556,7 @@ def test_first_batch_without_triples_then_merge(spark, spark_corpus, tmp_path):
         .withColumn("html", F.encode(F.lit("<html><body><main></main></body></html>"), "UTF-8"))
     )
     store = StageStore(spark, str(tmp_path / "no_triples"))
-    assert incremental_ingest(spark, empty, store, alias)["merged_edge_pages"] == 0
+    assert incremental_ingest(spark, empty, store, alias)["merged_edge_pages"] == 5
     assert store.is_done("edges") and store.manifest("edges")["rows"] == 0
     incremental_ingest(spark, pages, store, alias)
     _assert_one_store_layout(spark, store)
@@ -587,11 +603,14 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
     a steady-state micro-batch (the second after the build). The bounds are
     the counts measured on this corpus with the additive bucket upsert,
     barrier-free appends, schema-carrying reads, the one-shuffle lineage,
-    a first merge that is the edge rebuild and a caught-up replay that runs
-    no merge (without the first three: 24 and 78 for resume and batch;
-    without the last two: 34 and 10 for build and resume), so a change
-    that adds jobs to any of them fails here. Every stage's schema-carrying
-    read must equal what parquet inference returns."""
+    a first merge that is the edge rebuild, a caught-up replay that runs
+    no merge, batch-numbered appends with no anti-join or page ledger,
+    a shuffle-free todo_keys and fingerprints observed on jobs that run
+    anyway (without the first three: 24 and 78 for resume and batch;
+    without the next two: 34 and 10 for build and resume; without the last
+    three: 29, 7 and 46), so a change that adds jobs to any of them fails
+    here. Every stage's schema-carrying read must equal what parquet
+    inference returns, the hidden partition columns aside."""
     pages, alias = spark_corpus
     sc = spark.sparkContext
     d = str(tmp_path / "jobs")
@@ -617,11 +636,11 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
         "pin.batch", lambda: incremental_ingest(spark, b2, StageStore(spark, d), alias_dict=alias)
     )
     assert m["new_pages"] == b2.count() and m["merged_edge_pages"] > 0
-    assert n_build <= 29 and n_resume <= 7 and n_batch <= 46, (n_build, n_resume, n_batch)
+    assert n_build <= 24 and n_resume <= 7 and n_batch <= 23, (n_build, n_resume, n_batch)
 
     store = StageStore(spark, d)
-    for stage in [*_STORE_STAGES, "edges_pages"]:
-        inferred = spark.read.parquet(store.path(stage)).drop("__bucket").schema
+    for stage in _STORE_STAGES:
+        inferred = spark.read.parquet(store.path(stage)).drop("__bucket", "__batch").schema
         assert "schema" in store.manifest(stage), stage
         assert store.read(stage).schema == inferred, stage
 
@@ -632,11 +651,12 @@ def test_store_resume_and_micro_batch_job_counts(spark, spark_corpus, tmp_path):
 
 
 def test_edge_merge_crash_before_ledger_commit_converges(spark, spark_corpus, tmp_path):
-    """VERDICT r3 #3: a crash BETWEEN the edge upsert and the edges_pages
-    ledger commit used to double-count the in-flight pages' weights on
-    replay. The merge-intent record (edges.merge.json) closes the window:
-    the retry recognizes the committed upsert by its delta fingerprint and
-    only finishes the ledger commit."""
+    """VERDICT r3 #3: a crash BETWEEN the edge upsert and the batch log's
+    commit (the `extracted` append) must not double-count the in-flight
+    pages' weights on replay. The merge-intent record (edges.merge.json)
+    closes the window: it stays `done` with the batch's page-set
+    fingerprint until the log commits, and the retry — the same pages,
+    hence the same fingerprint — skips the upsert."""
     pages, alias = spark_corpus
     store = StageStore(spark, str(tmp_path / "intent1"))
     b1 = pages.limit(120).localCheckpoint()
@@ -644,23 +664,33 @@ def test_edge_merge_crash_before_ledger_commit_converges(spark, spark_corpus, tm
     incremental_ingest(spark, b1, store, alias_dict=alias)
 
     real_append = StageStore.append_new
+    real_upsert = StageStore.upsert
     crashed = {"n": 0}
+    upserts = []
 
-    def crashing_append(self, stage, df, keys):
-        if stage == "edges_pages" and crashed["n"] == 0:
+    def crashing_append(self, stage, *a, **k):
+        if stage == "extracted" and crashed["n"] == 0:
             crashed["n"] += 1
             raise RuntimeError("simulated crash after edge upsert, before ledger commit")
-        return real_append(self, stage, df, keys=keys)
+        return real_append(self, stage, *a, **k)
+
+    def counting_upsert(self, stage, *a, **k):
+        upserts.append(stage)
+        return real_upsert(self, stage, *a, **k)
 
     StageStore.append_new = crashing_append
+    StageStore.upsert = counting_upsert
     try:
         with pytest.raises(RuntimeError):
             incremental_ingest(spark, b2, store, alias_dict=alias)
+        assert upserts == ["edges"]
+        # retry converges — previously this re-added b2's weights
+        # (double-count); now it skips the committed upsert
+        incremental_ingest(spark, b2, store, alias_dict=alias)
+        assert upserts == ["edges"]
     finally:
         StageStore.append_new = real_append
-
-    # retry converges — previously this re-added b2's weights (double-count)
-    incremental_ingest(spark, b2, store, alias_dict=alias)
+        StageStore.upsert = real_upsert
     full = run_pipeline(spark, pages, alias, out_dir=None, collect_lineage=False)
     assert _edges_key(store.read("edges")) == _edges_key(full.edges)
     full.triples.unpersist()
@@ -784,11 +814,11 @@ def test_dict_change_crash_mid_refresh_repairs_exactly(spark, spark_corpus, tmp_
     real_write = StageStore.write
     crashed = {"n": 0}
 
-    def crashing_write(self, stage, df, meta=None):
+    def crashing_write(self, stage, *a, **k):
         if stage == "linked" and crashed["n"] == 0:
             crashed["n"] += 1
             raise RuntimeError("simulated crash between canon_map commit and refresh")
-        return real_write(self, stage, df, meta=meta)
+        return real_write(self, stage, *a, **k)
 
     StageStore.write = crashing_write
     try:
@@ -921,10 +951,25 @@ def _restore(originals):
         setattr(StageStore, name, real)
 
 
+def _assert_batches_committed(store):
+    """Every stage's manifest counts exactly the rows a read returns, and no
+    page stage holds a `__batch=` dir above the batch log's committed id."""
+    import os
+
+    for stage in _STORE_STAGES:
+        assert store.manifest(stage)["rows"] == store.read(stage).count(), stage
+    committed = store.committed_batch()
+    for stage in ["extracted", "triples", "mentions", "linked"]:
+        ids = [int(e.name.split("=")[1]) for e in os.scandir(store.path(stage))
+               if e.name.startswith("__batch=")]
+        assert max(ids, default=0) <= committed, (stage, ids, committed)
+
+
 # ids False/True: the second micro-batch without/with a dictionary change
 @pytest.mark.parametrize(
     "case",
-    [pytest.param("batch", id="False"), pytest.param("dict_change", id="True"), "build"],
+    [pytest.param("batch", id="False"), pytest.param("dict_change", id="True"), "build",
+     "other_pages"],
 )
 def test_every_crash_point_converges(spark, spark_corpus, tmp_path, case):
     """Mechanical proof of the 'exact under every crash schedule' claim:
@@ -932,13 +977,18 @@ def test_every_crash_point_converges(spark, spark_corpus, tmp_path, case):
     (including the dictionary-change refresh schedule), or of a
     run_pipeline(out_dir=…) build onto an empty directory, crash at n,
     retry to completion, and require edges + linked to equal a fresh batch
-    run. Targeted tests pin the interesting windows; this sweep guarantees
-    no window was missed."""
+    run, every manifest's row count to equal its stage's rows, and no
+    uncommitted batch dir to remain. In `other_pages` the retry carries a
+    different page set: batch A (50 pages after the 150-page base) crashes,
+    an overlapping batch B (A's last 25 pages and 25 more) commits, then A
+    is redelivered. Targeted tests pin the interesting windows; this sweep
+    guarantees no window was missed."""
     import shutil as _sh
 
     pages, alias = spark_corpus
     alias2 = alias.filter(F.length("alias") > 6).localCheckpoint() if case == "dict_change" else alias
     base = str(tmp_path / "base")
+    final_pages = pages
     if case == "build":
         StageStore(spark, base)  # an empty directory
 
@@ -948,12 +998,23 @@ def test_every_crash_point_converges(spark, spark_corpus, tmp_path, case):
         b1 = pages.limit(150).localCheckpoint()
         b2 = pages.join(b1.select("url", "warc_ts"), ["url", "warc_ts"], "left_anti").localCheckpoint()
         incremental_ingest(spark, b1, StageStore(spark, base), alias_dict=alias)
+        if case == "other_pages":
+            rest = sorted(r.url for r in b2.select("url").collect())
+            batch_a = pages.where(F.col("url").isin(rest[:50])).localCheckpoint()
+            batch_b = pages.where(F.col("url").isin(rest[25:75])).localCheckpoint()
+            final_pages = b1.unionByName(pages.where(F.col("url").isin(rest[:75])))
+            b2 = batch_a
 
         def call(store):
             incremental_ingest(spark, b2, store, alias_dict=alias2)
 
+    def retry(store):
+        if case == "other_pages":
+            incremental_ingest(spark, batch_b, store, alias_dict=alias2)
+        call(store)
+
     # expected end state: one fresh batch over everything with the final dict
-    full = run_pipeline(spark, pages, alias2, out_dir=None, collect_lineage=False)
+    full = run_pipeline(spark, final_pages, alias2, out_dir=None, collect_lineage=False)
     want_edges = _edges_key(full.edges)
     want_linked = sorted(map(tuple, full.linked.collect()))
     linked_cols = full.linked.columns
@@ -984,11 +1045,133 @@ def test_every_crash_point_converges(spark, spark_corpus, tmp_path, case):
         finally:
             _restore(originals)
         # retry (at-least-once redelivery) — must fully converge
-        call(store)
+        retry(store)
         assert _edges_key(store.read("edges")) == want_edges, f"edges diverged, crash point {n}"
         got_linked = sorted(map(tuple, store.read("linked").select(*linked_cols).collect()))
         assert got_linked == want_linked, f"linked diverged, crash point {n}"
+        _assert_batches_committed(store)
         _sh.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("stage", ["triples", "mentions", "linked", "extracted"])
+def test_uncommitted_batch_files_are_never_read(
+    spark, spark_corpus, tmp_path, lost_manifest_base, monkeypatch, stage
+):
+    """The window the crash sweep cannot reach, since it crashes only
+    between mutator calls: an append's Spark write has landed its
+    `__batch=<id>` files but its manifest never commits. Reads never return
+    those rows, and the retry drops them and converges to the lazy
+    pipeline."""
+    import os
+
+    pages, alias = spark_corpus
+    base, want = lost_manifest_base
+    d = str(tmp_path / "store")
+    shutil.copytree(base, d)
+    store = StageStore(spark, d)
+    before = store.read(stage).count()
+    batch = store.committed_batch() + 1
+    real_commit = StageStore._commit_manifest
+    crashed = []
+
+    def crashing_commit(self, s, *a, **k):
+        if s == stage and not crashed:
+            crashed.append(s)
+            raise RuntimeError(f"simulated crash before the {s} manifest commit")
+        return real_commit(self, s, *a, **k)
+
+    monkeypatch.setattr(StageStore, "_commit_manifest", crashing_commit)
+    with pytest.raises(RuntimeError):
+        incremental_ingest(spark, pages, store, alias)
+    monkeypatch.setattr(StageStore, "_commit_manifest", real_commit)
+    assert os.path.isdir(os.path.join(store.path(stage), f"__batch={batch}"))
+    assert store.read(stage).count() == before == store.manifest(stage)["rows"]
+
+    incremental_ingest(spark, pages, store, alias)
+    assert _edges_key(store.read("edges")) == want["edges"]
+    got_linked = sorted(map(tuple, store.read("linked").select(*want["linked_cols"]).collect()))
+    assert got_linked == want["linked"]
+    for s in ["extracted", "triples", "mentions"]:
+        assert store.read(s).count() == want[s], s
+    _assert_batches_committed(store)
+
+
+def test_steady_micro_batch_reads_no_page_stage(
+    spark, spark_corpus, tmp_path, lost_manifest_base, monkeypatch
+):
+    """A steady micro-batch costs O(batch) in the page stages: it appends its
+    own rows and merges its own triples, and calls StageStore.read on none
+    of extracted, triples, mentions and linked (todo_keys' key scan of
+    `extracted` is a broadcast semi-join, pinned by the plan test below)."""
+    pages, alias = spark_corpus
+    base, want = lost_manifest_base
+    d = str(tmp_path / "store")
+    shutil.copytree(base, d)
+    reads = []
+    real_read = StageStore.read
+
+    def counting_read(self, stage):
+        reads.append(stage)
+        return real_read(self, stage)
+
+    monkeypatch.setattr(StageStore, "read", counting_read)
+    m = incremental_ingest(spark, pages, StageStore(spark, d), alias)
+    monkeypatch.setattr(StageStore, "read", real_read)
+    assert m["new_pages"] == 100 and m["merged_edge_pages"] == 100
+    assert not {"extracted", "triples", "mentions", "linked"} & set(reads), reads
+    assert _edges_key(StageStore(spark, d).read("edges")) == want["edges"]
+
+
+def test_todo_keys_never_shuffles_the_stage(spark, spark_corpus, lost_manifest_base):
+    """todo_keys semi-joins the stage's key scan against the broadcast batch
+    keys and anti-joins the batch against that broadcast result: the plan
+    holds broadcasts and the `extracted` scan, and no shuffle Exchange."""
+    import re
+
+    pages, _ = spark_corpus
+    base, _ = lost_manifest_base
+    store = StageStore(spark, base)
+    todo = store.todo_keys("extracted", pages)
+    plan = todo._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan and "extracted" in plan, plan
+    assert not re.search(r"(?<!Broadcast)Exchange ", plan), plan
+    assert todo.count() == 100
+
+
+def test_batch_commit_and_rollback_are_logged(
+    spark, spark_corpus, tmp_path, lost_manifest_base, caplog
+):
+    """Each batch commit is logged with its id, page count and rows per
+    stage, and each recovery that drops an uncommitted batch dir with its
+    stage and id."""
+    import logging
+
+    pages, alias = spark_corpus
+    base, _ = lost_manifest_base
+    d = str(tmp_path / "store")
+    shutil.copytree(base, d)
+    store = StageStore(spark, d)
+    batch = store.committed_batch() + 1
+    real_append = StageStore.append_new
+
+    def crashing_append(self, stage, *a, **k):
+        if stage == "mentions":
+            raise RuntimeError("simulated crash after the triples append")
+        return real_append(self, stage, *a, **k)
+
+    StageStore.append_new = crashing_append
+    try:
+        with pytest.raises(RuntimeError):
+            incremental_ingest(spark, pages, store, alias)
+    finally:
+        StageStore.append_new = real_append
+    with caplog.at_level(logging.INFO, logger="docprocai_service_spark.sources.manifest"):
+        incremental_ingest(spark, pages, store, alias)
+    messages = [r.getMessage() for r in caplog.records]
+    assert f"triples: dropped uncommitted batch {batch}" in messages, messages
+    rows = store.batch_log()[-1]["rows"]
+    assert set(rows) == {"extracted", "triples", "mentions", "linked"}
+    assert f"batch {batch} committed: 100 pages, rows {rows}" in messages, messages
 
 
 def _direct_features(spark, store, pr_iters, lpa_iters):
